@@ -1,62 +1,16 @@
 package graft
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Measured on the 32-core bench box at sf0.1: local[8]/shuffle=8
-    // beats local[32] (63s vs 113s) — per-task scheduling and GC
-    // overhead dominate these sub-second stages. Env overrides allow
-    // any grid point.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     // The bench box shows ~18% CPU steal and 4-7x run-to-run swings
     // (NOTES.md); a single pass is unusable as a regression signal, so
     // run the suite REPS times and report per-query medians. Default
     // 5 (VERDICT r15 #6: re-establish a trustworthy raw floor — more
     // passes give the min a real chance to dodge steal bursts).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    // Join-planner policy, settled by measurement at 10× fixture
-    // scale (r17; plans/r17/shj_ab/README.md has the full A/B):
-    // the r16 estimate-driven SHJ default (preferSortMergeJoin=false)
-    // was 2.35× faster on tpcds_cte_chain_max but 3.4× SLOWER on
-    // corpus_tpcds_q14_1 — static selection from size ESTIMATES is
-    // wrong in both directions somewhere. The default is now Spark's
-    // conservative SMJ planning plus AQE's RUNTIME rewrite
-    // (maxShuffledHashJoinLocalMapThreshold, guide §3.1): a sort-merge
-    // join becomes shuffled-hash only when every post-shuffle
-    // partition is MEASURED under the bound, which avoids both
-    // blowups (10× A/B: best net of the three arms) and cannot OOM on
-    // a mis-estimated build side (ADVICE r16). At sf0.1 this is
-    // plan-neutral (every equi-join broadcasts). Both knobs stay
-    // env-overridable so any grid point can A/B the policy.
-    val preferSmj = sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true")
-    val shjLocalMap = sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.sources.GraftSparkExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        shjLocalMap)
-      .config("spark.ui.enabled", "false")
-      // The SQL status store retains per-execution plan/metric state
-      // for 1000 executions by default; a 275-query × 3-rep suite
-      // accumulates hundreds of MB of it, and GC of that dead weight
-      // landed on whichever query allocated hardest — corpus_tpch_q01
-      // read 13.2 s in-suite vs 0.9 s isolated (VERDICT r8 #3; fixed
-      // 13.2→0.9 s by capping retention, measured at local[32] sf0.1).
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Same session setup as Verify: the TopKPerKey rewrite is on for
-    // graft sessions (value-verified; sort-free q67/q70 plans).
-    graft.plans.TopK.register(spark)
-    spark.conf.set("spark.graft.topk.rewrite", "true")
+    val spark = GraftSession.local()
     // One-time table materialization (parquet writes per fixture,
     // idempotent) happens here, not inside the first timed query —
     // the bench measures query execution, not setup. This covers the
@@ -77,16 +31,6 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime.max(0L)).sum
     }
-    // Optional pacing: System.gc() every N queries releases the
-    // ContextCleaner's weakly-referenced broadcast/shuffle state in
-    // bounded doses instead of letting a major collection land inside
-    // whichever query allocates hardest. 0 disables.
-    val gcEvery = sys.env.get("SPARK_GRAFT_BENCH_GC")
-      .map(v => v.toIntOption.getOrElse(sys.error(
-        s"SPARK_GRAFT_BENCH_GC must be an integer (queries between " +
-          s"System.gc calls; 0 disables), got '$v'")))
-      .getOrElse(0)
-    var qIndex = 0
     val gcTimes = mutable.Map.empty[String, mutable.Buffer[Long]]
     val buildTimes = mutable.Map.empty[String, mutable.Buffer[Double]]
     // Calibration probe (VERDICT r13 #8): a CONSTANT CPU-bound query
@@ -100,9 +44,8 @@ object Bench {
       // 100M rows (~0.3 s uncontended): long enough that scheduler
       // jitter is a small fraction of the reading — the r14 20M probe
       // read 0.05-0.5 s, too noisy to normalize against.
-      spark.range(0, 100000000L, 1, 8)
-        .selectExpr("sum(id * 3 + (id & 7)) AS s")
-        .write.format("noop").mode("overwrite").save()
+      GraftSession.noop(spark.range(0, 100000000L, 1, 8)
+        .selectExpr("sum(id * 3 + (id & 7)) AS s"))
       (System.nanoTime() - t0) / 1e9
     }
     val calib = mutable.Buffer.empty[(Double, Double)]
@@ -117,31 +60,23 @@ object Bench {
         // as the reference harness (IcebergBenchmark.java:183): every
         // projected column is computed, nothing is pruned above a
         // count(1), final sorts run. The construction/action split is
-        // recorded per rep (additive; VERDICT r16 #9): maintenance
-        // entries run their table LIFECYCLE (DML commits, manifest
-        // IO) inside fn(), so build_sec ≈ commit/IO cost and the
-        // remainder is the final read's plan time — the attribution
-        // round 18 needs to decide whether storage-layer IO batching
-        // is worth touching.
-        try {
-          val df = fn(spark, sfDir)
-          buildTimes.getOrElseUpdate(name, mutable.Buffer.empty) +=
-            (System.nanoTime() - t0) / 1e9
-          df.write.format("noop").mode("overwrite").save()
-        }
-        catch { case e: Throwable =>
+        // recorded per rep (VERDICT r16 #9): maintenance entries run
+        // their table LIFECYCLE (DML commits, manifest IO) inside fn(),
+        // so build_sec ≈ commit/IO cost and the remainder is the final
+        // read's plan time. runEntry clears cached frames after each
+        // entry, so storage memory and the ContextCleaner backlog don't
+        // accumulate across the suite and distort later measurements.
+        val dt = try {
+          val (build, total) =
+            GraftSession.runEntry(spark, fn, sfDir)(GraftSession.noop)
+          buildTimes.getOrElseUpdate(name, mutable.Buffer.empty) += build
+          total
+        } catch { case e: Throwable =>
           failed += name
           System.err.println(s"[bench] $name FAILED (rep $rep): ${e.getMessage}")
+          (System.nanoTime() - t0) / 1e9
         }
-        val dt = (System.nanoTime() - t0) / 1e9
         gcTimes.getOrElseUpdate(name, mutable.Buffer.empty) += gcMs() - g0
-        // Hermetic between queries: drop cached frames (some queries
-        // cache multi-referenced CTE frames) so storage memory and the
-        // ContextCleaner backlog don't accumulate across 60+ queries
-        // and distort later measurements.
-        spark.catalog.clearCache()
-        qIndex += 1
-        if (gcEvery > 0 && qIndex % gcEvery == 0) System.gc()
         name -> dt
       }
       calib += ((cPre, calibrate()))
@@ -235,22 +170,18 @@ object Bench {
         gcTimes(name).map(_.toString).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // Isolated re-runs of the top-10 entries by median (VERDICT r15
-    // #6): each runs ALONE right after a cache clear + full GC, twice
+    // #6): each runs ALONE right after a full GC, twice
     // back-to-back → (warm, hot) wall seconds. A suite-slow entry
     // that reads fast here was paying suite context (GC debt, steal
     // burst, ContextCleaner backlog), not plan time — per-entry
     // regressions adjudicate from the artifact without re-measuring.
     val isolated = perQuery.sortBy(-_._2).take(10).map { case (name, _) =>
       val fn = named.find(_._1 == name).get._2
-      spark.catalog.clearCache()
       System.gc()
       def once(): Double = {
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
+        try GraftSession.runEntry(spark, fn, sfDir)(GraftSession.noop)._2
+        catch { case _: Throwable => (System.nanoTime() - t0) / 1e9 }
       }
       val warm = once()
       val hot = once()

@@ -8,12 +8,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * EXECUTION CONTRACT (ADVICE r16): some query functions `.cache()`
   * multi-referenced intermediate frames and rely on the HARNESS to
-  * call `spark.catalog.clearCache()` after each query's action —
-  * Bench, Verify, TimeFull and the specs all do. A harness that runs
-  * registry entries back-to-back without clearing accumulates
-  * cross-query cached state (storage pressure, and one query's cache
-  * can mask another's plan — the PlanAuditSpec hazard). Run entries
-  * as: `fn(spark, dir)` → one action → `spark.catalog.clearCache()`.
+  * call `spark.catalog.clearCache()` after each query's action. A
+  * harness that runs registry entries back-to-back without clearing
+  * accumulates cross-query cached state (storage pressure, and one
+  * query's cache can mask another's plan — the PlanAuditSpec hazard).
+  * Run entries through [[GraftSession.runEntry]], which does
+  * `fn(spark, dir)` → one action → `spark.catalog.clearCache()`;
+  * Bench, Verify and Explain all do.
   */
 final case class Q(
     name: String,

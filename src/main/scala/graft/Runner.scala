@@ -60,7 +60,7 @@ object Runner {
     * execution without collecting (`IcebergBenchmark.java:183`).
     */
   def executeNoop(spark: SparkSession, sql: String): Unit =
-    spark.sql(sql).write.format("noop").mode("overwrite").save()
+    GraftSession.noop(spark.sql(sql))
 
   /** Conf-derived result flags (`IcebergBenchmark.java:107-118`):
     * analytics-core enablement and HTTP/GRPC client type read from
@@ -278,28 +278,11 @@ object Runner {
       opts.getOrElse("output-gcs-path", "/tmp/graft-results"))
     val catalog = opts.getOrElse("catalog-name", "spark_catalog")
     val runId = opts.getOrElse("run-id", s"run_${System.currentTimeMillis()}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.sources.GraftSparkExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Join-planner policy: same as Bench (see Bench.scala). SMJ
-      // planning + AQE's runtime SMJ→SHJ rewrite — shuffled-hash only
-      // when every post-shuffle partition is MEASURED under the
-      // bound, which resolves the ADVICE r16 OOM concern (a
-      // mis-estimated build side can no longer pick SHJ). Fully
-      // conservative deployments set SPARK_GRAFT_SHJ_LOCALMAP=0
-      // (rewrite off); every engine session honors both knobs.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.sql.debug.maxToStringFields", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    // Reference parity: dynamic partition overwrite and untruncated
+    // plan strings, both runtime SQL confs.
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
     val listener = new MetricListener
     spark.sparkContext.addSparkListener(listener)
     // A non-default --catalog-name mounts the GraftCatalog plugin

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,62 +11,24 @@ object Verify {
     // Optional third arg (local dev only): restrict to queries whose
     // name contains the substring. The driver always passes 2 args.
     val nameFilter = args.lift(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.sources.GraftSparkExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Same join-planner default as Bench (guide §3.1/§9) so the
-      // correctness gate exercises the plans the bench times.
-      // Join-planner policy: same as Bench (see Bench.scala — SMJ
-      // planning + AQE runtime SHJ rewrite, settled by the r17 10× A/B).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.ui.enabled", "false")
-      // Cap SQL status-store retention: 277 one-shot executions of
-      // retained plan/metric state are dead weight this JVM GCs
-      // against for the rest of the run (see Bench.scala).
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Default-on for graft sessions: the TopKPerKey rewrite is
-    // value-verified equal on its corpus hits (q67/q70) and replaces
-    // their full window sort with answer-bounded heaps — so the
-    // correctness gate itself exercises the custom operator.
-    plans.TopK.register(spark)
-    spark.conf.set("spark.graft.topk.rewrite", "true")
+    // Same session as Bench, so the correctness gate exercises the
+    // plans (join policy, TopKPerKey rewrite) the bench times.
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => nameFilter.forall(name.contains) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try GraftSession.runEntry(spark, fn, sfDir) { df =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
+    val oracle = SparkEntry.oracleSql
       .filter { case (k, _) => nameFilter.forall(k.contains) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    new ObjectMapper().registerModule(DefaultScalaModule)
+      .writeValue(Paths.get(s"$outDir/oracle_sql.json").toFile, oracle)
     spark.stop()
   }
 }

@@ -132,7 +132,7 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions`-style injection
-  * (`SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * (a session builder's `withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`):
   * the native expressions, the TopKPerKey planner strategy, and the
   * conf-gated top-k rewrite rule (`spark.graft.topk.rewrite`).

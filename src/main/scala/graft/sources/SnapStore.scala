@@ -4324,7 +4324,12 @@ object SnapStore {
       val next = f(cur)
       val body = next.toSeq.sortBy(_._1)
         .map { case (n, v) => s"$n=$v" }.mkString("", "\n", "\n")
-      if (installExclusive(snapDir(table).resolve(f"refs.v${seq + 1}%05d"), body)) {
+      // The prune below can delete sequence seq+1 after a faster writer
+      // installed it, so an exclusive install can land in a recycled
+      // slot under newer sequences, where no reader looks (highest
+      // wins). Such a commit is void unless it is still the newest.
+      if (installExclusive(snapDir(table).resolve(f"refs.v${seq + 1}%05d"), body) &&
+        refsSeq(table).lastOption.forall(_._1 == seq + 1)) {
         // Opportunistic prune: keep a few trailing sequences so a
         // racing reader's just-listed file survives its read.
         refsSeq(table).dropRight(5)

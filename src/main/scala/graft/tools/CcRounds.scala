@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: round count + per-round wall time of the dedup
@@ -9,11 +8,7 @@ import org.apache.spark.sql.functions._
   */
 object CcRounds {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.GraftSession.local()
     val dir = args(0)
     val links = graft.ops.Dedup.minhashLsh(s, dir)
       .filter(col("jacc") >= 0.8).select(col("a_id"), col("b_id"))

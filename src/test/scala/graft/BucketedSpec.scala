@@ -17,7 +17,7 @@ class BucketedSpec extends SparkSpec {
 
   test("bucketed lineitem⋈orders joins with zero Exchange") {
     queries.Bucketed.register(spark, sf)
-    withNoBroadcast {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("tpch_b.lineitem")
         .join(spark.table("tpch_b.orders"),
           col("l_orderkey") === col("o_orderkey"))
@@ -47,12 +47,5 @@ class BucketedSpec extends SparkSpec {
       .orderBy(col("o_orderstatus"))
       .collect()
     assert(bucketed.toSeq === plain.toSeq)
-  }
-
-  private def withNoBroadcast[A](body: => A): A = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try body finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 }

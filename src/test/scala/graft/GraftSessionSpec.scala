@@ -1,0 +1,85 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.plans.{TopK, TopKPerKeyStrategy, TopKRewrite}
+import org.apache.spark.SparkConf
+
+/** The session factory and the entry-run contract every harness goes
+  * through (Bench, Verify, Runner, Explain and these suites). */
+class GraftSessionSpec extends SparkSpec {
+
+  private def cacheManager = spark
+    .asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  test("a preset conf survives the defaults merge") {
+    val preset = new SparkConf(false)
+      .set("spark.sql.join.preferSortMergeJoin", "false")
+    val merged = GraftSession.withDefaults(preset, 4)
+    assert(merged.get("spark.sql.join.preferSortMergeJoin") === "false")
+    assert(merged.get("spark.sql.shuffle.partitions") === "4")
+    assert(!preset.contains("spark.sql.shuffle.partitions"),
+      "the merge must not modify its input")
+  }
+
+  test("every default is present when nothing is preset") {
+    val merged = GraftSession.withDefaults(new SparkConf(false), 3)
+    val defaults = GraftSession.defaults(3)
+    assert(defaults.toMap.size === defaults.size, "duplicate default key")
+    defaults.foreach { case (k, v) => assert(merged.get(k) === v, k) }
+    assert(merged.get("spark.master") === "local[3]")
+  }
+
+  test("the shared test session carries the factory defaults") {
+    GraftSession.defaults(4)
+      .filterNot { case (k, _) => k == "spark.master" }
+      .foreach { case (k, v) => assert(spark.conf.get(k) === v, k) }
+  }
+
+  test("TopK.register twice leaves one strategy and one rule") {
+    TopK.register(spark)
+    TopK.register(spark)
+    assert(spark.experimental.extraStrategies
+      .count(_ == TopKPerKeyStrategy) === 1)
+    assert(spark.experimental.extraOptimizations
+      .count(_ == TopKRewrite) === 1)
+  }
+
+  test("runEntry clears the frames an entry caches") {
+    spark.catalog.clearCache()
+    var cachedDuringAction = false
+    val (build, total) = GraftSession.runEntry(spark,
+      SparkEntry.queries("graph_source_rank"), sf) { df =>
+      cachedDuringAction = !cacheManager.isEmpty
+      GraftSession.noop(df)
+    }
+    assert(cachedDuringAction, "graph_source_rank no longer caches a frame")
+    assert(cacheManager.isEmpty)
+    assert(build >= 0 && build <= total)
+  }
+
+  test("runEntry clears the cache when the action fails") {
+    intercept[IllegalStateException] {
+      GraftSession.runEntry(spark, (s, _) => s.range(10).toDF().cache(), sf) {
+        _ => throw new IllegalStateException("action failed")
+      }
+    }
+    assert(cacheManager.isEmpty)
+  }
+
+  test("no engine source outside GraftSession builds its own session") {
+    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    assert(Files.isDirectory(root), s"$root is not the engine source root")
+    val stream = Files.walk(root)
+    val offenders = try stream.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => p.getFileName.toString != "GraftSession.scala")
+      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .map(p => root.relativize(p).toString).toList
+    finally stream.close()
+    assert(offenders.isEmpty,
+      s"build sessions through GraftSession.local: ${offenders.mkString(", ")}")
+  }
+}

@@ -17,15 +17,6 @@ import graft.sources.{PartTransforms, SnapStore}
   */
 class HoursTransformSpec extends SparkSpec {
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def shuffles(df: DataFrame): Int = {
     df.collect()
     graft.plans.PlanShape.exchangeCount(df.queryExecution.executedPlan)
@@ -162,7 +153,7 @@ class HoursTransformSpec extends SparkSpec {
         |FROM graft.hoursddl.fa a JOIN graft.hoursddl.fb b ON a.ts = b.ts
         |GROUP BY a.ts ORDER BY a.ts""".stripMargin
     val expected = spark.sql(joinSql).collect().toSeq
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.catalog.clearCache()

@@ -953,9 +953,11 @@ class MaintenanceSpec extends SparkSpec {
   test("refs log CAS: concurrent taggers never lose an update") {
     val t = freshTable("refscas")
     SnapStore.create(spark, t, docs.limit(10), "part")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    // More racing commits than the refs-log prune keeps (5), so a
+    // writer's install can land in a slot a prune already recycled.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
     try {
-      val futures = (1 to 16).map { i =>
+      val futures = (1 to 64).map { i =>
         pool.submit(new Runnable {
           def run(): Unit = SnapStore.tag(t, s"tag$i", 1)
         })
@@ -963,7 +965,7 @@ class MaintenanceSpec extends SparkSpec {
       futures.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally pool.shutdown()
     val tags = SnapStore.tags(t)
-    assert((1 to 16).forall(i => tags.get(s"tag$i").contains(1)),
+    assert((1 to 64).forall(i => tags.get(s"tag$i").contains(1)),
       s"every concurrent tag must survive: $tags")
   }
 

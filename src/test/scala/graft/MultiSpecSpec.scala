@@ -26,16 +26,6 @@ class MultiSpecSpec extends SparkSpec {
     d
   }
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   // ----------------------------------------------------------------
   test("compound create stores PER-FIELD bounds and probeCandidates " +
     "prunes on the CONJUNCTION of both fields") {
@@ -134,7 +124,7 @@ class MultiSpecSpec extends SparkSpec {
     // tb holds the ids of parts 0–1 only: 60 of its 120 ids.
     val expected = spark.sql(joinSql).collect().toSeq
     assert(expected.size == 60)
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.catalog.clearCache()

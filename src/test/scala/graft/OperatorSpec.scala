@@ -125,9 +125,7 @@ class OperatorSpec extends SparkSpec {
     Tables.orders(spark, sf).write.mode("overwrite")
       .bucketBy(4, "o_orderkey").sortBy("o_orderkey")
       .saveAsTable("bkt.orders_b")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("bkt.lineitem_b")
         .join(spark.table("bkt.orders_b"), $"l_orderkey" === $"o_orderkey")
         .groupBy($"o_orderpriority").count()
@@ -141,7 +139,7 @@ class OperatorSpec extends SparkSpec {
         s"join inputs were shuffled despite bucketing: $plan")
       val totalRows = joined.agg(sum($"count")).as[Long].head()
       assert(totalRows === Tables.lineitem(spark, sf).count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
   }
 
   test("dynamic partition pruning fires on a date-partitioned fact") {

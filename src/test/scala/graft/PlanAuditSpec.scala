@@ -74,9 +74,7 @@ class PlanAuditSpec extends SparkSpec {
     }
 
   test("no cartesians; BNLJ and global windows only in adjudicated sets") {
-    plans.TopK.register(spark)
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
+    withConf("spark.graft.topk.rewrite" -> "true") {
       val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
         case (name, fn) =>
           // Hermetic like the bench (it clears caches between
@@ -105,6 +103,6 @@ class PlanAuditSpec extends SparkSpec {
           joinIssue.toSeq ++ windowIssue.toSeq
       }
       assert(offenders.isEmpty, offenders.mkString("\n"))
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+    }
   }
 }

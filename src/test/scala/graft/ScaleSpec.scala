@@ -13,17 +13,14 @@ import org.apache.spark.sql.functions._
 class ScaleSpec extends SparkSpec {
 
   test("AQE splits a skewed sort-merge join partition (skew=true)") {
-    val confs = Seq(
+    withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
       // Keep AQE from folding the small side's partitions first, which
       // would mask the skew-split under test.
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       // One pathological key (0) carrying half the rows — the shape a
       // stop-word join key or null-heavy foreign key produces at scale.
       val left = spark.range(0, 200000)
@@ -40,9 +37,6 @@ class ScaleSpec extends SparkSpec {
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not mark the skewed join (plan:\n$plan)")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -54,14 +48,11 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("runtime Bloom filter prunes the probe side of a selective join") {
-    val confs = Seq(
+    withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "1GB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       import org.apache.spark.sql.functions.sum
       // Selective build side: few orders survive the filter, so Spark
       // injects might_contain(...) on the lineitem scan — rows are
@@ -83,9 +74,6 @@ class ScaleSpec extends SparkSpec {
           col("l_orderkey") === col("o_orderkey"))
         .agg(sum(col("l_quantity"))).collect().head.getDouble(0)
       assert(got === want)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -39,16 +39,6 @@ class SpjSpec extends SparkSpec {
       SnapStore.append(spark, t, rows.filter(col("part") === p), "part"))
   }
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("co-partitioned snap tables join and aggregate with ZERO " +
     "shuffles under v2 bucketing; results match the shuffled plan") {
     val dir = Files.createTempDirectory("graft-spj")
@@ -72,7 +62,7 @@ class SpjSpec extends SparkSpec {
     val expected = spark.sql(joinSql).collect().toSeq
     assert(expected.map(_.getLong(1)).sum == 400L * 30L)
 
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       // Force a non-broadcast join so "no shuffle" is a real claim.
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
@@ -126,7 +116,7 @@ class SpjSpec extends SparkSpec {
     spark.conf.set("spark.graft.catalog.dir.spjbad", dir.toString)
     if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
       spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "true") {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true") {
       // The eligibility proof must refuse: at least one file spans
       // two partition values, so keyed planning would mis-group.
       val m = SnapStore.currentManifest(dir.resolve("tm"))
@@ -170,7 +160,7 @@ class SpjSpec extends SparkSpec {
         |FROM graft.spjbkt.ba a JOIN graft.spjbkt.bb b ON a.id = b.id""".stripMargin
     val expected = spark.sql(joinSql).collect().toSeq
     assert(expected.head.getLong(0) == 120L)
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.catalog.clearCache()
@@ -214,7 +204,7 @@ class SpjSpec extends SparkSpec {
         |FROM graft.spjdays.da a JOIN graft.spjdays.db b ON a.d = b.d
         |GROUP BY a.d ORDER BY a.d""".stripMargin
     val expected = spark.sql(joinSql).collect().toSeq
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.catalog.clearCache()
@@ -288,7 +278,7 @@ class SpjSpec extends SparkSpec {
         |FROM graft.spjmor.ta a JOIN graft.spjmor.tb b ON a.part = b.part
         |GROUP BY a.part ORDER BY a.part""".stripMargin
     val expected = spark.sql(joinSql).collect().toSeq
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       spark.catalog.clearCache()
@@ -317,7 +307,7 @@ class SpjSpec extends SparkSpec {
     // conf-off either, which would make the flip assertions vacuous).
     // The bucketing conf is set EXPLICITLY both ways: Spark 4 defaults
     // it to true, so "unset" is not "off".
-    withConfs("spark.sql.files.maxPartitionBytes" -> "65536",
+    withConf("spark.sql.files.maxPartitionBytes" -> "65536",
       "spark.sql.sources.v2.bucketing.enabled" -> "false") {
       // Conf OFF: resolve and run once (normal shuffled agg) —
       // deliberately NO clearCache before the flipped re-run.
@@ -326,7 +316,7 @@ class SpjSpec extends SparkSpec {
       assert(shuffles(off) == 1, "conf off: the agg shuffles:\n" +
         off.queryExecution.executedPlan)
     }
-    withConfs("spark.sql.files.maxPartitionBytes" -> "65536",
+    withConf("spark.sql.files.maxPartitionBytes" -> "65536",
       "spark.sql.sources.v2.bucketing.enabled" -> "true") {
       val on = spark.sql(aggSql)
       assert(on.collect().map(_.getLong(1)).sum == 200L)
@@ -335,7 +325,7 @@ class SpjSpec extends SparkSpec {
           on.queryExecution.executedPlan)
     }
     // And back off again, same relation, still no clearCache.
-    withConfs("spark.sql.files.maxPartitionBytes" -> "65536",
+    withConf("spark.sql.files.maxPartitionBytes" -> "65536",
       "spark.sql.sources.v2.bucketing.enabled" -> "false") {
       val off2 = spark.sql(aggSql)
       assert(off2.collect().map(_.getLong(1)).sum == 200L)
@@ -366,11 +356,11 @@ class SpjSpec extends SparkSpec {
         |WHERE d.name = 'p-2'
         |GROUP BY a.part ORDER BY a.part""".stripMargin
     var expected: Seq[org.apache.spark.sql.Row] = Seq.empty
-    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "false") {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "false") {
       expected = spark.sql(sql).collect().toSeq
     }
     assert(expected.size == 1)
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       // Between the dim's size and the facts': the dim broadcasts
@@ -425,7 +415,7 @@ class SpjSpec extends SparkSpec {
     // Baseline (conf off): normal shuffled plan is the oracle.
     val expected = spark.sql(joinSql).collect().toSeq
     assert(expected.size == 8, "outer-complete: all 8 parts present")
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
@@ -444,7 +434,7 @@ class SpjSpec extends SparkSpec {
     // Degrade path: grouping reported but pushPartValues OFF — Spark
     // cannot align mismatched value sets, falls back to shuffles,
     // rows stay correct.
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
@@ -467,11 +457,11 @@ class SpjSpec extends SparkSpec {
         |FROM graft.spjpart.ta a JOIN graft.spjpart.tb b ON a.part = b.part
         |GROUP BY a.part ORDER BY a.part""".stripMargin
     var expInner: Seq[org.apache.spark.sql.Row] = Seq.empty
-    withConfs("spark.sql.sources.v2.bucketing.enabled" -> "false") {
+    withConf("spark.sql.sources.v2.bucketing.enabled" -> "false") {
       expInner = spark.sql(innerSql).collect().toSeq
     }
     assert(expInner.size == 4, "inner overlap is parts {2..5}")
-    withConfs(
+    withConf(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled" -> "true",

@@ -256,39 +256,32 @@ class StreamingSpec extends SparkSpec {
     import SparkSpec.spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
     // The transformWithState operator requires the RocksDB state store.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long)]
-    val out = ms.toDS()
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.RunningTotalsProcessor(),
-        TimeMode.None(), OutputMode.Update())
-    val q = out.toDF().toDF("user_id", "events", "total")
-      .writeStream.format("memory").queryName("tws_mem")
-      .outputMode("update").start()
-    try {
-      ms.addData((1L, 10L), (1L, 5L), (2L, 7L))
-      q.processAllAvailable()
-      ms.addData((1L, 1L), (2L, 3L), (3L, 100L))
-      q.processAllAvailable()
-    } finally q.stop()
-    // Update mode emits one row per key per batch; the LAST row per
-    // key carries the running totals across batches.
-    val last = spark.table("tws_mem").collect()
-      .groupBy(_.getLong(0))
-      .map { case (k, rows) => k -> rows.map(r => (r.getLong(1), r.getLong(2))).max }
-    assert(last(1L) === ((3L, 16L)), s"got $last")
-    assert(last(2L) === ((2L, 10L)), s"got $last")
-    assert(last(3L) === ((1L, 100L)), s"got $last")
-    prevProvider match {
-      case Some(v) => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset(
-        "spark.sql.streaming.stateStore.providerClass")
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      val ms = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, Long)]
+      val out = ms.toDS()
+        .groupByKey(_._1)
+        .transformWithState(new graft.streaming.RunningTotalsProcessor(),
+          TimeMode.None(), OutputMode.Update())
+      val q = out.toDF().toDF("user_id", "events", "total")
+        .writeStream.format("memory").queryName("tws_mem")
+        .outputMode("update").start()
+      try {
+        ms.addData((1L, 10L), (1L, 5L), (2L, 7L))
+        q.processAllAvailable()
+        ms.addData((1L, 1L), (2L, 3L), (3L, 100L))
+        q.processAllAvailable()
+      } finally q.stop()
+      // Update mode emits one row per key per batch; the LAST row per
+      // key carries the running totals across batches.
+      val last = spark.table("tws_mem").collect()
+        .groupBy(_.getLong(0))
+        .map { case (k, rows) => k -> rows.map(r => (r.getLong(1), r.getLong(2))).max }
+      assert(last(1L) === ((3L, 16L)), s"got $last")
+      assert(last(2L) === ((2L, 10L)), s"got $last")
+      assert(last(3L) === ((1L, 100L)), s"got $last")
     }
   }
 

@@ -71,13 +71,10 @@ class TableStatsSpec extends SparkSpec {
     // is unknown (kept at 1), so the estimate stays ~rows×width —
     // above the threshold below. WITH stats, `doc_id = 37` estimates
     // 1/NDV of the rows → a few bytes → broadcast.
-    val confs = Seq(
+    withConf(
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "2048")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "2048") {
       def joinPlan(): String = spark.sql(
         """SELECT f.part, d.source
           |FROM graft.cbo.fact f
@@ -104,9 +101,6 @@ class TableStatsSpec extends SparkSpec {
         "JOIN graft.cbo.dim d ON f.doc_id = d.doc_id WHERE d.doc_id = 37")
         .collect()(0).getLong(0)
       assert(n == 1L)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -129,12 +129,13 @@ class TopKPerKeySpec extends SparkSpec {
     def windowed = events
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 2)
-    // Flag off (default): the normal window plan, no custom exec.
-    assert(!windowed.queryExecution.executedPlan.toString
-      .contains("TopKPerKey"))
-    val baseline = windowed.orderBy("user_id", "rnk").collect()
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
+    // Flag off: the normal window plan, no custom exec.
+    val baseline = withConf("spark.graft.topk.rewrite" -> "false") {
+      assert(!windowed.queryExecution.executedPlan.toString
+        .contains("TopKPerKey"))
+      windowed.orderBy("user_id", "rnk").collect()
+    }
+    withConf("spark.graft.topk.rewrite" -> "true") {
       val rewritten = windowed
       val plan = physical(rewritten)
       val execs = topkExecs(plan)
@@ -146,7 +147,7 @@ class TopKPerKeySpec extends SparkSpec {
       assert(!plan.toString.contains("Sort "), plan.toString)
       assert(rewritten.orderBy("user_id", "rnk").collect()
         .map(_.toString).toSeq === baseline.map(_.toString).toSeq)
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+    }
   }
 
   test("rewrite covers rank() with tie-keeping, sort-free") {
@@ -160,9 +161,10 @@ class TopKPerKeySpec extends SparkSpec {
         |    rank() OVER (PARTITION BY user_id ORDER BY bucket DESC) AS rnk
         |  FROM topk_rank_events) r
         |WHERE rnk <= 3""".stripMargin)
-    val baseline = ranked.orderBy("user_id", "rnk", "event_id").collect()
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
+    val baseline = withConf("spark.graft.topk.rewrite" -> "false") {
+      ranked.orderBy("user_id", "rnk", "event_id").collect()
+    }
+    withConf("spark.graft.topk.rewrite" -> "true") {
       val plan = physical(ranked)
       val execs = topkExecs(plan)
       assert(execs.map(_.partial).sorted === Seq(false, true), plan.toString)
@@ -170,6 +172,6 @@ class TopKPerKeySpec extends SparkSpec {
       assert(!plan.toString.contains("Sort "), plan.toString)
       assert(ranked.orderBy("user_id", "rnk", "event_id").collect()
         .map(_.toString).toSeq === baseline.map(_.toString).toSeq)
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+    }
   }
 }

@@ -18,15 +18,8 @@ class WapConfSpec extends SparkSpec {
 
   private val ConfKey = "spark.graft.wap.branch"
 
-  private def withWap(branch: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(ConfKey)
-    spark.conf.set(ConfKey, branch)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(ConfKey, v)
-      case None => spark.conf.unset(ConfKey)
-    }
-  }
+  private def withWap(branch: String)(body: => Unit): Unit =
+    withConf(ConfKey -> branch)(body)
 
   test("spark.graft.wap.branch stages INSERT/UPDATE/DELETE/MERGE on " +
     "the branch; plain reads serve main; VERSION AS OF sees the " +
@@ -164,17 +157,12 @@ class WapConfSpec extends SparkSpec {
   }
 
   private def runBareKeyCase(t: java.nio.file.Path): Unit = {
-    val old = spark.conf.getOption("spark.wap.branch")
-    spark.conf.set("spark.wap.branch", "audit2")
-    try {
+    withConf("spark.wap.branch" -> "audit2") {
       spark.sql("INSERT INTO graft.wapc.t VALUES (9999, 3, 'bare')")
       assert(SnapStore.currentVersion(t).contains(2),
         "bare-key staged INSERT must not commit to main")
       assert(SnapStore.branchHead(t, "audit2").contains(2),
         "bare spark.wap.branch must stage on its branch")
-    } finally old match {
-      case Some(v) => spark.conf.set("spark.wap.branch", v)
-      case None => spark.conf.unset("spark.wap.branch")
     }
   }
 
