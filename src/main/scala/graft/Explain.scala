@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool over registry entries, on the same [[GraftSession]] the
@@ -14,7 +16,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * }}}
   *
   *  - `plan` prints the formatted physical plan of every entry whose
-  *    name contains the substring.
+  *    name contains the substring. An entry that throws prints a
+  *    `FAILED <name>: <message>` line and the rest still run; the exit
+  *    status is then 1.
   *  - `dump` executes each named entry, then writes its FINAL adaptive
   *    plan (AQE join rewrites and coalesced reads in place) to
   *    `<outDir>/<name>_<suffix>.txt` — the before/after evidence
@@ -41,11 +45,22 @@ object Explain {
       sys.error(s"no registry entry named '$name'"))
     args(0) match {
       case "plan" =>
-        Registry.all.filter(_.name.contains(args(2))).foreach { q =>
+        val failed = Registry.all.filter(_.name.contains(args(2))).flatMap { q =>
           println(s"===== ${q.name}")
-          GraftSession.runEntry(spark, q.fn, dir) { df =>
-            println(df.queryExecution.explainString(FormattedMode))
+          try {
+            GraftSession.runEntry(spark, q.fn, dir) { df =>
+              println(df.queryExecution.explainString(FormattedMode))
+            }
+            None
+          } catch { case NonFatal(e) =>
+            println(s"FAILED ${q.name}: ${e.getMessage}")
+            Some(q.name)
           }
+        }
+        if (failed.nonEmpty) {
+          System.err.println(s"${failed.size} entries failed: ${failed.mkString(", ")}")
+          spark.stop()
+          sys.exit(1)
         }
       case "dump" =>
         val outDir = Paths.get(args(2))

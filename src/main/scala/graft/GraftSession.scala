@@ -12,12 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * value from `spark-submit --conf` or a `-Dspark.…` system property
   * wins through Spark's own precedence. That is how a run A/Bs a
   * session conf, e.g. `-Dspark.sql.join.preferSortMergeJoin=false`.
+  * The one exception is `spark.sql.extensions`: [[Extensions]]
+  * installs the whole engine, so it is appended to a preset list
+  * instead of yielding to it.
   */
 object GraftSession {
+  /** The extension class that installs the engine in a session. */
+  val Extensions = "graft.sources.GraftSparkExtensions"
+
   /** Session defaults for a `local[cpus]` engine. */
   def defaults(cpus: Int): Seq[(String, String)] = Seq(
     "spark.master" -> s"local[$cpus]",
-    "spark.sql.extensions" -> "graft.sources.GraftSparkExtensions",
     "spark.sql.shuffle.partitions" -> cpus.toString,
     // Join-planner policy, settled by a 10× fixture A/B
     // (plans/r17/shj_ab/README.md): estimate-driven shuffled-hash
@@ -43,11 +48,16 @@ object GraftSession {
     // per-key heaps, so the gates exercise the operator the bench times.
     "spark.graft.topk.rewrite" -> "true")
 
-  /** `conf` plus every default it does not already set (`conf` itself
-    * is left unchanged). */
+  /** `conf` plus every default it does not already set, and with
+    * [[Extensions]] added to its `spark.sql.extensions` list unless it
+    * is already there (`conf` itself is left unchanged). */
   def withDefaults(conf: SparkConf, cpus: Int): SparkConf = {
     val merged = conf.clone()
     defaults(cpus).foreach { case (k, v) => merged.setIfMissing(k, v) }
+    val exts = merged.get("spark.sql.extensions", "").split(",").map(_.trim)
+      .filter(_.nonEmpty)
+    if (!exts.contains(Extensions))
+      merged.set("spark.sql.extensions", (exts :+ Extensions).mkString(","))
     merged
   }
 
@@ -59,9 +69,9 @@ object GraftSession {
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
   }
 
-  /** The engine session: [[defaults]] under whatever the JVM's Spark
-    * conf already holds, log level WARN, and the TopKPerKey planner
-    * strategy and rewrite rule registered (idempotently). */
+  /** The engine session: [[withDefaults]] over whatever the JVM's Spark
+    * conf already holds, log level WARN, and the TopKPerKey rewrite rule
+    * added by [[plans.TopK.register]]. */
   def local(cpus: Int = envCpus): SparkSession = {
     val spark = SparkSession.builder()
       .config(withDefaults(new SparkConf(), cpus))

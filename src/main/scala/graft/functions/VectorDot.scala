@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -91,6 +89,10 @@ case class VectorDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The native expressions by SQL name.
+  * [[graft.sources.GraftSparkExtensions]] injects them into every
+  * session, so no caller registers them.
+  */
 object GraftFunctions {
   val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("vec_dot"),
@@ -120,27 +122,4 @@ object GraftFunctions {
     (FunctionIdentifier("lsh_sig4"),
       new ExpressionInfo(classOf[LshSig4].getName, "lsh_sig4"),
       (exprs: Seq[Expression]) => LshSig4(exprs.head)))
-
-  /** Imperative registration for an existing session (what the query
-    * library uses — idempotent).
-    */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (ident, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(ident.funcName, builder, "built-in")
-    }
-}
-
-/** `spark.sql.extensions`-style injection
-  * (a session builder's `withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`):
-  * the native expressions, the TopKPerKey planner strategy, and the
-  * conf-gated top-k rewrite rule (`spark.graft.topk.rewrite`).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-  }
 }

@@ -45,7 +45,6 @@ object Curation {
     * value is an exact BIGINT on both engines.
     */
   def kmeansStep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"),
         expr("transform(CAST(embedding AS array<double>), " +
@@ -142,7 +141,6 @@ object Curation {
     * negative components hash identically.
     */
   def kmeansConverge(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Scanned once per round plus the post-loop stats pass — cache
     // the quantized frame instead of re-reading + re-transforming the
     // parquet four times (guide §5: reuse beats recompute here; the

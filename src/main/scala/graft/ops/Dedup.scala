@@ -62,7 +62,6 @@ object Dedup {
     * is the candidate edge list a downstream union-find consumes.
     */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Per-row native signature (r17, guide §8/§2.4): the old
     // explode→fold_hash→groupBy(doc_id) round-trip shuffled one row
     // per WORD to reassemble per-document values; minhash_sig computes
@@ -153,7 +152,6 @@ object Dedup {
     * pairs at sf0.1 and would be quadratic at 100 TB.
     */
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Per-row native signature (r17, guide §8/§2.4): the old
     // explode→fold_hash→12-min+collect_set groupBy(doc_id) shuffled
     // one row per WORD to reassemble per-document signatures that
@@ -219,7 +217,6 @@ object Dedup {
     * real crawl the candidate column is what moves.)
     */
   def bandSweep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     // Same per-row native signature as [[minhashLsh]] (r17): no
     // word-level exchange; the cache still pays for itself here — the
@@ -383,7 +380,6 @@ object Dedup {
     * representative links.
     */
   def simhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Per-row native signature (r17, guide §8/§2.4): the old shape
     // exploded the word array and ran 64 ±1-vote sum aggregates
     // through a groupBy(doc_id) exchange; simhash_sig computes the
@@ -497,7 +493,6 @@ object Dedup {
     * engines bucket identically.
     */
   def embeddingCosine(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Hyperplane k (0..5), dim i (1..64): +1 iff (i * (3+2k) * 2654435761) % 97 < 48.
     def planeDot(k: Int): String =
       s"aggregate(transform(sequence(1, 64), i -> element_at(v, i) * " +
@@ -782,7 +777,6 @@ object Dedup {
     * (J >= 0.8), and the winning corpus doc (−1 = novel document).
     */
   def incremental(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
       .withColumn("incoming", pmod(col("doc_id") * 2654435761L, lit(10)) === 0)
     // Per-row native signature, same move as [[minhashLsh]] (r17):
@@ -911,7 +905,6 @@ object Dedup {
     */
   def incrementalStream(s: SparkSession, dir: String,
       incoming: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val P = 1000000007L
     def sigCol(ks: Range): String = ks
       .map(k => s"array_min(transform(hsArr, h -> (${2 * k + 1} * h + ${7919 * k}) % $P))")

@@ -498,7 +498,6 @@ object Maintenance {
     * every untouched row and applied every change exactly once.
     */
   def mergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocs(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -545,7 +544,6 @@ object Maintenance {
     * checksum.
     */
   def compaction(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsFrag(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -569,7 +567,6 @@ object Maintenance {
     * spec-pinned (it cannot be oracled — it throws).
     */
   def snapshotExpiry(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     ensureDocs(s, dir)
     s.sql("SELECT * FROM graft.maint.docs VERSION AS OF 2")
       .groupBy(col("source"))
@@ -618,7 +615,6 @@ object Maintenance {
     * including every row of the seven untouched partitions.
     */
   def deleteRows(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsDel(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -645,7 +641,6 @@ object Maintenance {
     * added rows.
     */
   def incrementalRead(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsEvo(s, dir)
     SnapStore.incrementalRead(s, t, fromVersion = 2, toVersion = 3)
       .groupBy(col("source"))
@@ -670,7 +665,6 @@ object Maintenance {
     * are spec-pinned; they have no SQL surface.
     */
   def clusterRewrite(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsSort(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -689,7 +683,6 @@ object Maintenance {
     * together lost and duplicated nothing.
     */
   def partitionEvolution(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsPevo(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -722,7 +715,6 @@ object Maintenance {
     * empty delete set at v3) are spec-pinned.
     */
   def morDelete(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsMor(s, dir)
     def agg(df: DataFrame, face: String) = df
       .groupBy(col(partCol))
@@ -759,7 +751,6 @@ object Maintenance {
     * face breaks the hash.
     */
   def rollbackTag(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     ensureDocsRb(s, dir)
     def agg(df: DataFrame, face: String) = df
       .groupBy(col("source"))
@@ -817,7 +808,6 @@ object Maintenance {
     * one delete file, sequence stamps) are spec-pinned.
     */
   def morMerge(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsMorm(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -856,7 +846,6 @@ object Maintenance {
     * match proves the ordinals named exactly the matched rows.
     */
   def positionDelete(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsPos(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -908,7 +897,6 @@ object Maintenance {
     * resurrected nothing.
     */
   def rewriteDeleteFilesQ(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsRdel(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -1008,7 +996,6 @@ object Maintenance {
     * full set from the fixture.
     */
   def zorderRewrite(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsZord(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -1087,7 +1074,6 @@ object Maintenance {
     * references) — the oracle recomputes that set from the fixture.
     */
   def branchRetention(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsBret(s, dir)
     SnapStore.readBranch(s, t, "keep")
       .groupBy(col("source"))
@@ -1120,7 +1106,6 @@ object Maintenance {
     * resurrected nothing.
     */
   def compactMor(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsCmor(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -1153,7 +1138,6 @@ object Maintenance {
     * are spec-pinned.
     */
   def branchFastForward(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsBr(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -1181,7 +1165,6 @@ object Maintenance {
     * carry/prune physical claims are spec-pinned.
     */
   def datePartition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsDate(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("day"))
@@ -1213,7 +1196,6 @@ object Maintenance {
     * exactly the real changes.
     */
   def changelog(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsCdc(s, dir)
     SnapStore.changelogRead(s, t, fromVersion = 1, toVersion = 4)
       .groupBy(col("_commit_version").as("version"),
@@ -1273,7 +1255,6 @@ object Maintenance {
     * flavors exactly — no deleted row served, no surviving row lost.
     */
   def morSqlRead(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsMorSql(s, dir)
     // The point of the entry: the snapshot still HAS pending deletes.
     require(SnapStore.currentManifest(t).deleteFiles.nonEmpty,
@@ -1341,7 +1322,6 @@ object Maintenance {
     * natively-typed appended files.
     */
   def renameWiden(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     ensureDocsRen(s, dir)
     s.sql(
       s"""SELECT source, COUNT(*) AS n_docs,
@@ -1391,7 +1371,6 @@ object Maintenance {
     * spec-pinned.
     */
   def sqlDelete(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsDml(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -1418,7 +1397,6 @@ object Maintenance {
     * catalog's V1Write append committed exactly the selected rows.
     */
   def sqlInsert(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsIns(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -1492,7 +1470,6 @@ object Maintenance {
     * like the engine API does.
     */
   def sqlMerge(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsMrg(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -1733,7 +1710,6 @@ object Maintenance {
     * audited rows and the rejected batch never leaked into main.
     */
   def wapPublish(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsWap(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -1838,7 +1814,6 @@ object Maintenance {
     * the publish landed exactly the audited rows.
     */
   def wapConfPublish(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsWapConf(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -1972,7 +1947,6 @@ object Maintenance {
     * the final state logically.
     */
   def wapMorPublish(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsWapMor(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -2020,7 +1994,6 @@ object Maintenance {
   }
 
   def hoursPartition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsHours(s, dir)
     SnapStore.read(s, t)
       .groupBy(expr("unix_micros(ts) div 3600000000").as("hr"))
@@ -2116,7 +2089,6 @@ object Maintenance {
     * the publish. See [[ensureDocsBrDdl]].
     */
   def branchDdl(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsBrDdl(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -2174,7 +2146,6 @@ object Maintenance {
   }
 
   def variantTable(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     ensureDocsVariant(s, dir)
     s.sql("SELECT part, payload FROM graft.maint.docs_variant " +
       "WHERE variant_get(payload, '$.flag', 'long') = 1")
@@ -2377,7 +2348,6 @@ object Maintenance {
     * structural claim (out-of-scope files carried, in-scope packed).
     */
   def compactFiltered(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsCompactFiltered(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -2481,7 +2451,6 @@ object Maintenance {
     * exactly the suppressed rows.
     */
   def changelogMor(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsChangelogMor(s, dir)
     SnapStore.changelogRead(s, t, 1, 2)
       .groupBy(col("_change_type"))
@@ -2646,7 +2615,6 @@ object Maintenance {
     * delete-adjusted contents — proving DPP and merge-on-read compose.
     */
   def dppPrune(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     ensureDocsPos(s, dir)
     s.range(0, nParts.toLong).select(col("id").as("part"),
         concat(lit("p-"), col("id")).as("name"))
@@ -2804,7 +2772,6 @@ object Maintenance {
     }
 
   def multiSpec(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (ta, _) = ensureDocsMulti(s, dir)
     val m = SnapStore.currentManifest(ta)
     // (a) Per-field bounds rode the manifest.
@@ -2906,7 +2873,6 @@ object Maintenance {
     * idempotent cached fixture cannot replay.
     */
   def streamNative(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = Files.createTempDirectory("graft-natstream-entry")
     val b = base(s, dir)
     def slice(k: Long) = b.filter(pmod(col("doc_id"), lit(5L)) === k)
@@ -2962,7 +2928,6 @@ object Maintenance {
     * recomputes the drained contents.
     */
   def streamAvailableNow(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = Files.createTempDirectory("graft-availnow-entry")
     val b = base(s, dir)
     def slice(k: Long) = b.filter(pmod(col("doc_id"), lit(5L)) === k)
@@ -3045,7 +3010,6 @@ object Maintenance {
     * them. The pre-first-commit error contract is spec-pinned.
     */
   def timeTravelTs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsTs(s, dir)
     val i1 = SnapStore.commitInstantMs(t, 1)
     val i2 = SnapStore.commitInstantMs(t, 2)
@@ -3124,7 +3088,6 @@ object Maintenance {
     * both the delete and update guards must delete).
     */
   def sqlMergeDelete(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsMrgd(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -3206,7 +3169,6 @@ object Maintenance {
     * no over-delete) while the data files stayed in place.
     */
   def sqlDeleteMor(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsMordml(s, dir)
     require(SnapStore.currentManifest(t).deleteFiles.exists(_.kind == "pos"),
       "the MOR lifecycle must leave pending position-delete files")
@@ -3265,7 +3227,6 @@ object Maintenance {
     * every base file untouched (MorDmlSpec pins the mtimes).
     */
   def sqlMergeMor(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     ensureDocsMordml(s, dir)
     s.sql(s"""SELECT source, COUNT(*) AS n_docs,
       CAST(SUM(fold_hash(text, 31, 0, $P)) AS BIGINT) AS chk
@@ -3462,7 +3423,6 @@ object Maintenance {
   }
 
   def registerTable(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     ensureDocsReg(s, dir)
     s.sql(s"""SELECT source, COUNT(*) AS n_docs,
       CAST(SUM(fold_hash(text, 31, 0, $P)) AS BIGINT) AS chk
@@ -3498,7 +3458,6 @@ object Maintenance {
   }
 
   def viewRead(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     ensureDocsView(s, dir)
     s.sql(s"""SELECT source, COUNT(*) AS n_docs,
       CAST(SUM(fold_hash(text, 31, 0, $P)) AS BIGINT) AS chk
@@ -3549,7 +3508,6 @@ object Maintenance {
     * the pending equality delete applying across both.
     */
   def addFilesRead(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsAdd(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -3637,7 +3595,6 @@ object Maintenance {
     * and the cherry-pick landed exactly the staged rows.
     */
   def wapIdPublish(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsWapId(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -3704,7 +3661,6 @@ object Maintenance {
     * semantics as one created through the API.
     */
   def createCtas(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsCtas(s, dir)
     SnapStore.read(s, t)
       .groupBy(col("source"))
@@ -3804,7 +3760,6 @@ object Maintenance {
     * frozen.
     */
   def snapshotClone(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (_, clone) = ensureDocsClone(s, dir)
     SnapStore.read(s, clone)
       .groupBy(col(partCol))
@@ -3857,7 +3812,6 @@ object Maintenance {
     * merge-on-read DML applies to the adopted files.
     */
   def migrateRead(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsMigrate(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -3908,7 +3862,6 @@ object Maintenance {
     * and never leaks onto post-evolution ones.
     */
   def addDefault(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsDefault(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))
@@ -3972,7 +3925,6 @@ object Maintenance {
     * nothing else) through the merged, superseded vectors.
     */
   def deleteVectors(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val t = ensureDocsDv(s, dir)
     SnapStore.read(s, t)
       .groupBy(col(partCol))

@@ -128,7 +128,6 @@ object Multimodal {
     * partition function needed.
     */
   def frameSample(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       // Empty docs have zero frames: without the guard, sequence(1, 0)
       // yields a DESCENDING [1, 0] and emits phantom frame rows the

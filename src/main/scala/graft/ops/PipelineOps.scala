@@ -40,7 +40,6 @@ object PipelineOps {
     * codegen'd word hash instead of re-hashing 6× the characters.
     */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val shingled = Tables.documents(s, dir)
       .withColumn("ws", split(col("text"), " "))
       // <6-word docs have no 6-gram; the explicit filter also dodges
@@ -149,7 +148,6 @@ object PipelineOps {
     * map-side partials; grouping NULLs surfaced as '(all)'.
     */
   def corpusStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("ws_tokens", expr("CAST(size(split(text, ' ')) AS BIGINT)"))
       .withColumn("fp", expr(TextAnalysis.foldHashExpr("text")))
@@ -266,7 +264,6 @@ object PipelineOps {
     * shuffle key (doc_id, bigram) has no hot key at corpus scale.
     */
   def repetition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Per-row native bigram stats (r17, same move as the dedup
     // signatures): the distinct-bigram count and top multiplicity
     // depend only on the row's own words, so the old
@@ -584,7 +581,6 @@ object PipelineOps {
     * the sketch's own error report.
     */
   def kmvDistinct(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val hashes = Tables.documents(s, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("word"))
       .groupBy(col("source"), col("word"))
@@ -651,7 +647,6 @@ object PipelineOps {
     * persist per partition/day, and each ingest merges one batch.
     */
   def incrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, dir)
       .withColumn("incoming", pmod(col("doc_id") * 2654435761L, lit(10)) === 0)
       .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)"))
@@ -781,7 +776,6 @@ object PipelineOps {
     * until the final stats.
     */
   def chunkWindows(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val chunks = Tables.documents(s, dir)
       .withColumn("ws", split(col("text"), " "))
       .filter(size(col("ws")) >= 1)
@@ -1032,7 +1026,6 @@ object PipelineOps {
     * all-pairs, nothing driver-side.
     */
   def leakageSplit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Per-row native signature (r17, same move as the dedup family):
     // minh = min word hash depends only on the row's own words, so the
     // old explode→groupBy(doc_id) exchange is computed per row instead
@@ -1138,7 +1131,6 @@ object PipelineOps {
     * (the same contract `pipe_incremental_agg` consumes downstream).
     */
   def snapshotDiff(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"),
         expr("CAST(size(split(text, ' ')) AS BIGINT)").as("tok"),
@@ -1277,7 +1269,6 @@ object PipelineOps {
     * agree byte for byte.
     */
   def piiScrub(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
     val phonePat = "\\b555-[0-9]{4}\\b"
     val planted = Tables.documents(s, dir)
@@ -1365,7 +1356,6 @@ object PipelineOps {
     * agg; top-k is TakeOrdered. No all-pairs, no driver collect.
     */
   def dsirTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val B = 512L
     // Words explode ONCE and hash through the codegen'd scalar
     // fold_hash (an array-lambda formulation re-evaluates the whole

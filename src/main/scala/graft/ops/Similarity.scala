@@ -31,7 +31,6 @@ object Similarity {
   private val normExpr = "sqrt(vec_dot(v, v))"
 
   private def vecs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -868,7 +867,6 @@ object Similarity {
     */
   def ivfTopKPersisted(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.SnapStore
-    graft.functions.GraftFunctions.register(s)
     val root = ensureIvfIndex(s, dir)
     val vecs = SnapStore.read(s, root.resolve("vecs"))
       .withColumn("norm", expr(normExpr))

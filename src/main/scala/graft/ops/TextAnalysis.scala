@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   /** Spark-side char-fold rolling hash of a string SQL expression —
-    * the native codegen'd [[graft.functions.FoldHash]] (callers
-    * register via `GraftFunctions.register`); fold order and modular
-    * arithmetic identical to the interpreted HOF form it replaced.
+    * the native codegen'd [[graft.functions.FoldHash]], which every
+    * session carries through [[graft.sources.GraftSparkExtensions]];
+    * fold order and modular arithmetic identical to the interpreted
+    * HOF form it replaced.
     */
   def foldHashExpr(s: String): String =
     s"fold_hash($s, 31, 0, 1000000007)"
@@ -157,7 +158,6 @@ object TextAnalysis {
     * distinct-fingerprint summary column via a window-free self-agg.
     */
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), expr(foldHashExpr("text")).as("fp"))
       .orderBy(col("doc_id"))

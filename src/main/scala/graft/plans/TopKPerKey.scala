@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.IntegerType
 
 /** Per-key top-k as a first-class operator — the extension ladder's
   * rung (c): custom `LogicalPlan` + `SparkStrategy` + `SparkPlan`
-  * (+ an opt-in `Rule[LogicalPlan]`), registered through
-  * `spark.experimental` / [[graft.functions.GraftExtensions]].
+  * (+ an opt-in `Rule[LogicalPlan]`). The strategy is injected by
+  * [[graft.sources.GraftSparkExtensions]]; the rule is added to
+  * `spark.experimental` by [[TopK.register]].
   *
   * Spark executes `row_number() OVER (PARTITION BY k ORDER BY o) <= n`
   * as a full sort of every key group (Exchange → Sort → Window →
@@ -366,7 +367,6 @@ object TopK {
       rankName: String = "rnk",
       mode: RankMode = RankMode.RowNum): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output
       .find(a => spark.sessionState.conf.resolver(a.name, n))
@@ -380,15 +380,14 @@ object TopK {
       TopKPerKeyNode(k, partCols.map(attr), order, rank, mode, analyzed))
   }
 
-  /** Idempotently add the strategy (and the opt-in rule) to a
-    * session's experimental methods.
+  /** Idempotently add the opt-in [[TopKRewrite]] rule to a session's
+    * `extraOptimizations`. Those run in the optimizer's last batch,
+    * after "Infer window group limit", so the rule sees (and unwraps)
+    * the `WindowGroupLimit` Spark inferred. The planner strategy comes
+    * from [[graft.sources.GraftSparkExtensions]].
     */
-  def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
+  def register(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ TopKRewrite
-  }
 }

@@ -157,15 +157,27 @@ object ResolveGraftViews {
   }
 }
 
-/** The graft session extensions: installs [[ResolveGraftViews]] and
-  * the [[GraftSqlParser]] DDL grammar (branch/tag DDL, WRITE ORDERED
-  * BY, SET IDENTIFIER FIELDS, CREATE/DROP/ALTER VIEW — the
-  * statements Iceberg's own session extensions add).
-  * `spark.sql.extensions=graft.sources.GraftSparkExtensions`.
+/** The graft session extensions, the one install path of the engine
+  * (`spark.sql.extensions=graft.sources.GraftSparkExtensions`, which
+  * [[graft.GraftSession.local]] always sets):
+  *  - the [[GraftSqlParser]] DDL grammar (branch/tag DDL, WRITE ORDERED
+  *    BY, SET IDENTIFIER FIELDS, CREATE/DROP/ALTER VIEW — the
+  *    statements Iceberg's own session extensions add);
+  *  - [[ResolveGraftViews]];
+  *  - the native expressions of [[graft.functions.GraftFunctions]];
+  *  - the [[graft.plans.TopKPerKeyStrategy]] planner strategy.
+  *
+  * The opt-in [[graft.plans.TopKRewrite]] rule is not injected here:
+  * an injected optimizer rule runs in operator optimization, before
+  * Spark infers the `WindowGroupLimit` the rule unwraps, so it is
+  * added to `spark.experimental.extraOptimizations` (the optimizer's
+  * last batch) by [[graft.plans.TopK.register]].
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(s => new ResolveGraftViews(s))
     ext.injectParser((s, delegate) => new GraftSqlParser(s, delegate))
+    graft.functions.GraftFunctions.all.foreach(ext.injectFunction)
+    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
   }
 }

@@ -156,7 +156,6 @@ object SnapshotStream {
     // Callers no longer need the requireUnevolved opt-in (still
     // exposed for foreachBatch users of OTHER feeds). [[nativeFeed]]
     // supersedes this feed entirely where renames should ride through.
-    graft.functions.GraftFunctions.register(spark)
     val b64 = java.util.Base64.getEncoder
     def enc(s: String) = b64.encodeToString(
       s.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** The native codegen'd fold_hash must agree bit-for-bit with the
@@ -15,7 +14,6 @@ class FoldHashSpec extends SparkSpec {
       s"CAST(0 AS BIGINT), (a, b) -> (a * $mult + b + $add) % $mod)"
 
   test("fold_hash equals the HOF fold on every fixture word, all parameterizations") {
-    GraftFunctions.register(spark)
     val words = Tables.documents(spark, sf)
       .select(explode(expr("array_distinct(split(text, ' '))")).as("w"))
     val params = Seq((31L, 0L, 1000000007L), (31L, 0L, 4294967291L),
@@ -31,7 +29,6 @@ class FoldHashSpec extends SparkSpec {
   }
 
   test("fold_hash null/empty behavior") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT fold_hash('', 31, 0, 1000000007) AS empty,
         |       fold_hash(CAST(NULL AS STRING), 31, 0, 1000000007) AS nul,
@@ -42,7 +39,6 @@ class FoldHashSpec extends SparkSpec {
   }
 
   test("fold_hash stays inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     val plan = Tables.documents(spark, sf)
       .select(expr("fold_hash(text, 31, 0, 1000000007)"))
       .queryExecution.executedPlan

@@ -3,7 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
+import graft.functions.GraftFunctions
 import graft.plans.{TopK, TopKPerKeyStrategy, TopKRewrite}
 import org.apache.spark.SparkConf
 
@@ -32,6 +34,20 @@ class GraftSessionSpec extends SparkSpec {
     assert(merged.get("spark.master") === "local[3]")
   }
 
+  test("the graft extension is appended to a preset extension list") {
+    val ext = GraftSession.Extensions
+    Seq(
+      None -> ext,
+      Some("other.Ext") -> s"other.Ext,$ext",
+      Some(s"$ext, other.Ext") -> s"$ext, other.Ext"
+    ).foreach { case (preset, expected) =>
+      val conf = new SparkConf(false)
+      preset.foreach(conf.set("spark.sql.extensions", _))
+      assert(GraftSession.withDefaults(conf, 4).get("spark.sql.extensions") ===
+        expected, preset)
+    }
+  }
+
   test("the shared test session carries the factory defaults") {
     GraftSession.defaults(4)
       .filterNot { case (k, _) => k == "spark.master" }
@@ -41,10 +57,20 @@ class GraftSessionSpec extends SparkSpec {
   test("TopK.register twice leaves one strategy and one rule") {
     TopK.register(spark)
     TopK.register(spark)
-    assert(spark.experimental.extraStrategies
+    assert(spark.sessionState.planner.strategies
       .count(_ == TopKPerKeyStrategy) === 1)
     assert(spark.experimental.extraOptimizations
       .count(_ == TopKRewrite) === 1)
+  }
+
+  test("every graft function resolves in SQL without registration") {
+    Seq(spark, spark.newSession()).foreach { s =>
+      GraftFunctions.all.foreach { case (ident, info, _) =>
+        val described = s.sql(s"DESCRIBE FUNCTION ${ident.funcName}")
+          .collect().map(_.getString(0)).mkString("\n")
+        assert(described.contains(info.getClassName), ident.funcName)
+      }
+    }
   }
 
   test("runEntry clears the frames an entry caches") {
@@ -69,17 +95,29 @@ class GraftSessionSpec extends SparkSpec {
     assert(cacheManager.isEmpty)
   }
 
-  test("no engine source outside GraftSession builds its own session") {
+  /** Engine sources (relative paths) whose text matches `pattern`. */
+  private def engineSourcesMatching(pattern: Regex): List[String] = {
     val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root), s"$root is not the engine source root")
     val stream = Files.walk(root)
-    val offenders = try stream.iterator().asScala
+    try stream.iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => p.getFileName.toString != "GraftSession.scala")
-      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .filter(p => pattern.findFirstIn(Files.readString(p)).isDefined)
       .map(p => root.relativize(p).toString).toList
     finally stream.close()
+  }
+
+  test("no engine source outside GraftSession builds its own session") {
+    val offenders = engineSourcesMatching("""SparkSession\.builder""".r)
+      .filterNot(_ == Paths.get("graft", "GraftSession.scala").toString)
     assert(offenders.isEmpty,
       s"build sessions through GraftSession.local: ${offenders.mkString(", ")}")
+  }
+
+  test("no engine source registers the graft functions itself") {
+    val offenders = engineSourcesMatching(
+      """GraftFunctions\s*\.\s*register|createOrReplaceTempFunction""".r)
+    assert(offenders.isEmpty,
+      s"GraftSparkExtensions injects the functions: ${offenders.mkString(", ")}")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.Cols.dsum
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** The per-row `lsh_sig4` hyperplane signature (r17) must agree
@@ -13,7 +12,6 @@ import org.apache.spark.sql.functions._
 class LshSigSpec extends SparkSpec {
 
   test("lsh_sig4 equals the posexplode/groupBy signature on the fixture") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // The pre-r17 exploded/aggregated form, verbatim.
@@ -34,7 +32,6 @@ class LshSigSpec extends SparkSpec {
   }
 
   test("lsh_sig4 edge cases: null array, empty array, null elements, zeros") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT lsh_sig4(CAST(NULL AS ARRAY<DOUBLE>)) AS n,
         |       lsh_sig4(CAST(array() AS ARRAY<DOUBLE>)) AS e,
@@ -51,7 +48,6 @@ class LshSigSpec extends SparkSpec {
   }
 
   test("lsh_sig4 matches the exploded form on null-bearing and mixed vectors") {
-    GraftFunctions.register(spark)
     import SparkSpec.spark.implicits._
     val vecs = Seq(
       (1L, Seq[java.lang.Double](1.5, -2.25, 3.125, null)),

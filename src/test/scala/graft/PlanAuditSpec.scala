@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -73,6 +75,25 @@ class PlanAuditSpec extends SparkSpec {
         w.child.collect { case a: BaseAggregateExec => a }.isEmpty => w
     }
 
+  private def issues(name: String, qe: QueryExecution): Seq[String] = {
+    val plan = qe.executedPlan.toString
+    val cart = plan.contains("CartesianProduct")
+    val bnlj = plan.contains("BroadcastNestedLoopJoin")
+    // sparkPlan (pre-AQE physical plan): node-level access to
+    // every WindowExec's partitionSpec and input subtree.
+    val rawWindows = unpartitionedRawWindows(qe.sparkPlan)
+    val joinIssue =
+      if (cart) Some(s"$name: CartesianProduct")
+      else if (bnlj && !intendedBnlj(name)) Some(s"$name: unexpected BNLJ")
+      else None
+    val windowIssue =
+      if (rawWindows.nonEmpty && !intendedGlobalWindow(name))
+        Some(s"$name: unpartitioned WindowExec over non-aggregated " +
+          s"input (${rawWindows.head.windowExpression.mkString(", ").take(120)})")
+      else None
+    joinIssue.toSeq ++ windowIssue.toSeq
+  }
+
   test("no cartesians; BNLJ and global windows only in adjudicated sets") {
     withConf("spark.graft.topk.rewrite" -> "true") {
       val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
@@ -84,25 +105,13 @@ class PlanAuditSpec extends SparkSpec {
           // window check looks for (r16: pagerank's cached
           // source-distinct frame masked curriculum_interleave's).
           spark.catalog.clearCache()
-          val qe = fn(spark, sf).queryExecution
-          val plan = qe.executedPlan.toString
-          val cart = plan.contains("CartesianProduct")
-          val bnlj = plan.contains("BroadcastNestedLoopJoin")
-          // sparkPlan (pre-AQE physical plan): node-level access to
-          // every WindowExec's partitionSpec and input subtree.
-          val rawWindows = unpartitionedRawWindows(qe.sparkPlan)
-          val joinIssue =
-            if (cart) Some(s"$name: CartesianProduct")
-            else if (bnlj && !intendedBnlj(name)) Some(s"$name: unexpected BNLJ")
-            else None
-          val windowIssue =
-            if (rawWindows.nonEmpty && !intendedGlobalWindow(name))
-              Some(s"$name: unpartitioned WindowExec over non-aggregated " +
-                s"input (${rawWindows.head.windowExpression.mkString(", ").take(120)})")
-            else None
-          joinIssue.toSeq ++ windowIssue.toSeq
+          // An entry that fails to build or plan is an offender too,
+          // and does not stop the audit of the entries after it.
+          try issues(name, fn(spark, sf).queryExecution)
+          catch { case NonFatal(e) => Seq(s"$name: $e") }
       }
-      assert(offenders.isEmpty, offenders.mkString("\n"))
+      if (offenders.nonEmpty)
+        fail(s"${offenders.size} offenders:\n${offenders.mkString("\n")}")
     }
   }
 }

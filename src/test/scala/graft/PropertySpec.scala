@@ -16,7 +16,6 @@ class PropertySpec extends SparkSpec {
   private val smallList = Gen.listOfN(30, Gen.chooseNum(-5, 5))
 
   test("fold_hash equals a reference Scala fold on arbitrary ASCII strings") {
-    graft.functions.GraftFunctions.register(spark)
     val asciiStr = Gen.listOfN(12, Gen.choose(32.toChar, 126.toChar)).map(_.mkString)
     check(Prop.forAll(Gen.listOfN(8, asciiStr)) { ss =>
       val expected = ss.map(_.foldLeft(0L)((a, c) => (a * 31 + c) % 1000000007L))

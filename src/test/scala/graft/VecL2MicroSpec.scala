@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** The native codegen'd vec_l2sq must agree exactly with the
@@ -16,7 +15,6 @@ class VecL2MicroSpec extends SparkSpec {
       "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
 
   test("vec_l2sq equals the HOF fold on micro-quantized embeddings") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf)
       .select(expr("transform(CAST(embedding AS array<double>), " +
         "x -> CAST(floor(x * 1000000) AS BIGINT))").as("a"))
@@ -30,7 +28,6 @@ class VecL2MicroSpec extends SparkSpec {
   }
 
   test("vec_l2sq null and simple-value behavior") {
-    GraftFunctions.register(spark)
     val rows = spark.sql(
       """SELECT vec_l2sq(array(1L, 5L), array(4L, 3L)) AS d1,
         |       vec_l2sq(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS d2""".stripMargin)
@@ -40,7 +37,6 @@ class VecL2MicroSpec extends SparkSpec {
   }
 
   test("vec_l2sq is NULL on length mismatch and null elements (HOF parity)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT vec_l2sq(array(1L, 2L, 3L), array(1L, 2L)) AS mismatch,
         |       vec_l2sq(array(1L, NULL), array(1L, 2L)) AS nullElem,
@@ -53,7 +49,6 @@ class VecL2MicroSpec extends SparkSpec {
   }
 
   test("vec_l2sq stays inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     val plan = Tables.embeddings(spark, sf)
       .select(expr("transform(CAST(embedding AS array<double>), " +
         "x -> CAST(floor(x * 1000000) AS BIGINT))").as("a"))

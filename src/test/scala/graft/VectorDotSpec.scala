@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** The native codegen'd vec_dot must agree bit-for-bit with the
@@ -14,7 +13,6 @@ class VectorDotSpec extends SparkSpec {
     "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
 
   test("vec_dot equals the HOF fold on real embeddings") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding".cast("array<double>").as("a"))
       .withColumn("b", reverse($"a"))
@@ -27,7 +25,6 @@ class VectorDotSpec extends SparkSpec {
   }
 
   test("vec_dot null and simple-value behavior") {
-    GraftFunctions.register(spark)
     val rows = spark.sql(
       """SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d1,
         |       vec_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS d2""".stripMargin)
@@ -37,7 +34,6 @@ class VectorDotSpec extends SparkSpec {
   }
 
   test("vec_dot is NULL on length mismatch and null elements (HOF parity)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT vec_dot(array(1.0d, 2.0d, 3.0d), array(1.0d, 2.0d)) AS mismatch,
         |       vec_dot(array(1.0d, NULL), array(1.0d, 2.0d)) AS nullElem""".stripMargin)
@@ -47,7 +43,6 @@ class VectorDotSpec extends SparkSpec {
   }
 
   test("vec_dot stays inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     val plan = Tables.embeddings(spark, sf)
       .select(expr("vec_dot(CAST(embedding AS ARRAY<DOUBLE>), CAST(embedding AS ARRAY<DOUBLE>))"))
       .queryExecution.executedPlan

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** The per-row native signature expressions (r17) must agree
@@ -14,7 +13,6 @@ class WordSigsSpec extends SparkSpec {
   private val P = 1000000007L
 
   test("minhash_sig equals the explode/groupBy signature on the fixture") {
-    GraftFunctions.register(spark)
     val words = Tables.documents(spark, sf)
       .select(col("doc_id"), explode(expr("array_distinct(split(text, ' '))")).as("w"))
       .withColumn("h", expr(s"fold_hash(w, 31, 0, $P)"))
@@ -34,7 +32,6 @@ class WordSigsSpec extends SparkSpec {
   }
 
   test("simhash_sig equals the 64-vote aggregate signature on the fixture") {
-    GraftFunctions.register(spark)
     val P1 = 4294967291L
     val P2 = 4294967279L
     val words = Tables.documents(spark, sf)
@@ -67,7 +64,6 @@ class WordSigsSpec extends SparkSpec {
   }
 
   test("bigram_stats equals the explode/double-groupBy counts on the fixture") {
-    GraftFunctions.register(spark)
     val base = Tables.documents(spark, sf)
       .withColumn("ws", split(col("text"), " "))
       .withColumn("n", expr("CAST(size(ws) AS BIGINT)"))
@@ -91,7 +87,6 @@ class WordSigsSpec extends SparkSpec {
   }
 
   test("minhash_sig edge cases: empty word, hash-collision dedup, null array") {
-    GraftFunctions.register(spark)
     // '' folds to 0; duplicate hash values collapse to one hs element
     // (collect_set semantics); a null word array yields a null sig.
     val row = spark.sql(
