@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
-
 import scala.collection.concurrent.TrieMap
 
 import graft.{Q, Runner}
@@ -66,9 +64,6 @@ object Corpus {
     * session catalog, mirroring the reference's `USE catalog.db`.
     */
   val catalog = "spark_catalog"
-
-  val corpusDir: String =
-    sys.env.getOrElse("GRAFT_TPCH_CORPUS_DIR", "/root/reference/queries/tpch")
 
   // ----------------------------------------------------------------
   // Deterministic synthesis domains (public TPC-H spec value lists).
@@ -234,7 +229,7 @@ object Corpus {
   private def gate(name: String, renames: Seq[String]): (SparkSession, String) => DataFrame =
     (s, dir) => {
       register(s, dir)
-      val raw = Files.readString(Paths.get(s"$corpusDir/$name.sql"))
+      val raw = CorpusFiles.tpch.read(name)
       val sql = Runner.template(raw, catalog, db).trim.stripSuffix(";")
       val df = s.sql(sql).toDF(renames: _*)
       df.select(df.schema.fields.toSeq.map { f =>

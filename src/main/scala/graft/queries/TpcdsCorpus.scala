@@ -39,9 +39,6 @@ object TpcdsCorpus {
   val db = "tpcds"
   val catalog = "spark_catalog"
 
-  val corpusDir: String =
-    sys.env.getOrElse("GRAFT_TPCDS_CORPUS_DIR", "/root/reference/queries/tpcds")
-
   private def lit(xs: Seq[String]): String = xs.map(x => s"'$x'").mkString(", ")
   private def pick(xs: Seq[String], idx: String): String =
     s"element_at(array(${lit(xs)}), CAST($idx AS INT) + 1)"
@@ -678,8 +675,7 @@ object TpcdsCorpus {
       post: DataFrame => DataFrame = identity): (SparkSession, String) => DataFrame =
     (s, dir) => {
       register(s, dir)
-      val raw = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$corpusDir/$name.sql"))
+      val raw = CorpusFiles.tpcds.read(name)
       val sql = graft.Runner.template(raw, catalog, db).trim.stripSuffix(";")
       val df = s.sql(sql).toDF(renames: _*)
       post(df.select(df.schema.fields.toSeq.map { f =>

@@ -692,11 +692,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val props = viewPropsOf(info)
     java.nio.file.Files.createDirectories(p.getParent)
     // Exclusive install (tmp + createLink) through the ONE shared
-    // implementation ([[SnapStore.installExclusiveBytes]]): two
+    // implementation ([[SnapCommit.installExclusiveBytes]]): two
     // concurrent createView calls can both pass the exists-check
     // above, and a truncating stream would let a concurrent loadView
     // observe a partial file.
-    if (!SnapStore.installExclusiveBytes(p, propsBytes(props)))
+    if (!SnapCommit.installExclusiveBytes(p, propsBytes(props)))
       throw new org.apache.spark.sql.catalyst.analysis
         .ViewAlreadyExistsException(ident)
     loadView(ident)

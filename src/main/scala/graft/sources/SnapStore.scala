@@ -53,7 +53,7 @@ import org.apache.spark.sql.types._
   *    exactly one of any number of racing writers wins it; a POSIX
   *    rename would silently replace the winner). Losing writers
   *    retry optimistically against the new current snapshot
-  *    ([[withCommitRetry]]), Iceberg's commit model. Named refs
+  *    ([[SnapCommit.commit]]), Iceberg's commit model. Named refs
   *    (tags and branch heads) use the same exclusive-install
   *    protocol on a versioned refs log, so two PROCESSES moving refs
   *    concurrently can never lose an update.
@@ -133,7 +133,7 @@ object SnapStore {
     * on disk: named manifest files, each holding one group of
     * entries, with `files` their order-preserving concatenation.
     * Populated by [[parseManifest]] only — builders leave it empty
-    * and [[tryCommitManifest]] recomputes the grouping against the
+    * and [[SnapCommit.commit]] recomputes the grouping against the
     * parent snapshot, carrying untouched groups BY REFERENCE.
     *
     * `instantMs` is the COMMIT INSTANT (epoch millis), stamped into
@@ -151,8 +151,8 @@ object SnapStore {
       instantMs: Long = 0L,
       nextRowId: Long = -1L)
 
-  private def snapDir(table: Path): Path = table.resolve("_snapshots")
-  private def manifestPath(table: Path, v: Int): Path =
+  private[sources] def snapDir(table: Path): Path = table.resolve("_snapshots")
+  private[sources] def manifestPath(table: Path, v: Int): Path =
     snapDir(table).resolve(f"v$v%05d.manifest")
 
   /** The on-disk manifest file of a live version — the
@@ -522,7 +522,7 @@ object SnapStore {
       .getOrElse(throw new IllegalStateException(s"manifest $p missing operation"))
   }
 
-  private def fileLine(f: FileEntry): String =
+  private[sources] def fileLine(f: FileEntry): String =
     s"file=${f.path}\t${enc(f.partMin)}\t${enc(f.partMax)}\t${f.rows}" +
       s"\t${f.bytes}\t${f.specCol}\t${f.seq}\t${enc(f.keyMin)}" +
       s"\t${enc(f.keyMax)}\t${f.firstRowId}\t${if (f.lineage) 1 else 0}"
@@ -530,7 +530,7 @@ object SnapStore {
   /** The inline (degenerate single-file) snapshot body; `refs`
     * switches the FILES section to manifest-list references.
     */
-  private def manifestBody(m: Manifest,
+  private[sources] def manifestBody(m: Manifest,
       refs: Option[Seq[(String, Seq[FileEntry])]] = None): String = {
     val body = new StringBuilder()
       .append(s"version=${m.version}\n")
@@ -560,208 +560,6 @@ object SnapStore {
     m.evos.foreach(e => body.append(
       s"evo=${e.seq}\t${e.kind}\t${enc(e.col)}\t${enc(e.arg)}\n"))
     body.toString
-  }
-
-  /** Exclusive-install a file with `body` at `target`: write a temp
-    * sibling, hard-link it into place. Atomic AND exclusive — link
-    * creation fails when the target exists, so exactly one of any
-    * number of racing writers (threads OR processes) wins a given
-    * path; a POSIX rename — what ATOMIC_MOVE compiles to — would
-    * silently REPLACE the winner (observed: duplicate version ids
-    * under a 12-writer race before this protocol).
-    */
-  private def installExclusive(target: Path, body: String): Boolean =
-    installExclusiveBytes(target,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Shared with the view catalog's definition writes — ONE copy of
-    * the concurrency-sensitive link dance (code review r14).
-    */
-  private[sources] def installExclusiveBytes(target: Path,
-      body: Array[Byte]): Boolean = {
-    val tmp = target.resolveSibling(
-      s".${target.getFileName}.tmp-${ProcessHandle.current().pid()}-" +
-        Thread.currentThread().getId)
-    Files.write(tmp, body)
-    try {
-      Files.createLink(target, tmp)
-      Files.deleteIfExists(tmp)
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException =>
-      Files.deleteIfExists(tmp)
-      false
-    }
-  }
-
-  /** Tables at or below this many files commit the degenerate
-    * single-file (inline) snapshot; above it, the manifest-list
-    * layer splits the file section into referenced group files so a
-    * commit's metadata writes are proportional to the TOUCHED groups,
-    * not the table (Iceberg's manifest-list design, VERDICT r7 #2).
-    */
-  private val InlineFileThreshold = 64
-
-  /** Manifest-merge bound: a split snapshot carries at most this many
-    * group references; beyond it, adjacent smallest groups coalesce
-    * (order-preserving) — Iceberg's manifest merging, keeping the
-    * per-snapshot reference list AND the append-amplification both
-    * O(bounded) over arbitrarily long commit chains.
-    */
-  private val MaxGroups = 64
-
-  /** Publish a new manifest atomically. Returns false when another
-    * writer already published this version — the loser of an
-    * optimistic-concurrency race (any group files the attempt wrote
-    * are deleted; nothing references them).
-    *
-    * Split commits diff `m.files` against the PARENT's grouping:
-    * untouched groups carry by reference (zero writes), groups that
-    * lost entries rewrite their survivors, and entries new to this
-    * snapshot (or mutated — a re-stamped seq, a respec'd bound)
-    * land in one fresh group. Order is preserved end-to-end:
-    * flatten(groups) == m.files.
-    */
-  /** Compute `m`'s split grouping against `prevGroups` (untouched
-    * groups carry by reference, partial survivors and new entries
-    * land in fresh group files, adjacent smallest coalesce past
-    * [[MaxGroups]]), WRITE the fresh group files, and return the
-    * reference list plus the written paths (for cleanup on a lost
-    * install race). Shared by main commits ([[tryCommitManifest]])
-    * and branch-chain commits — branch manifests live in the same
-    * `_snapshots` dir, so group references resolve identically.
-    */
-  private def writeGroupedRefs(table: Path, m: Manifest,
-      prevGroups: Seq[(String, Seq[FileEntry])],
-      regroupEntries: Option[Int])
-      : (Seq[(String, Seq[FileEntry])], Seq[Path]) = {
-    val newByPath = m.files.map(f => f.path -> f).toMap
-    val covered = scala.collection.mutable.Set.empty[String]
-    // (Some(name), entries) = carried by reference; (None, entries) =
-    // needs a fresh group file.
-    val kept: Seq[(Option[String], Seq[FileEntry])] =
-      prevGroups.flatMap { case (gname, entries) =>
-        val surviving = entries.filter(e =>
-          newByPath.get(e.path).contains(e))
-        surviving.foreach(e => covered += e.path)
-        if (surviving.isEmpty) None
-        else if (surviving.size == entries.size) Some(Some(gname) -> entries)
-        else Some(None -> surviving)
-      }
-    val fresh = m.files.filterNot(f => covered(f.path))
-    var groupsOut: Seq[(Option[String], Seq[FileEntry])] = regroupEntries match {
-      // Forced rebalance ([[rewriteManifests]]): ignore the inherited
-      // grouping and chunk the file list into even, fresh groups.
-      case Some(n) => m.files.grouped(math.max(1, n))
-        .map(es => (None: Option[String]) -> es).toSeq
-      case None => kept ++
-        (if (fresh.nonEmpty) Seq(None -> fresh) else Nil)
-    }
-    while (groupsOut.size > MaxGroups) {
-      val i = groupsOut.indices.dropRight(1).minBy(j =>
-        groupsOut(j)._2.size + groupsOut(j + 1)._2.size)
-      groupsOut = groupsOut.patch(i,
-        Seq(None -> (groupsOut(i)._2 ++ groupsOut(i + 1)._2)), 2)
-    }
-    val written = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val refs = groupsOut.map {
-      case (Some(n), es) => n -> es
-      case (None, es) =>
-        val n = s"mf-${UUID.randomUUID().toString.replace("-", "").take(16)}"
-        val p = snapDir(table).resolve(n)
-        Files.writeString(p,
-          es.map(fileLine).mkString("", "\n", "\n"))
-        written += p
-        n -> es
-    }
-    (refs, written.toSeq)
-  }
-
-  /** Iceberg v3 ROW LINEAGE assignment, applied to every MAIN-chain
-    * commit as it installs: data files without a first-row-id get one
-    * from the table's `next-row-id` counter (carried entries keep
-    * theirs — builders copy manifests by value, so an id assigned
-    * once rides every later snapshot), and the counter advances by
-    * the assigned row counts. A row's `_row_id` is then
-    * `first_row_id + _pos`, with no per-row storage — exactly the
-    * v3 inheritance scheme. Files whose rows carry MATERIALIZED
-    * lineage columns (rewrite outputs — the ids could not stay
-    * derivable across the rewrite) get a first-row-id TOO: their
-    * non-null stored ids win, and NULL stored ids (rows that never
-    * had one — fresh inserts in a lineage-carrying rewrite,
-    * pre-upgrade rows) inherit `first_row_id + _pos`, the v3 rule
-    * for null materialized values.
-    */
-  private def withRowLineage(table: Path, m: Manifest): Manifest = {
-    val assignedMax = m.files.filter(_.firstRowId >= 0L)
-      .map(f => f.firstRowId + f.rows).foldLeft(0L)(math.max)
-    val parentNext =
-      if (m.parent <= 0) 0L
-      else scala.util.Try(manifest(table, m.parent).nextRowId)
-        .getOrElse(-1L)
-    var next = Seq(assignedMax, parentNext, 0L).max
-    val files = m.files.map { f =>
-      if (f.firstRowId >= 0L) f
-      else { val fr = next; next += f.rows; f.copy(firstRowId = fr) }
-    }
-    m.copy(files = files, nextRowId = next)
-  }
-
-  private def tryCommitManifest(table: Path, m0: Manifest,
-      regroupEntries: Option[Int] = None): Boolean = {
-    val m = withRowLineage(table, m0)
-    Files.createDirectories(snapDir(table))
-    if (m.files.size <= InlineFileThreshold)
-      return installExclusive(manifestPath(table, m.version), manifestBody(m))
-    val prevGroups: Seq[(String, Seq[FileEntry])] =
-      if (regroupEntries.nonEmpty || m.parent <= 0) Seq.empty
-      else scala.util.Try(manifest(table, m.parent)).toOption
-        .map(_.groups).getOrElse(Seq.empty)
-    val (refs, written) = writeGroupedRefs(table, m, prevGroups,
-      regroupEntries)
-    val ok = installExclusive(manifestPath(table, m.version),
-      manifestBody(m, refs = Some(refs)))
-    if (!ok) written.foreach(Files.deleteIfExists(_))
-    ok
-  }
-
-  private def commitManifest(table: Path, m: Manifest): Unit =
-    if (!tryCommitManifest(table, m))
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot ${m.version} was committed concurrently for $table")
-
-  /** Run `body` (read current state → write data files → commit)
-    * with Iceberg-style optimistic-concurrency retries: `body` must
-    * re-read the CURRENT manifest each attempt, return its freshly
-    * written file entries with the manifest it tried to commit, and
-    * the commit result. On losing the version race the attempt's
-    * data files are deleted (they are referenced by nothing) and the
-    * whole attempt recomputes against the new current snapshot —
-    * correctness never depends on winning, only progress does.
-    */
-  private def withCommitRetry(table: Path, maxAttempts: Int = 50)(
-      body: () => (Manifest, Seq[FileEntry], Boolean)): Manifest = {
-    // The per-table property (Iceberg `commit.retry.num-retries`)
-    // overrides the default budget — one tiny metadata read per
-    // commit, read once up front.
-    val budget = commitRetriesOf(table, maxAttempts)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val (m, written, committed) = body()
-      if (committed) return m
-      written.foreach(f => Files.deleteIfExists(table.resolve(f.path)))
-      if (attempt >= budget)
-        throw new java.util.ConcurrentModificationException(
-          s"gave up after $budget conflicting commits on $table")
-      // Jittered backoff so a herd of losers doesn't re-collide in
-      // lockstep (the losing attempt's recompute is the expensive
-      // part; the sleep just de-synchronizes the next read-commit
-      // window). ThreadLocalRandom: this is operational jitter, not
-      // data — results are identical whatever it draws.
-      Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-        .nextLong(5L * attempt, 25L * attempt))
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   // ----------------------------------------------------------------
@@ -830,6 +628,28 @@ object SnapStore {
   private[sources] def fileName(uri: String): String =
     uri.substring(uri.lastIndexOf('/') + 1)
 
+  /** Move the parquet files a Spark write staged under `tmp` into
+    * `data/`, in name order, as `<label>-<i>-<uuid8>.parquet`, then
+    * delete `tmp`. Returns the new file names.
+    */
+  private def moveStaged(table: Path, tmp: Path, label: String): Seq[String] = {
+    val dataDir = table.resolve("data")
+    Files.createDirectories(dataDir)
+    val stream = Files.list(tmp)
+    val staged =
+      try stream.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .toSeq.sortBy(_.getFileName.toString)
+      finally stream.close()
+    val moved = staged.zipWithIndex.map { case (src, i) =>
+      val name = s"$label-$i-${UUID.randomUUID().toString.take(8)}.parquet"
+      Files.move(src, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      name
+    }
+    deleteTree(tmp)
+    moved
+  }
+
   /** Write `df`'s rows as new immutable data files under `data/` and
     * return their manifest entries (seq is stamped by the committing
     * operation). One write job (range-clustered on the partition
@@ -890,19 +710,7 @@ object SnapStore {
       // codec on every owned data write.
       .write.options(parquetWriteOptions(table))
       .mode("overwrite").parquet(tmp.toString)
-    val stream = Files.list(tmp)
-    val written =
-      try stream.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally stream.close()
-    val moved = written.zipWithIndex.map { case (src, i) =>
-      val name = s"$label-$i-${UUID.randomUUID().toString.take(8)}.parquet"
-      Files.move(src, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      name
-    }
-    deleteTree(tmp)
-    statsEntries(spark, dataDir, moved, partCol, keyCol)
+    statsEntries(spark, dataDir, moveStaged(table, tmp, label), partCol, keyCol)
   }
 
   /** Create the table: snapshot v1 from `df`. `clusterExprs`
@@ -921,10 +729,10 @@ object SnapStore {
     Files.deleteIfExists(snapDir(table).resolve("gc.disabled"))
     val files = writeDataFiles(spark, table, df, partCol, "base-v1", numFiles,
       clusterExprs, keyCol)
-    val m = Manifest(1, 0, "create", df.schema, files.map(_.copy(seq = 1)),
-      partCol, Seq.empty, keyCol)
-    commitManifest(table, m)
-    m
+    // A lost creation race deletes this writer's files before it fails.
+    SnapCommit.createFirst(table, Manifest(1, 0, "create", df.schema,
+      files.map(_.copy(seq = 1)), partCol, Seq.empty, keyCol),
+      written = files.map(_.path))
   }
 
   /** Create an EMPTY table — the `CREATE TABLE` face (Iceberg tables
@@ -947,10 +755,8 @@ object SnapStore {
     }
     require(keyCol.isEmpty || schema.fieldNames.contains(keyCol),
       s"key column '$keyCol' is not in the table schema")
-    val m = Manifest(1, 0, "create", schema, Seq.empty, partCol,
-      Seq.empty, keyCol)
-    commitManifest(table, m)
-    m
+    SnapCommit.createFirst(table, Manifest(1, 0, "create", schema, Seq.empty,
+      partCol, Seq.empty, keyCol))
   }
 
   /** Drop the table: delete its directory tree (manifests, refs,
@@ -1563,8 +1369,8 @@ object SnapStore {
     */
   def merge(spark: SparkSession, table: Path, changes: DataFrame,
       keyCol: String, partCol: String, numFiles: Int = 8,
-      operation: String = "merge"): Manifest = withCommitRetry(table) { () =>
-    val cur = currentManifest(table)
+      operation: String = "merge"): Manifest = SnapCommit.commit(table) { h =>
+    val cur = h.cur
     require(cur.partCol.isEmpty || cur.partCol == partCol,
       s"table is partitioned by '${cur.partCol}', not '$partCol' — " +
         "evolve the spec first (evolveSpec)")
@@ -1587,13 +1393,11 @@ object SnapStore {
       .join(changes.select(col(keyCol).as("__k")), col(keyCol) === col("__k"),
         "left_anti")
       .unionByName(changes.select(cur.schema.fieldNames.map(col): _*))
-    val v = cur.version + 1
-    val newFiles = writeDataFiles(spark, table, merged, partCol, s"merge-v$v",
-      numFiles, keyCol = cur.keyCol)
-    val m = Manifest(v, cur.version, operation, cur.schema,
-      untouched ++ newFiles.map(_.copy(seq = v)), partCol, cur.deleteFiles,
-      cur.keyCol, cur.evos)
-    (m, newFiles, tryCommitManifest(table, m))
+    val newFiles = writeDataFiles(spark, table, merged, partCol,
+      s"merge-v${h.v}", numFiles, keyCol = cur.keyCol)
+    (Manifest(h.v, cur.version, operation, cur.schema,
+      untouched ++ newFiles.map(_.copy(seq = h.seq)), partCol, cur.deleteFiles,
+      cur.keyCol, cur.evos), newFiles.map(_.path))
   }
 
   /** Copy-on-write row-level DELETE — the third row-level write face
@@ -1605,14 +1409,14 @@ object SnapStore {
     * partitions' bytes only.
     */
   def delete(spark: SparkSession, table: Path, deleteKeys: DataFrame,
-      keyCol: String, partCol: String, numFiles: Int = 8): Manifest = withCommitRetry(table) { () =>
-    val cur = currentManifest(table)
+      keyCol: String, partCol: String,
+      numFiles: Int = 8): Manifest = SnapCommit.commit(table) { h =>
+    val cur = h.cur
     require(cur.partCol.isEmpty || cur.partCol == partCol,
       s"table is partitioned by '${cur.partCol}', not '$partCol' — " +
         "evolve the spec first (evolveSpec)")
     val (touched, untouched) =
       pruneForChanges(spark, table, cur, deleteKeys, keyCol, partCol)
-    val v = cur.version + 1
     val newFiles =
       if (touched.isEmpty) Seq.empty[FileEntry]
       else {
@@ -1622,13 +1426,12 @@ object SnapStore {
         val kept = touchedDf.join(
           deleteKeys.select(col(keyCol).as("__k")),
           col(keyCol) === col("__k"), "left_anti")
-        writeDataFiles(spark, table, kept, partCol, s"delete-v$v", numFiles,
-          keyCol = cur.keyCol)
+        writeDataFiles(spark, table, kept, partCol, s"delete-v${h.v}",
+          numFiles, keyCol = cur.keyCol)
       }
-    val m = Manifest(v, cur.version, "delete", cur.schema,
-      untouched ++ newFiles.map(_.copy(seq = v)), partCol, cur.deleteFiles,
-      cur.keyCol, cur.evos)
-    (m, newFiles, tryCommitManifest(table, m))
+    (Manifest(h.v, cur.version, "delete", cur.schema,
+      untouched ++ newFiles.map(_.copy(seq = h.seq)), partCol, cur.deleteFiles,
+      cur.keyCol, cur.evos), newFiles.map(_.path))
   }
 
   /** Copy-on-write DELETE by arbitrary predicate — the engine face
@@ -1665,65 +1468,46 @@ object SnapStore {
         .select(col("__fn")).distinct()
         .collect().map(_.getString(0)).toSet
     }
-    def step(cur: Manifest, v: Int, seqV: Int,
-        hit: Set[String]): (Manifest, Seq[FileEntry]) = {
+    // The no-op probe runs against the WOULD-BE state (a staging
+    // branch's head when materialized, main otherwise) BEFORE
+    // ensureBranch, so a no-match staged delete leaves zero side
+    // effects on disk. A WAP-staged rewrite then commits on the
+    // branch chain (fork-relative sequence stamps), main untouched.
+    val head = branch.flatMap(b => branchHead(table, b)
+      .map(_ => branchHeadManifest(table, b)))
+      .getOrElse(currentManifest(table))
+    val headHit = probe(head)
+    if (headHit.isEmpty) return head
+    branch.foreach(ensureBranch(table, _))
+    SnapCommit.commit(table, branch) { h =>
+      val cur = h.cur
+      branch.foreach(b => require(cur.deleteFiles.isEmpty,
+        s"branch '$b' unexpectedly carries delete files"))
+      // The pre-check's hit set is valid for ANY manifest with the
+      // same file list (a fresh fork copies main's), so the common
+      // first attempt skips the second probe scan; only a genuinely
+      // rebased retry re-probes (code review r12).
+      val hit =
+        if (cur.files.map(_.path) == head.files.map(_.path)) headHit
+        else probe(cur)
       val (touched, untouched) =
         cur.files.partition(f => hit(fileName(f.path)))
-      val newFiles =
-        if (touched.isEmpty) Seq.empty[FileEntry]
-        else {
-          val partCol = if (cur.partCol.nonEmpty) cur.partCol
-            else cur.schema.fieldNames.head
-          // Delete-aware touched scan + carried delete set: see
-          // [[merge]] (COW over MOR, VERDICT r7 #6).
-          val kept = readManifest(spark, table, cur.copy(files = touched))
-            .filter(!coalesce(cond, lit(false)))
-          writeDataFiles(spark, table, kept, partCol, s"delete-v$v",
-            numFiles, keyCol = cur.keyCol)
-        }
-      (Manifest(v, cur.version, "delete", cur.schema,
-        untouched ++ newFiles.map(_.copy(seq = seqV)), cur.partCol,
-        cur.deleteFiles, cur.keyCol, cur.evos), newFiles)
-    }
-    branch match {
-      // WAP-staged DELETE: the copy-on-write rewrite commits on the
-      // branch chain (fork-relative sequence stamps), main untouched.
-      // The no-op probe runs against the WOULD-BE state (branch head
-      // when materialized, main otherwise) BEFORE ensureBranch, so a
-      // no-match staged delete leaves zero side effects on disk.
-      case Some(b) =>
-        val head = branchHead(table, b)
-          .map(_ => branchHeadManifest(table, b))
-          .getOrElse(currentManifest(table))
-        val headHit = probe(head)
-        if (headHit.isEmpty) return head
-        ensureBranch(table, b)
-        withBranchCommitRetry(table, b) { cur =>
-          require(cur.deleteFiles.isEmpty,
-            s"branch '$b' unexpectedly carries delete files")
-          val v = cur.version + 1
-          val forkV = branchManifest(table, b, 1).parent
-          // The pre-check's hit set is valid for ANY manifest with
-          // the same file list (a fresh fork copies main's), so the
-          // common first attempt skips the second probe scan; only a
-          // genuinely rebased retry re-probes (code review r12).
-          val hit =
-            if (cur.files.map(_.path) == head.files.map(_.path)) headHit
-            else probe(cur)
-          step(cur, v, forkV + v, hit)
-        }
-      case None => withCommitRetry(table) { () =>
-        val cur = currentManifest(table)
-        val hit = probe(cur)
-        // No file holds a match: report success with the CURRENT
-        // snapshot — no rewrite, no commit (Iceberg's no-match COW
-        // delete commits nothing).
-        if (hit.isEmpty) (cur, Seq.empty, true)
-        else {
-          val v = cur.version + 1
-          val (m, newFiles) = step(cur, v, v, hit)
-          (m, newFiles, tryCommitManifest(table, m))
-        }
+      // No file holds a match: report success with the CURRENT
+      // snapshot — no rewrite, no commit (Iceberg's no-match COW
+      // delete commits nothing).
+      if (touched.isEmpty) (cur, Nil)
+      else {
+        val partCol = if (cur.partCol.nonEmpty) cur.partCol
+          else cur.schema.fieldNames.head
+        // Delete-aware touched scan + carried delete set: see
+        // [[merge]] (COW over MOR, VERDICT r7 #6).
+        val kept = readManifest(spark, table, cur.copy(files = touched))
+          .filter(!coalesce(cond, lit(false)))
+        val newFiles = writeDataFiles(spark, table, kept, partCol,
+          s"delete-v${h.v}", numFiles, keyCol = cur.keyCol)
+        (Manifest(h.v, cur.version, "delete", cur.schema,
+          untouched ++ newFiles.map(_.copy(seq = h.seq)), cur.partCol,
+          cur.deleteFiles, cur.keyCol, cur.evos), newFiles.map(_.path))
       }
     }
   }
@@ -1750,19 +1534,7 @@ object SnapStore {
       s"-${UUID.randomUUID().toString.take(8)}")
     df.write.options(parquetWriteOptions(table))
       .mode("overwrite").parquet(tmp.toString)
-    val parts = {
-      val stream = Files.list(tmp)
-      try stream.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally stream.close()
-    }
-    val moved = parts.zipWithIndex.map { case (src, i) =>
-      val name = s"$prefix-$i-${UUID.randomUUID().toString.take(8)}.parquet"
-      Files.move(src, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      name
-    }
-    deleteTree(tmp)
+    val moved = moveStaged(table, tmp, prefix)
     val rowsByPart =
       if (moved.isEmpty) Map.empty[String, Long]
       else spark.read
@@ -1817,16 +1589,14 @@ object SnapStore {
     // snapshot the commit lands on.
     val parts = writeDeleteParts(spark, table,
       keys.select(keyCols.map(col): _*).distinct(), "edelete")
-    try withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    try SnapCommit.commit(table) { h =>
+      val cur = h.cur
       sameKeys(cur)
-      val v = cur.version + 1
       val ds = parts.map { case (name, rows, bytes) =>
-        DeleteFile(s"data/$name", eqKeyColStr(keyCols), rows, bytes, "eq", v) }
-      val m = Manifest(v, cur.version, "delete-mor",
+        DeleteFile(s"data/$name", eqKeyColStr(keyCols), rows, bytes, "eq", h.seq) }
+      (Manifest(h.v, cur.version, "delete-mor",
         cur.schema, cur.files, cur.partCol, cur.deleteFiles ++ ds, cur.keyCol,
-        cur.evos)
-      (m, Seq.empty, tryCommitManifest(table, m))
+        cur.evos), Nil)
     } catch { case NonFatal(e) =>
       // ANY abort after the delete parts were written (exhausted
       // commit retries, a failed in-loop require, …) must not leak
@@ -1886,16 +1656,14 @@ object SnapStore {
       keyCol = cur0.keyCol)
     val parts = writeDeleteParts(spark, table,
       changes.select(keyCols.map(col): _*).distinct(), "edelete")
-    try withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    try SnapCommit.commit(table) { h =>
+      val cur = h.cur
       sameKeys(cur)
-      val v = cur.version + 1
       val ds = parts.map { case (name, rows, bytes) =>
-        DeleteFile(s"data/$name", eqKeyColStr(keyCols), rows, bytes, "eq", v) }
-      val m = Manifest(v, cur.version, "merge-mor", cur.schema,
-        cur.files ++ newFiles.map(_.copy(seq = v)), cur.partCol,
-        cur.deleteFiles ++ ds, cur.keyCol, cur.evos)
-      (m, Seq.empty, tryCommitManifest(table, m))
+        DeleteFile(s"data/$name", eqKeyColStr(keyCols), rows, bytes, "eq", h.seq) }
+      (Manifest(h.v, cur.version, "merge-mor", cur.schema,
+        cur.files ++ newFiles.map(_.copy(seq = h.seq)), cur.partCol,
+        cur.deleteFiles ++ ds, cur.keyCol, cur.evos), Nil)
     } catch { case NonFatal(e) =>
       newFiles.foreach(f => Files.deleteIfExists(table.resolve(f.path)))
       parts.foreach { case (name, _, _) =>
@@ -1925,9 +1693,8 @@ object SnapStore {
     * bounded by delete-file and data-file counts, manifest scale).
     */
   def deletePositions(spark: SparkSession, table: Path,
-      cond: Column): Manifest = withCommitRetry(table) { () =>
-    val cur = currentManifest(table)
-    val v = cur.version + 1
+      cond: Column): Manifest = SnapCommit.commit(table) { h =>
+    val cur = h.cur
     val candidates = probeCandidates(spark, cur, cond)
     val hits = scanFiles(spark, table, cur, candidates, withMeta = true)
       .filter(cond)
@@ -1937,8 +1704,8 @@ object SnapStore {
     val tmp = table.resolve(s".pdelete-tmp-${ProcessHandle.current().pid()}" +
       s"-${UUID.randomUUID().toString.take(8)}")
     if (DeleteVectors.enabled(spark))
-      deletePositionsDv(spark, table, cur, v, hits, dataDir, tmp)
-    else deletePositionsParquet(spark, table, cur, v, hits, dataDir, tmp)
+      deletePositionsDv(spark, table, cur, h.v, hits, dataDir, tmp)
+    else deletePositionsParquet(spark, table, cur, h.v, hits, dataDir, tmp)
   }
 
   /** The parquet position-delete encoding (Iceberg v2): pair files
@@ -1946,22 +1713,10 @@ object SnapStore {
     */
   private def deletePositionsParquet(spark: SparkSession, table: Path,
       cur: Manifest, v: Int, hits: DataFrame, dataDir: Path,
-      tmp: Path): (Manifest, Seq[FileEntry], Boolean) = {
+      tmp: Path): (Manifest, Seq[String]) = {
     hits.write.options(parquetWriteOptions(table))
       .mode("overwrite").parquet(tmp.toString)
-    val parts = {
-      val stream = Files.list(tmp)
-      try stream.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally stream.close()
-    }
-    val moved = parts.zipWithIndex.map { case (src, i) =>
-      val name = s"pdelete-v$v-$i-${UUID.randomUUID().toString.take(8)}.parquet"
-      Files.move(src, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      name
-    }
-    deleteTree(tmp)
+    val moved = moveStaged(table, tmp, s"pdelete-v$v")
     // One stats job over ONLY the just-written delete parquets:
     // per-file pair counts + referenced data files (DeleteFile.refs).
     val stats =
@@ -1986,12 +1741,11 @@ object SnapStore {
     // A no-match delete commits a files-unchanged snapshot with NO
     // delete entries (an empty refs-less entry would force every
     // read onto the legacy fallback scan).
-    val m = Manifest(v, cur.version, "delete-pos", cur.schema, cur.files,
-      cur.partCol, cur.deleteFiles ++ ds, cur.keyCol, cur.evos)
-    // The delete files ride the retry's cleanup list (only `path` is
-    // used) so a lost race never leaks them.
-    (m, ds.map(d => FileEntry(d.path, "", "", 0, 0)),
-      tryCommitManifest(table, m))
+    // The delete files ride the commit's cleanup list so a lost race
+    // never leaks them.
+    (Manifest(v, cur.version, "delete-pos", cur.schema, cur.files,
+      cur.partCol, cur.deleteFiles ++ ds, cur.keyCol, cur.evos),
+      ds.map(_.path))
   }
 
   /** The deletion-vector encoding (Iceberg v3,
@@ -2059,16 +1813,14 @@ object SnapStore {
 
   private def deletePositionsDv(spark: SparkSession, table: Path,
       cur: Manifest, v: Int, hits: DataFrame, dataDir: Path,
-      tmp: Path): (Manifest, Seq[FileEntry], Boolean) = {
+      tmp: Path): (Manifest, Seq[String]) = {
     val (ds, superseded) = writeDvBlobs(spark, table, cur, v, hits, dataDir)
     // A no-match delete commits a files-unchanged snapshot with NO
     // delete entries, exactly like the parquet encoding.
-    val m = Manifest(v, cur.version, "delete-pos", cur.schema, cur.files,
+    (Manifest(v, cur.version, "delete-pos", cur.schema, cur.files,
       cur.partCol,
       cur.deleteFiles.filterNot(d => superseded(d.path)) ++ ds,
-      cur.keyCol, cur.evos)
-    (m, ds.map(d => FileEntry(d.path, "", "", 0, 0)),
-      tryCommitManifest(table, m))
+      cur.keyCol, cur.evos), ds.map(_.path))
   }
 
   /** Delete-file compaction — Iceberg's
@@ -2104,15 +1856,15 @@ object SnapStore {
         m.deleteFiles.filter(_.kind == "eq").groupBy(_.seq)
           .exists(_._2.length > 1)
     if (!mergeable(currentManifest(table))) return currentManifest(table)
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       // Re-checked INSIDE the retry: losing the version race to a
       // concurrent applyDeletes/compaction can leave nothing to merge
       // — report success with the CURRENT snapshot instead of
       // committing a spurious no-op 'rewrite-deletes' version.
-      if (!mergeable(cur)) (cur, Seq.empty, true)
+      if (!mergeable(cur)) (cur, Nil)
       else {
-        val v = cur.version + 1
+        val v = h.v
       val dataDir = table.resolve("data")
       val untouched = scala.collection.mutable.ArrayBuffer.empty[DeleteFile]
       val merged = scala.collection.mutable.ArrayBuffer.empty[DeleteFile]
@@ -2165,13 +1917,11 @@ object SnapStore {
             }
           } else untouched ++= ds
         }
-      val m = Manifest(v, cur.version, "rewrite-deletes", cur.schema,
+      // The merged parquets ride the commit's cleanup list so a lost
+      // race never leaks them.
+      (Manifest(v, cur.version, "rewrite-deletes", cur.schema,
         cur.files, cur.partCol, (untouched ++ merged).toSeq, cur.keyCol,
-        cur.evos)
-      // The merged parquets ride the retry's cleanup list (only
-      // `path` is used) so a lost race never leaks them.
-      (m, merged.toSeq.map(d => FileEntry(d.path, "", "", 0, 0)),
-        tryCommitManifest(table, m))
+        cur.evos), merged.toSeq.map(_.path))
       }
     }
   }
@@ -2185,27 +1935,25 @@ object SnapStore {
     * snapshots.
     */
   def applyDeletes(spark: SparkSession, table: Path, partCol: String,
-      numFiles: Int = 8): Manifest = withCommitRetry(table) { () =>
-    val cur = currentManifest(table)
+      numFiles: Int = 8): Manifest = SnapCommit.commit(table) { h =>
+    val cur = h.cur
     require(cur.deleteFiles.nonEmpty, "no pending delete files")
     // ROW-LINEAGE carry (r13, same contract as compact): the fold
     // rewrites every surviving row, so derived ids would change —
     // materialize each row's id/sequence into the folded files (from
     // the source file's derivation or its own materialized columns).
     val (df, lineageable) = lineageScan(spark, table, cur, cur.files)
-    val v = cur.version + 1
     val newFiles0 = writeDataFiles(spark, table, df, partCol,
-      s"applydel-v$v", numFiles, keyCol = cur.keyCol)
+      s"applydel-v${h.v}", numFiles, keyCol = cur.keyCol)
     val newFiles =
       if (lineageable) newFiles0.map(_.copy(lineage = true))
       else newFiles0
     // Full rewrite: every new file postdates every evolution, so the
     // evolution log retires here (its applicable set is empty forever).
-    val m = Manifest(v, cur.version, "apply-deletes", cur.schema,
-      newFiles.map(_.copy(seq = v)),
+    (Manifest(h.v, cur.version, "apply-deletes", cur.schema,
+      newFiles.map(_.copy(seq = h.seq)),
       if (cur.partCol.nonEmpty) cur.partCol else partCol, Seq.empty,
-      cur.keyCol)
-    (m, newFiles, tryCommitManifest(table, m))
+      cur.keyCol), newFiles.map(_.path))
   }
 
   /** A delete-aware scan of `fs` that — when any source file carries
@@ -2524,14 +2272,12 @@ object SnapStore {
       df.select(cur0.schema.fieldNames.map(col): _*), partCol,
       s"append-${UUID.randomUUID().toString.take(8)}", numFiles,
       keyCol = cur0.keyCol)
-    try withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
-      val v = cur.version + 1
-      val m = Manifest(v, cur.version, "append", cur.schema,
-        cur.files ++ newFiles.map(_.copy(seq = v)),
+    try SnapCommit.commit(table) { h =>
+      val cur = h.cur
+      (Manifest(h.v, cur.version, "append", cur.schema,
+        cur.files ++ newFiles.map(_.copy(seq = h.seq)),
         if (cur.partCol.nonEmpty) cur.partCol else partCol,
-        cur.deleteFiles, cur.keyCol, cur.evos)
-      (m, Seq.empty, tryCommitManifest(table, m))
+        cur.deleteFiles, cur.keyCol, cur.evos), Nil)
     } catch { case NonFatal(e) =>
       // ANY abort after the data files were written (exhausted retry
       // budget, a failed require, …) must not leak them as orphans.
@@ -2572,8 +2318,8 @@ object SnapStore {
     val adopted = listParquet(sourceDir, "add_files source")
     val src = spark.read.parquet(adopted.map(_.toString): _*)
     val entries = adoptionEntries(src, adopted, cur0.partCol, cur0.keyCol)
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       require(cur.partCol == cur0.partCol,
         "partition spec evolved mid-adopt — retry add_files")
       val names = (cur.files.map(f => fileName(f.path)) ++
@@ -2581,13 +2327,11 @@ object SnapStore {
       require(names.distinct.size == names.size,
         "adopted file names collide with existing table files — " +
           "rename the source files (delete routing keys on file NAME)")
-      val v = cur.version + 1
-      val m = Manifest(v, cur.version, "add-files", cur.schema,
-        cur.files ++ entries.map(_.copy(seq = v)), cur.partCol,
-        cur.deleteFiles, cur.keyCol, cur.evos)
       // Nothing to clean on a lost race: the adopted files pre-exist
       // and are shared across attempts.
-      (m, Seq.empty, tryCommitManifest(table, m))
+      (Manifest(h.v, cur.version, "add-files", cur.schema,
+        cur.files ++ entries.map(_.copy(seq = h.seq)), cur.partCol,
+        cur.deleteFiles, cur.keyCol, cur.evos), Nil)
     }
   }
 
@@ -2802,8 +2546,7 @@ object SnapStore {
     Files.write(snapDir(target).resolve("gc.disabled"),
       "source table owns the referenced files\n".getBytes(
         java.nio.charset.StandardCharsets.UTF_8))
-    commitManifest(target, m)
-    m
+    SnapCommit.createFirst(target, m)
   }
 
   /** IN-PLACE migration of a plain parquet directory into a snapshot
@@ -2833,10 +2576,8 @@ object SnapStore {
       .map(e => e.copy(path = fileName(e.path), seq = 1))
     // Like create/createEmpty: never inherit a crashed clone's marker.
     Files.deleteIfExists(snapDir(table).resolve("gc.disabled"))
-    val m = Manifest(1, 0, "migrate", src.schema, entries, partCol,
-      Seq.empty, keyCol)
-    commitManifest(table, m)
-    m
+    SnapCommit.createFirst(table, Manifest(1, 0, "migrate", src.schema,
+      entries, partCol, Seq.empty, keyCol))
   }
 
   /** Full-table OVERWRITE — the commit behind SQL `INSERT OVERWRITE`:
@@ -2854,29 +2595,17 @@ object SnapStore {
       df.select(cur0.schema.fieldNames.map(col): _*), partCol,
       s"overwrite-${UUID.randomUUID().toString.take(8)}", numFiles,
       keyCol = cur0.keyCol)
-    try branch match {
-      // WAP-staged overwrite: the branch head's contents replace
-      // wholesale, main untouched until publish. Like the main path,
-      // the evolution log drops — every surviving file is new-schema.
-      case Some(b) => withBranchCommitRetry(table, b) { cur =>
-        require(cur.deleteFiles.isEmpty,
-          s"branch '$b' unexpectedly carries delete files")
-        val v = cur.version + 1
-        val forkV = branchManifest(table, b, 1).parent
-        (Manifest(v, cur.version, "overwrite", cur.schema,
-          newFiles.map(_.copy(seq = forkV + v)),
-          if (cur.partCol.nonEmpty) cur.partCol else partCol, Seq.empty,
-          cur.keyCol), Seq.empty[FileEntry])
-      }
-      case None => withCommitRetry(table) { () =>
-        val cur = currentManifest(table)
-        val v = cur.version + 1
-        val m = Manifest(v, cur.version, "overwrite", cur.schema,
-          newFiles.map(_.copy(seq = v)),
-          if (cur.partCol.nonEmpty) cur.partCol else partCol, Seq.empty,
-          cur.keyCol)
-        (m, Seq.empty, tryCommitManifest(table, m))
-      }
+    // A WAP-staged overwrite replaces the branch head's contents
+    // wholesale, main untouched until publish. The evolution log
+    // drops — every surviving file is new-schema.
+    try SnapCommit.commit(table, branch) { h =>
+      val cur = h.cur
+      branch.foreach(b => require(cur.deleteFiles.isEmpty,
+        s"branch '$b' unexpectedly carries delete files"))
+      (Manifest(h.v, cur.version, "overwrite", cur.schema,
+        newFiles.map(_.copy(seq = h.seq)),
+        if (cur.partCol.nonEmpty) cur.partCol else partCol, Seq.empty,
+        cur.keyCol), Nil)
     } catch { case NonFatal(e) =>
       newFiles.foreach(f => Files.deleteIfExists(table.resolve(f.path)))
       throw e
@@ -2902,20 +2631,8 @@ object SnapStore {
       .getOrElse(currentManifest(table))
     require(cur0.partCol.nonEmpty, "table has no partition spec")
     val dataDir = table.resolve("data")
-    Files.createDirectories(dataDir)
-    val stream = Files.list(staging)
     // An UPDATE/MERGE can legally produce an empty replacement.
-    val staged =
-      try stream.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally stream.close()
-    val moved = staged.zipWithIndex.map { case (src, i) =>
-      val name = s"$operation-$i-${UUID.randomUUID().toString.take(8)}.parquet"
-      Files.move(src, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      name
-    }
-    deleteTree(staging)
+    val moved = moveStaged(table, staging, operation)
     // From here EVERY abort must clean up the already-moved files —
     // including a stats-pass failure — or they leak as unreferenced
     // orphans under data/ (the same invariant the append path keeps).
@@ -2927,42 +2644,19 @@ object SnapStore {
       // everything from first_row_id.
       val newFiles = statsEntries(spark, dataDir, moved, cur0.partCol,
         cur0.keyCol).map(f => f.copy(lineage = materializedLineage))
-      branch match {
-        case Some(b) =>
-          // WAP-staged row-level operation: the replace commits on
-          // the BRANCH chain — main untouched. Branch chains carry no
-          // delete files (createBranch folds first), and the scan
-          // read the branch head, so its delete view must be empty.
-          require(scanDeletes.isEmpty,
-            "a branch-staged operation cannot scan under delete files")
-          withBranchCommitRetry(table, b) { cur =>
-            require(cur.deleteFiles.isEmpty,
-              s"branch '$b' unexpectedly carries delete files")
-            val v = cur.version + 1
-            val carried = replaced match {
-              case Some(rs) =>
-                val rset = rs.toSet
-                require(rs.forall(pth => cur.files.exists(_.path == pth)),
-                  s"concurrent branch commit rewrote files this $operation " +
-                    "read — aborting")
-                cur.files.filterNot(f => rset(f.path))
-              case None => Seq.empty
-            }
-            // Branch files stamp seq ABOVE the fork point, the
-            // appendToBranch convention (branch manifests carry
-            // main's evolution log, whose seqs are MAIN versions).
-            // `written` = empty: the moved staged files are shared
-            // across attempts (only the carried set recomputes), and
-            // the outer catch cleans them on terminal abort.
-            val forkV = branchManifest(table, b, 1).parent
-            (Manifest(v, cur.version, operation, cur.schema,
-              carried ++ newFiles.map(_.copy(seq = forkV + v)), cur.partCol,
-              Seq.empty, cur.keyCol, cur.evos), Seq.empty[FileEntry])
-          }
-        case None =>
-      withCommitRetry(table) { () =>
-        val cur = currentManifest(table)
-        val v = cur.version + 1
+      // WAP-staged row-level operation: the replace commits on the
+      // BRANCH chain — main untouched. Branch chains carry no delete
+      // files (createBranch folds first), and the scan read the branch
+      // head, so its delete view must be empty.
+      require(branch.isEmpty || scanDeletes.isEmpty,
+        "a branch-staged operation cannot scan under delete files")
+      // The moved staged files are shared across attempts (only the
+      // carried set recomputes), so no attempt cleans them; the outer
+      // catch does on terminal abort.
+      SnapCommit.commit(table, branch) { h =>
+        val cur = h.cur
+        branch.foreach(b => require(cur.deleteFiles.isEmpty,
+          s"branch '$b' unexpectedly carries delete files"))
         // `replaced` = the files the operation's scan served (the
         // replaced GROUP — the scan records its full planned set, so
         // even a whole-table rewrite validates). A concurrent commit
@@ -2980,16 +2674,14 @@ object SnapStore {
           case Some(rs) =>
             val rset = rs.toSet
             require(rs.forall(pth => cur.files.exists(_.path == pth)),
-              s"concurrent commit rewrote files this $operation read — " +
-                "aborting")
+              s"concurrent ${if (branch.isEmpty) "" else "branch "}commit " +
+                s"rewrote files this $operation read — aborting")
             cur.files.filterNot(f => rset(f.path))
           case None => Seq.empty
         }
-        val m = Manifest(v, cur.version, operation, cur.schema,
-          carried ++ newFiles.map(_.copy(seq = v)), cur.partCol,
-          cur.deleteFiles, cur.keyCol, cur.evos)
-        (m, Seq.empty, tryCommitManifest(table, m))
-      }
+        (Manifest(h.v, cur.version, operation, cur.schema,
+          carried ++ newFiles.map(_.copy(seq = h.seq)), cur.partCol,
+          cur.deleteFiles, cur.keyCol, cur.evos), Nil)
       }
     } catch { case NonFatal(e) =>
       moved.foreach(n => Files.deleteIfExists(dataDir.resolve(n)))
@@ -3174,50 +2866,26 @@ object SnapStore {
               s"apply to rows this $operation read — aborting")
         }
       }
-      val committed = branch match {
-        case Some(b) =>
-          // WAP-staged delta: commit on the branch chain, entries
-          // stamped fork-relative (the appendToBranch convention) so
-          // the staged delete files outrank exactly the files they
-          // outranked at stage time, on the branch and — via
-          // fastForward's order-preserving re-stamp — after publish.
-          // Under the DV conf the fold runs against the BRANCH head:
-          // a fork starts delete-free, so the chain owns every blob
-          // supersede could displace (VERDICT r14 #4); blobs ride
-          // the retry's cleanup list like main's.
-          withBranchCommitRetry(table, b) { cur =>
-            validate(cur)
-            val v = cur.version + 1
-            val seq = branchManifest(table, b, 1).parent + v
-            val (ds0, superseded) =
-              if (useDv) writeDvBlobs(spark, table, cur, v, pairDf, dataDir)
-              else (pairEntries, Set.empty[String])
-            val ds = ds0.map(_.copy(seq = seq))
-            (Manifest(v, cur.version, operation, cur.schema,
-              cur.files ++ newFiles.map(_.copy(seq = seq)), cur.partCol,
-              cur.deleteFiles.filterNot(d => superseded(d.path)) ++ ds,
-              cur.keyCol, cur.evos),
-              if (useDv) ds.map(d => FileEntry(d.path, "", "", 0, 0))
-              else Seq.empty[FileEntry])
-          }
-        case None =>
-          withCommitRetry(table) { () =>
-            val cur = currentManifest(table)
-            validate(cur)
-            val v = cur.version + 1
-            val (ds, superseded) =
-              if (useDv) writeDvBlobs(spark, table, cur, v, pairDf, dataDir)
-              else (pairEntries.map(_.copy(seq = v)), Set.empty[String])
-            val m = Manifest(v, cur.version, operation, cur.schema,
-              cur.files ++ newFiles.map(_.copy(seq = v)), cur.partCol,
-              cur.deleteFiles.filterNot(d => superseded(d.path)) ++ ds,
-              cur.keyCol, cur.evos)
-            // DV blobs ride the retry's cleanup list (only `path` is
-            // used) so a lost race never leaks them.
-            (m, if (useDv) ds.map(d => FileEntry(d.path, "", "", 0, 0))
-              else Seq.empty,
-              tryCommitManifest(table, m))
-          }
+      // A WAP-staged delta commits on the branch chain, entries
+      // stamped fork-relative (the appendToBranch convention) so the
+      // staged delete files outrank exactly the files they outranked
+      // at stage time, on the branch and — via fastForward's
+      // order-preserving re-stamp — after publish. Under the DV conf
+      // the fold runs against the branch head: a fork starts
+      // delete-free, so the chain owns every blob supersede could
+      // displace (VERDICT r14 #4). DV blobs ride the commit's cleanup
+      // list so a lost race never leaks them.
+      val committed = SnapCommit.commit(table, branch) { h =>
+        val cur = h.cur
+        validate(cur)
+        val (ds0, superseded) =
+          if (useDv) writeDvBlobs(spark, table, cur, h.v, pairDf, dataDir)
+          else (pairEntries, Set.empty[String])
+        val ds = ds0.map(_.copy(seq = h.seq))
+        (Manifest(h.v, cur.version, operation, cur.schema,
+          cur.files ++ newFiles.map(_.copy(seq = h.seq)), cur.partCol,
+          cur.deleteFiles.filterNot(d => superseded(d.path)) ++ ds,
+          cur.keyCol, cur.evos), if (useDv) ds.map(_.path) else Nil)
       }
       if (useDv) deleteTree(delTmp)
       committed
@@ -3768,8 +3436,8 @@ object SnapStore {
         spark.read.parquet(table.resolve(d.path).toString)
           .select(col("file")).distinct()
           .collect().map(_.getString(0)).toSeq)
-    withCommitRetry(table) { () =>
-    val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+    val cur = h.cur
     // FILTERED compaction (Iceberg `rewrite_data_files(where => …)`):
     // the predicate scopes the rewrite to the FILES whose manifest
     // bounds may match — those rewrite whole (Iceberg's file-granular
@@ -3809,7 +3477,7 @@ object SnapStore {
         bins += scala.collection.mutable.ArrayBuffer.empty[FileEntry]
       bins.last += f
     }
-    val v = cur.version + 1
+    val v = h.v
     // Out-of-scope files carry exactly like single-file bins: same
     // path, same stats, same sequence — byte-identical on disk.
     val carried = outside ++ bins.filter(_.size == 1).flatten.toSeq
@@ -3877,23 +3545,11 @@ object SnapStore {
               .map(PartTransforms.exprFor(_, cur.schema)): _*)
           .write.options(parquetWriteOptions(table))
           .partitionBy("__bin").mode("overwrite").parquet(tmp.toString)
-        val dataDir = table.resolve("data")
-        val moved = multis.indices.flatMap { i =>
-          val binDir = tmp.resolve(s"__bin=$i")
-          val stream = Files.list(binDir)
-          val parts =
-            try stream.iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-            finally stream.close()
-          parts.zipWithIndex.map { case (src, j) =>
-            val name = s"compact-v$v-b$i-$j-${UUID.randomUUID().toString.take(8)}.parquet"
-            Files.move(src, dataDir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-            name
-          }
-        }
+        val moved = multis.indices.flatMap(i =>
+          moveStaged(table, tmp.resolve(s"__bin=$i"), s"compact-v$v-b$i"))
         deleteTree(tmp)
-        val entries = statsEntries(spark, dataDir, moved, partCol,
-          cur.keyCol)
+        val entries = statsEntries(spark, table.resolve("data"), moved,
+          partCol, cur.keyCol)
         if (lineageable) entries.map(_.copy(lineage = true)) else entries
       }
     // Delete-file retirement: keep only entries still APPLICABLE to
@@ -3908,11 +3564,10 @@ object SnapStore {
       if (d.kind == "eq") carried.exists(_.seq < d.seq)
       else refsOf(d).exists(carriedNames)
     }
-    val m = Manifest(v, cur.version, "compact", cur.schema,
-      carried ++ rewritten.map(_.copy(seq = v)),
+    (Manifest(v, cur.version, "compact", cur.schema,
+      carried ++ rewritten.map(_.copy(seq = h.seq)),
       if (cur.partCol.nonEmpty) cur.partCol else partCol, keptDeletes,
-      cur.keyCol, cur.evos)
-    (m, rewritten, tryCommitManifest(table, m))
+      cur.keyCol, cur.evos), rewritten.map(_.path))
     }
   }
 
@@ -3927,8 +3582,8 @@ object SnapStore {
     * and bound on the new column immediately.
     */
   def evolveSpec(table: Path, newPartCol: String): Manifest =
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       // The spec may be a hidden transform (`days(d)`, `bucket(4,k)`)
       // or a COMPOUND field list (`days(d),bucket(4,k)` — Iceberg's
       // ADD/DROP PARTITION FIELD evolution) — validate every field's
@@ -3942,10 +3597,9 @@ object SnapStore {
         s"duplicate partition fields in '$newPartCol'")
       val canonical = PartTransforms.rawMulti(fields)
       require(cur.partCol != canonical, s"spec is already '$canonical'")
-      val m = Manifest(cur.version + 1, cur.version, "evolve-spec",
+      (Manifest(h.v, cur.version, "evolve-spec",
         cur.schema, cur.files, canonical, cur.deleteFiles, cur.keyCol,
-        cur.evos)
-      (m, Seq.empty, tryCommitManifest(table, m))
+        cur.evos), Nil)
     }
 
   /** `ALTER TABLE … SET IDENTIFIER FIELDS` (Iceberg's row-identity
@@ -3962,8 +3616,8 @@ object SnapStore {
     * empty-seq form.
     */
   def setIdentifierFields(table: Path, cols: Seq[String]): Manifest =
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       require(cols.size <= 1,
         "composite identifier fields are served by the multi-column " +
           "equality-delete API; SET IDENTIFIER FIELDS takes one column")
@@ -3982,9 +3636,8 @@ object SnapStore {
         if (cur.files.forall(f => f.keyMin.isEmpty && f.keyMax.isEmpty))
           cur.files
         else cur.files.map(_.copy(keyMin = "", keyMax = ""))
-      val m = Manifest(cur.version + 1, cur.version, "set-identifier",
-        cur.schema, files, cur.partCol, cur.deleteFiles, k, cur.evos)
-      (m, Seq.empty, tryCommitManifest(table, m))
+      (Manifest(h.v, cur.version, "set-identifier",
+        cur.schema, files, cur.partCol, cur.deleteFiles, k, cur.evos), Nil)
     }
 
   /** Sort-order rewrite — Iceberg's `rewrite_data_files` with a sort
@@ -3999,32 +3652,30 @@ object SnapStore {
     */
   def rewriteClustered(spark: SparkSession, table: Path,
       partCol: String, clusterExprs: Seq[Column],
-      numFiles: Int = 8): Manifest = withCommitRetry(table) { () =>
-    val cur = currentManifest(table)
+      numFiles: Int = 8): Manifest = SnapCommit.commit(table) { h =>
+    val cur = h.cur
     require(cur.deleteFiles.isEmpty,
       "pending delete files: run applyDeletes first")
     // Row lineage carries through the sort rewrite exactly like the
     // fold/compact (materialized columns — the reorder breaks
     // derivation).
     val (df, lineageable) = lineageScan(spark, table, cur, cur.files)
-    val v = cur.version + 1
     // Sort WITHIN the partition layout (Iceberg sort orders apply
     // under the partition spec): the partition column leads the
     // clustering so per-file partition bounds stay tight for manifest
     // pruning, and the sort columns cluster inside it.
     val newFiles0 = writeDataFiles(spark, table, df, partCol,
-      s"cluster-v$v", numFiles,
+      s"cluster-v${h.v}", numFiles,
       PartTransforms.parseMulti(partCol)
         .map(PartTransforms.exprFor(_, cur.schema)) ++ clusterExprs,
       cur.keyCol)
     val newFiles =
       if (lineageable) newFiles0.map(_.copy(lineage = true))
       else newFiles0
-    val m = Manifest(v, cur.version, "rewrite-sorted", cur.schema,
-      newFiles.map(_.copy(seq = v)),
+    (Manifest(h.v, cur.version, "rewrite-sorted", cur.schema,
+      newFiles.map(_.copy(seq = h.seq)),
       if (cur.partCol.nonEmpty) cur.partCol else partCol, Seq.empty,
-      cur.keyCol)
-    (m, newFiles, tryCommitManifest(table, m))
+      cur.keyCol), newFiles.map(_.path))
   }
 
   /** Z-ORDER bit interleave of two-or-more NON-NEGATIVE integral
@@ -4079,18 +3730,16 @@ object SnapStore {
     * untouched; displaced group files expire with their snapshots.
     * Inline (≤ threshold) tables commit a plain no-op snapshot.
     */
-  def rewriteManifests(table: Path, targetEntries: Int = 0): Manifest =
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
-      val v = cur.version + 1
-      val target =
-        if (targetEntries > 0) targetEntries
-        else math.max(1, cur.files.size / 16)
-      val m = Manifest(v, cur.version, "rewrite-manifests", cur.schema,
-        cur.files, cur.partCol, cur.deleteFiles, cur.keyCol, cur.evos)
-      (m, Seq.empty,
-        tryCommitManifest(table, m, regroupEntries = Some(target)))
+  def rewriteManifests(table: Path, targetEntries: Int = 0): Manifest = {
+    val target =
+      if (targetEntries > 0) targetEntries
+      else math.max(1, currentManifest(table).files.size / 16)
+    SnapCommit.commit(table, regroup = Some(target)) { h =>
+      val cur = h.cur
+      (Manifest(h.v, cur.version, "rewrite-manifests", cur.schema,
+        cur.files, cur.partCol, cur.deleteFiles, cur.keyCol, cur.evos), Nil)
     }
+  }
 
   def expire(table: Path, keepLast: Int): (Seq[Int], Seq[String]) = {
     require(keepLast >= 1, "must keep at least the current snapshot")
@@ -4276,7 +3925,7 @@ object SnapStore {
     * (a rename-replace of one shared file could). A legacy
     * single-file `refs` reads as sequence 0.
     */
-  private def refsSeq(table: Path): Seq[(Int, Path)] = {
+  private[sources] def refsSeq(table: Path): Seq[(Int, Path)] = {
     if (!Files.isDirectory(snapDir(table))) return Seq.empty
     val stream = Files.list(snapDir(table))
     try stream.iterator().asScala
@@ -4286,7 +3935,7 @@ object SnapStore {
     finally stream.close()
   }
 
-  private def readRefs(table: Path): (Int, Map[String, Int]) = {
+  private[sources] def readRefs(table: Path): (Int, Map[String, Int]) = {
     var attempts = 0
     while (true) {
       val candidates = refsSeq(table)
@@ -4315,34 +3964,6 @@ object SnapStore {
     throw new IllegalStateException("unreachable")
   }
 
-  private def casRefs(table: Path)(f: Map[String, Int] => Map[String, Int]): Unit = {
-    Files.createDirectories(snapDir(table))
-    var attempts = 0
-    while (attempts < 1000) {
-      attempts += 1
-      val (seq, cur) = readRefs(table)
-      val next = f(cur)
-      val body = next.toSeq.sortBy(_._1)
-        .map { case (n, v) => s"$n=$v" }.mkString("", "\n", "\n")
-      // The prune below can delete sequence seq+1 after a faster writer
-      // installed it, so an exclusive install can land in a recycled
-      // slot under newer sequences, where no reader looks (highest
-      // wins). Such a commit is void unless it is still the newest.
-      if (installExclusive(snapDir(table).resolve(f"refs.v${seq + 1}%05d"), body) &&
-        refsSeq(table).lastOption.forall(_._1 == seq + 1)) {
-        // Opportunistic prune: keep a few trailing sequences so a
-        // racing reader's just-listed file survives its read.
-        refsSeq(table).dropRight(5)
-          .foreach { case (_, p) =>
-            try Files.deleteIfExists(p) catch { case NonFatal(_) => () }
-          }
-        return
-      }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"gave up moving refs after $attempts attempts on $table")
-  }
-
   /** Named snapshot tags. Tags pin a MAIN version for readers (audit
     * sets, eval checkpoints) and protect it from [[expire]].
     */
@@ -4355,7 +3976,7 @@ object SnapStore {
     require(name.nonEmpty && !name.forall(_.isDigit),
       s"tag name '$name' must be non-numeric (numeric = version id)")
     manifest(table, version) // raises if missing/expired
-    casRefs(table)(_ + (name -> version))
+    SnapCommit.casRefs(table)(_ + (name -> version))
   }
 
   /** Drop a tag (`ALTER TABLE … DROP TAG`) — lost-update-safe via
@@ -4365,7 +3986,7 @@ object SnapStore {
   def dropTag(table: Path, name: String): Unit = {
     require(tags(table).contains(name),
       s"tag '$name' does not exist for table $table")
-    casRefs(table)(_ - name)
+    SnapCommit.casRefs(table)(_ - name)
   }
 
   /** A ref that denotes a numeric snapshot id (non-empty, all
@@ -4428,15 +4049,14 @@ object SnapStore {
     * Pure metadata — zero data IO.
     */
   def rollback(table: Path, toVersion: Int): Manifest =
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       val target = manifest(table, toVersion)
       require(toVersion < cur.version,
         s"rollback target $toVersion must precede current ${cur.version}")
-      val m = Manifest(cur.version + 1, cur.version, "rollback",
+      (Manifest(h.v, cur.version, "rollback",
         target.schema, target.files, target.partCol, target.deleteFiles,
-        target.keyCol, target.evos)
-      (m, Seq.empty, tryCommitManifest(table, m))
+        target.keyCol, target.evos), Nil)
     }
 
   // ----------------------------------------------------------------
@@ -4616,9 +4236,9 @@ object SnapStore {
         ops.filterNot(op => op == "append" || op == "overwrite").head)
     val fork = branchManifest(table, b, 1)
     val hm = branchManifest(table, b, head)
-    val m = withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
-      val v = cur.version + 1
+    val m = SnapCommit.commit(table) { h =>
+      val cur = h.cur
+      val v = h.v
       val next =
         if (ops.contains("overwrite")) {
           // A staged overwrite REPLACES contents — re-applying that
@@ -4644,13 +4264,13 @@ object SnapStore {
             cur.files ++ added.map(_.copy(seq = v)), cur.partCol,
             cur.deleteFiles, cur.keyCol, cur.evos)
         }
-      (next, Seq.empty, tryCommitManifest(table, next))
+      (next, Nil)
     }
     dropBranch(table, b)
     m
   }
 
-  private def branchManifestPath(table: Path, name: String, v: Int): Path =
+  private[sources] def branchManifestPath(table: Path, name: String, v: Int): Path =
     snapDir(table).resolve(f"branch-$name-v$v%05d.manifest")
 
   /** The on-disk manifest file of a branch version — the branch
@@ -4694,12 +4314,6 @@ object SnapStore {
     parseManifest(p)
   }
 
-  /** Fork a branch from the current MAIN snapshot — or, with `asOf`,
-    * from a specific LIVE main version (`ALTER TABLE … CREATE BRANCH
-    * … AS OF VERSION n`): a pure metadata commit — branch v1 lists
-    * the fork point's files and records it as parent. Exactly one
-    * creator wins a given name (exclusive install of v1).
-    */
   /** [[createBranch]]'s preconditions, checked WITHOUT mutating —
     * also the pre-drop gate for `REPLACE BRANCH`: a replace that
     * cannot succeed (bad name, missing/expired AS OF version,
@@ -4721,23 +4335,23 @@ object SnapStore {
     cur
   }
 
+  /** Fork a branch from the current MAIN snapshot — or, with `asOf`,
+    * from a specific LIVE main version (`ALTER TABLE … CREATE BRANCH
+    * … AS OF VERSION n`): a pure metadata commit — branch v1 lists
+    * the fork point's files and records it as parent. Exactly one
+    * creator wins a given name (exclusive install of v1).
+    */
   def createBranch(table: Path, name: String,
       asOf: Option[Int] = None): Manifest = {
     require(branchHead(table, name).isEmpty, s"branch '$name' already exists")
     val cur = validateBranchFork(table, name, asOf)
-    val m = Manifest(1, cur.version, "branch-create", cur.schema, cur.files,
-      cur.partCol, Seq.empty, cur.keyCol, cur.evos)
     // Branch manifests share the table's `_snapshots` dir, so a fork
     // of a SPLIT main carries main's group files BY REFERENCE — zero
     // group bytes written for a fork of any size (r9; previously the
     // fork inlined the full file list).
-    val body =
-      if (cur.groups.nonEmpty) manifestBody(m, refs = Some(cur.groups))
-      else manifestBody(m)
-    if (!installExclusive(branchManifestPath(table, name, 1), body))
-      throw new java.util.ConcurrentModificationException(
-        s"branch '$name' was created concurrently for $table")
-    m
+    SnapCommit.createFirst(table, Manifest(1, cur.version, "branch-create",
+      cur.schema, cur.files, cur.partCol, Seq.empty, cur.keyCol, cur.evos),
+      branch = Some(name), fork = Some(cur))
   }
 
   /** Append to a BRANCH head — main's history is untouched; the new
@@ -4753,25 +4367,21 @@ object SnapStore {
       df.select(cur0.schema.fieldNames.map(col): _*), partCol,
       s"brappend-$name-${UUID.randomUUID().toString.take(8)}", numFiles,
       keyCol = cur0.keyCol)
-    // Commit through the SHARED branch retry (split commits diff
-    // their groups against the branch head exactly like main commits,
-    // r9); the appended files are shared across attempts — only the
-    // carried set recomputes — so the retry's per-attempt cleanup
-    // gets none, and the outer catch cleans them on terminal abort.
-    try withBranchCommitRetry(table, name) { cur =>
-      val v = cur.version + 1
-      // Branch-appended files stamp seq ABOVE the fork point (fork
-      // version + branch version), not the small branch-local
-      // version: the branch manifest carries main's evolution log,
-      // whose seqs are MAIN versions — a branch file stamped `2`
-      // against a rename committed at main v5 would wrongly read
-      // through the inverse pre-rename schema. Fast-forward
-      // re-stamps adopted files to the FF version anyway.
-      val forkV = branchManifest(table, name, 1).parent
-      (Manifest(v, cur.version, "append", cur.schema,
-        cur.files ++ newFiles.map(_.copy(seq = forkV + v)),
+    // Split commits diff their groups against the branch head exactly
+    // like main commits (r9); the appended files are shared across
+    // attempts — only the carried set recomputes — so no attempt
+    // cleans them, and the outer catch does on terminal abort.
+    // Branch-appended files stamp seq ABOVE the fork point
+    // ([[SnapCommit.Head]]), not the small branch-local version: a
+    // branch file stamped `2` against a rename committed at main v5
+    // would wrongly read through the inverse pre-rename schema.
+    // Fast-forward re-stamps adopted files to the FF version anyway.
+    try SnapCommit.commit(table, Some(name)) { h =>
+      val cur = h.cur
+      (Manifest(h.v, cur.version, "append", cur.schema,
+        cur.files ++ newFiles.map(_.copy(seq = h.seq)),
         if (cur.partCol.nonEmpty) cur.partCol else partCol,
-        cur.deleteFiles, cur.keyCol, cur.evos), Seq.empty[FileEntry])
+        cur.deleteFiles, cur.keyCol, cur.evos), Nil)
     } catch { case NonFatal(e) =>
       newFiles.foreach(f => Files.deleteIfExists(table.resolve(f.path)))
       throw e
@@ -4800,44 +4410,6 @@ object SnapStore {
     branchManifest(table, name, branchHead(table, name).getOrElse(
       throw new IllegalArgumentException(s"no branch '$name' under $table")))
 
-  /** Branch analogue of [[withCommitRetry]]: `build` computes the
-    * next branch manifest from the CURRENT head (re-read per
-    * attempt, so losers rebase) plus the data files that attempt
-    * wrote (deleted when the install loses — the same cleanup the
-    * main retry does), and the install is the same exclusive-create
-    * appendToBranch uses — split tables diff their groups against
-    * the head.
-    */
-  private def withBranchCommitRetry(table: Path, name: String)(
-      build: Manifest => (Manifest, Seq[FileEntry])): Manifest = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val h = branchHead(table, name).getOrElse(
-        throw new IllegalArgumentException(s"no branch '$name' under $table"))
-      val cur = branchManifest(table, name, h)
-      val (m, written) = build(cur)
-      if (m.files.size <= InlineFileThreshold) {
-        if (installExclusive(branchManifestPath(table, name, m.version),
-          manifestBody(m)))
-          return m
-      } else {
-        val (refs, groupFiles) = writeGroupedRefs(table, m, cur.groups, None)
-        if (installExclusive(branchManifestPath(table, name, m.version),
-          manifestBody(m, refs = Some(refs))))
-          return m
-        groupFiles.foreach(Files.deleteIfExists(_))
-      }
-      written.foreach(f => Files.deleteIfExists(table.resolve(f.path)))
-      if (attempt >= 50)
-        throw new java.util.ConcurrentModificationException(
-          s"gave up after $attempt conflicting commits on branch '$name'")
-      Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-        .nextLong(5L * attempt, 25L * attempt))
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** Read a branch head. */
   def readBranch(spark: SparkSession, table: Path, name: String): DataFrame = {
     val head = branchHead(table, name).getOrElse(
@@ -4852,8 +4424,8 @@ object SnapStore {
     * head's files. The branch stays; drop it separately.
     */
   def fastForward(table: Path, name: String): Manifest =
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       val fork = branchManifest(table, name, 1)
       require(fork.parent == cur.version,
         s"main is at ${cur.version} but branch '$name' forked from " +
@@ -4881,10 +4453,9 @@ object SnapStore {
         else f.copy(seq = seqMap.getOrElse(f.seq, v)))
       val adoptedDeletes = head.deleteFiles.map(d =>
         d.copy(seq = seqMap.getOrElse(d.seq, v)))
-      val m = Manifest(v, cur.version, s"fast-forward-$name",
+      (Manifest(v, cur.version, s"fast-forward-$name",
         head.schema, adopted, head.partCol, adoptedDeletes, head.keyCol,
-        head.evos)
-      (m, Seq.empty, tryCommitManifest(table, m))
+        head.evos), Nil)
     }
 
   /** Drop a branch: delete its manifest chain. Files only it
@@ -4960,7 +4531,7 @@ object SnapStore {
     val deadTags = tags(table).filter { case (n, v) =>
       nowMs - commitInstantMs(table, v) > refAge(n)
     }.keys.toSeq.sorted
-    if (deadTags.nonEmpty) casRefs(table)(m => m -- deadTags)
+    if (deadTags.nonEmpty) SnapCommit.casRefs(table)(m => m -- deadTags)
     (dropped.toSeq, deadTags, trimmed.toMap)
   }
 
@@ -5002,8 +4573,8 @@ object SnapStore {
 
   private def addColumnImpl(table: Path, field: StructField,
       defaultSql: Option[String]): Manifest =
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       require(!cur.schema.fieldNames.contains(field.name),
         s"column ${field.name} already exists")
       require(!reservedOldNames(cur).contains(field.name),
@@ -5014,7 +4585,6 @@ object SnapStore {
         s"column name '${field.name}' was DROPPED while live data " +
           "files still carry its values — rewrite the table " +
           "(compact/applyDeletes) before reusing it")
-      val v = cur.version + 1
       val added = defaultSql match {
         case None => field.copy(nullable = true)
         case Some(sql) =>
@@ -5029,11 +4599,10 @@ object SnapStore {
               .putString("CURRENT_DEFAULT", sql)
               .build())
       }
-      val m = Manifest(v, cur.version, "add-column",
+      (Manifest(h.v, cur.version, "add-column",
         StructType(cur.schema.fields :+ added),
         cur.files, cur.partCol, cur.deleteFiles, cur.keyCol,
-        cur.evos ++ defaultSql.map(Evo(v, "adddef", field.name, _)))
-      (m, Seq.empty, tryCommitManifest(table, m))
+        cur.evos ++ defaultSql.map(Evo(h.v, "adddef", field.name, _))), Nil)
     }
 
   /** The initial-default substitutions a file group with `applicable`
@@ -5078,8 +4647,8 @@ object SnapStore {
     * (bounds/pruning would dangle), exactly Iceberg's restriction.
     */
   def dropColumn(table: Path, name: String): Manifest =
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       require(cur.schema.fieldNames.contains(name),
         s"column $name does not exist")
       require(PartTransforms.parseMulti(cur.partCol).forall(_.raw != name),
@@ -5106,12 +4675,10 @@ object SnapStore {
       // would silently resurrect their stale values. The tombstone
       // makes ADD/RENAME refuse the name until every pre-drop file is
       // rewritten (code review r12); reads ignore it (schema-driven).
-      val v = cur.version + 1
-      val m = Manifest(v, cur.version, "drop-column",
+      (Manifest(h.v, cur.version, "drop-column",
         StructType(cur.schema.fields.filterNot(_.name == name)),
         cur.files, cur.partCol, cur.deleteFiles, cur.keyCol,
-        keptEvos :+ Evo(v, "drop", name, ""))
-      (m, Seq.empty, tryCommitManifest(table, m))
+        keptEvos :+ Evo(h.v, "drop", name, "")), Nil)
     }
 
   /** Does a drop tombstone block reusing `name`? True while any LIVE
@@ -5137,8 +4704,8 @@ object SnapStore {
     * the old name; fold first), like [[dropColumn]]'s restriction.
     */
   def renameColumn(table: Path, from: String, to: String): Manifest =
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       require(cur.schema.fieldNames.contains(from),
         s"column $from does not exist")
       require(!cur.schema.fieldNames.contains(to),
@@ -5155,10 +4722,9 @@ object SnapStore {
         d.kind != "eq" || !eqKeyColsOf(d).contains(from)),
         s"cannot rename '$from': a pending equality-delete file is " +
           "keyed on it — run applyDeletes first")
-      val v = cur.version + 1
       def respec(raw: String): String =
         PartTransforms.renameSource(raw, from, to)
-      val m = Manifest(v, cur.version, "rename-column",
+      (Manifest(h.v, cur.version, "rename-column",
         StructType(cur.schema.fields.map(f =>
           if (f.name == from) f.copy(name = to) else f)),
         cur.files.map(f => f.copy(specCol =
@@ -5166,8 +4732,7 @@ object SnapStore {
         if (cur.partCol.nonEmpty) respec(cur.partCol) else cur.partCol,
         cur.deleteFiles,
         if (cur.keyCol == from) to else cur.keyCol,
-        cur.evos :+ Evo(v, "rename", from, to))
-      (m, Seq.empty, tryCommitManifest(table, m))
+        cur.evos :+ Evo(h.v, "rename", from, to)), Nil)
     }
 
   /** Type-widening promotions RENAME-style evolution allows as pure
@@ -5196,8 +4761,8 @@ object SnapStore {
     * rewrite to not corrupt.
     */
   def widenColumn(table: Path, name: String, to: DataType): Manifest =
-    withCommitRetry(table) { () =>
-      val cur = currentManifest(table)
+    SnapCommit.commit(table) { h =>
+      val cur = h.cur
       val field = cur.schema.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"column $name does not exist"))
       require(widensTo(field.dataType, to),
@@ -5240,13 +4805,11 @@ object SnapStore {
           s" → ${to.simpleString} changes the Murmur3 hash, which " +
           "would corrupt stored bucket bounds — rewrite the table " +
           "under the new type instead")
-      val v = cur.version + 1
-      val m = Manifest(v, cur.version, "widen-column",
+      (Manifest(h.v, cur.version, "widen-column",
         StructType(cur.schema.fields.map(f =>
           if (f.name == name) f.copy(dataType = to) else f)),
         cur.files, cur.partCol, cur.deleteFiles, cur.keyCol,
-        cur.evos :+ Evo(v, "widen", name, field.dataType.json))
-      (m, Seq.empty, tryCommitManifest(table, m))
+        cur.evos :+ Evo(h.v, "widen", name, field.dataType.json)), Nil)
     }
 
   private def deleteTree(p: Path): Unit =

@@ -12,6 +12,7 @@ import org.apache.spark.SparkConf
 /** The session factory and the entry-run contract every harness goes
   * through (Bench, Verify, Runner, Explain and these suites). */
 class GraftSessionSpec extends SparkSpec {
+  import GraftSessionSpec.engineSourcesMatching
 
   private def cacheManager = spark
     .asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
@@ -95,18 +96,6 @@ class GraftSessionSpec extends SparkSpec {
     assert(cacheManager.isEmpty)
   }
 
-  /** Engine sources (relative paths) whose text matches `pattern`. */
-  private def engineSourcesMatching(pattern: Regex): List[String] = {
-    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
-    assert(Files.isDirectory(root), s"$root is not the engine source root")
-    val stream = Files.walk(root)
-    try stream.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => pattern.findFirstIn(Files.readString(p)).isDefined)
-      .map(p => root.relativize(p).toString).toList
-    finally stream.close()
-  }
-
   test("no engine source outside GraftSession builds its own session") {
     val offenders = engineSourcesMatching("""SparkSession\.builder""".r)
       .filterNot(_ == Paths.get("graft", "GraftSession.scala").toString)
@@ -119,5 +108,22 @@ class GraftSessionSpec extends SparkSpec {
       """GraftFunctions\s*\.\s*register|createOrReplaceTempFunction""".r)
     assert(offenders.isEmpty,
       s"GraftSparkExtensions injects the functions: ${offenders.mkString(", ")}")
+  }
+}
+
+object GraftSessionSpec {
+
+  /** Engine sources (paths relative to `src/main/scala`) whose text
+    * matches `pattern` — the source scans that pin one owner for a
+    * mechanism. */
+  def engineSourcesMatching(pattern: Regex): List[String] = {
+    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    assert(Files.isDirectory(root), s"$root is not the engine source root")
+    val stream = Files.walk(root)
+    try stream.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => pattern.findFirstIn(Files.readString(p)).isDefined)
+      .map(p => root.relativize(p).toString).toList
+    finally stream.close()
   }
 }

@@ -77,7 +77,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("reference TPC-H corpus: 22 files discovered and run VERBATIM") {
-    val dir = queries.Corpus.corpusDir
+    val dir = queries.CorpusFiles.tpch.dir
     val discovered = Runner.discoverQueries(dir)
     assert(discovered.length === 22)
     assert(discovered.map(_._1) === (1 to 22).map(i => f"q$i%02d"))
@@ -93,7 +93,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("reference TPC-DS corpus: 103 files discovered and run VERBATIM") {
-    val dir = queries.TpcdsCorpus.corpusDir
+    val dir = queries.CorpusFiles.tpcds.dir
     val discovered = Runner.discoverQueries(dir)
     assert(discovered.length === 103)
     queries.TpcdsCorpus.register(spark, sf)
@@ -119,9 +119,9 @@ class RunnerSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     try {
       assert(spark.sql("SHOW TABLES IN graft.tpcds").count() === 24)
-      val rowsH = Runner.runSuite(spark, "TPC-H", queries.Corpus.corpusDir,
+      val rowsH = Runner.runSuite(spark, "TPC-H", queries.CorpusFiles.tpch.dir,
         "graft", "tpch", "run_cat")
-      val rowsD = Runner.runSuite(spark, "TPC-DS", queries.TpcdsCorpus.corpusDir,
+      val rowsD = Runner.runSuite(spark, "TPC-DS", queries.CorpusFiles.tpcds.dir,
         "graft", "tpcds", "run_cat")
       assert(rowsH.length === 22 && rowsD.length === 103)
       val failed = (rowsH ++ rowsD).filter(_.getString(5) != "SUCCESS").map(r =>
