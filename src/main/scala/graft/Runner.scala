@@ -35,19 +35,25 @@ object Runner {
     StructField("total_batch_scan_time_ms", LongType),
     StructField("timestamp", TimestampType)))
 
+  /** The entries of directory `dir`. A path that is not a directory
+    * throws, naming it, as the reference's `Files.list` does — a
+    * mistyped `--tpch-dir` must not run an empty suite and exit 0.
+    */
+  private def listDir(dir: String): Seq[Path] = {
+    val p = Paths.get(dir)
+    if (!Files.isDirectory(p))
+      throw new IllegalArgumentException(s"not a directory: $p")
+    val stream = Files.list(p)
+    try stream.iterator.asScala.toSeq finally stream.close()
+  }
+
   /** Discover `*.sql` files sorted by filename
     * (`IcebergBenchmark.java:162-167`).
     */
-  def discoverQueries(dir: String): Seq[(String, String)] = {
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) return Seq.empty
-    val stream = Files.list(p)
-    val files =
-      try stream.iterator.asScala.filter(_.toString.endsWith(".sql")).toSeq
-      finally stream.close()
-    files.sortBy(_.getFileName.toString)
+  def discoverQueries(dir: String): Seq[(String, String)] =
+    listDir(dir).filter(_.toString.endsWith(".sql"))
+      .sortBy(_.getFileName.toString)
       .map(f => f.getFileName.toString.stripSuffix(".sql") -> Files.readString(f))
-  }
 
   /** `${database}`/`${schema}` substitution — plain string replace,
     * applying even inside string literals, exactly like
@@ -139,17 +145,10 @@ object Runner {
     * local analogue of the reference's sweep grid (`runner.sh:26-41`
     * loops `tpch_sf1…sf1000`; here the grid is `sf0.001…sf0.1`).
     */
-  def listSfDirs(root: String): Seq[String] = {
-    val p = Paths.get(root)
-    if (!Files.isDirectory(p)) return Seq.empty
-    val stream = Files.list(p)
-    val dirs =
-      try stream.iterator.asScala
-        .filter(d => Files.isDirectory(d) && d.getFileName.toString.startsWith("sf"))
-        .toSeq
-      finally stream.close()
-    dirs.sortBy(_.getFileName.toString).map(_.toString)
-  }
+  def listSfDirs(root: String): Seq[String] =
+    listDir(root)
+      .filter(d => Files.isDirectory(d) && d.getFileName.toString.startsWith("sf"))
+      .sortBy(_.getFileName.toString).map(_.toString)
 
   /** Multi-sf sweep (`runner.sh:26-41`): one suite pass per fixture
     * dir, every row in ONE result set with `schema_size` tagged

@@ -137,61 +137,23 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               .map(v => SnapStore.branchManifest(dir, b, v)))
             .getOrElse(SnapStore.currentManifest(dir))
         }
-        // A clean snapshot (no pending delete files, no evolution
-        // that still applies to a live file) serves as a plain DSv2
-        // ParquetTable file list — full pushdown, vectorized reads.
-        // A merge-on-read snapshot (pending equality/position
-        // deletes) or one with pre-evolution files routes through
-        // [[BridgedReadTable]], whose V1 scan plans the SAME
-        // delete-aware / evolution-aware DataFrame SnapStore.read
-        // serves — Iceberg's SparkTable likewise serves MOR reads
-        // transparently (VERDICT r6 task #1). Either way the table
-        // keeps the full DML surface (SnapTable wraps both).
-        val readEvos = m.evos.filter(_.kind != "drop")
-        val evoApplies = readEvos.nonEmpty &&
-          m.files.exists(f => readEvos.exists(_.seq > f.seq))
-        // A storage-partitioned-join-eligible LAYOUT routes through
-        // the native scan even when clean: only that scan can report
-        // KeyGroupedPartitioning (its clean path is the same
-        // vectorized ParquetTable delegate, so nothing is lost). The
-        // session conf is deliberately NOT consulted here — the route
-        // is decided by layout alone, and the scan builder re-checks
-        // the conf at every scan build, so a mid-session conf flip
-        // takes effect without invalidating cached relations
-        // (ADVICE r10).
-        val spj = SnapSpj.layoutKey(m).isDefined
-        // The native route is the DEFAULT from r14 (Iceberg tables
-        // are always on the equivalent native scan): it is the only
-        // face that advertises the metadata columns — `_file`/`_pos`
+        // Every snapshot with files serves through [[BridgedReadTable]]
+        // (Iceberg tables are always on the equivalent native scan):
+        // it applies pending deletes and pre-evolution conversions,
+        // reports KeyGroupedPartitioning for storage-partitioned-join
+        // layouts, advertises the metadata columns — `_file`/`_pos`
         // for the delta DML row ids, `_row_id`/
         // `_last_updated_sequence_number` for v3 row-lineage carry
         // through COW UPDATE/MERGE — and serves manifest-derived
         // statistics to the CBO. Clean files keep their vectorized
-        // delegate scans inside the native batch, so nothing is lost
-        // on the fast path. `spark.graft.read.native=false` restores
-        // the legacy shape-based routing (plain ParquetTable for
-        // clean snapshots) for A/B comparison; MOR debt, evolution,
-        // and SPJ layouts route native regardless (correctness).
-        val forceNative = session.conf
-          .getOption("spark.graft.read.native")
-          .map(_.toBoolean).getOrElse(true) ||
-          SnapStore.anyMergeOnRead(dir) ||
-          SnapStore.hasColStats(dir)
+        // ParquetTable delegate scans inside the native batch. A
+        // FILELESS snapshot (freshly CREATEd, or fully deleted) serves
+        // an empty local scan under the manifest schema — a zero-path
+        // ParquetTable cannot plan. Either way the table keeps the
+        // full DML surface (SnapTable wraps both).
         val underlying: Table =
-          // A FILELESS snapshot (freshly CREATEd, or fully deleted)
-          // serves an empty local scan under the manifest schema — a
-          // zero-path ParquetTable cannot plan.
           if (m.files.isEmpty)
             new EmptyReadTable(s"$catalogName.$db.$name", m.schema)
-          else if (m.deleteFiles.isEmpty && !evoApplies && !spj &&
-            !forceNative)
-            ParquetTable(
-              s"$catalogName.$db.$name",
-              session,
-              CaseInsensitiveStringMap.empty(),
-              m.files.map(f => dir.resolve(f.path).toString),
-              userSpecifiedSchema = Some(m.schema),
-              fallbackFileFormat = classOf[ParquetFileFormat])
           else new BridgedReadTable(s"$catalogName.$db.$name", dir, m)
         new SnapTable(underlying, dir)
       }
@@ -1884,8 +1846,8 @@ object GraftCatalog {
 }
 
 /** A SnapStore-backed snapshot table behind the catalog: reads
-  * delegate to Spark's own DSv2 `ParquetTable` over the manifest's
-  * file list (full pushdown, vectorized reads), and the table
+  * delegate to its read face ([[BridgedReadTable]], or
+  * [[EmptyReadTable]] for a fileless snapshot), and the table
   * additionally implements `SupportsDelete` so SQL
   * `DELETE FROM catalog.db.t WHERE …` commits a copy-on-write
   * predicate delete through [[SnapStore.deleteWhere]] — the surface
@@ -1899,10 +1861,8 @@ final class SnapTable(underlying: Table, dir: java.nio.file.Path)
     with SupportsWrite with SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
-  /** `_file` / `_pos` forward from the native read face when that is
-    * the active route (MOR/evolved/SPJ snapshots, or every snapshot
-    * under `spark.graft.read.native=true`); the plain ParquetTable
-    * delegate cannot serve them — select through the native route.
+  /** `_file` / `_pos` forward from the native read face; the empty
+    * face of a fileless snapshot has none.
     */
   override def metadataColumns():
       Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
@@ -1954,7 +1914,7 @@ final class SnapTable(underlying: Table, dir: java.nio.file.Path)
     merged
   }
   // Advertise exactly the implemented surface (read + V1 batch
-  // write): passing through the parquet table's capability set would
+  // write): passing through the read face's capability set would
   // let unimplemented paths pass the analyzer's capability check and
   // then die on an internal cast.
   override def capabilities(): util.Set[TableCapability] =
@@ -2085,7 +2045,7 @@ object SnapTable {
     * (`IN` / `=` on the partition spec's source column), as EXTERNAL
     * `(value, declared type)` pairs — the caller maps them through
     * the spec transform onto file bounds
-    * ([[SnapStore.filesForSourceValues]]), which is what makes
+    * ([[SnapStore.filesForSourceValuesField]]), which is what makes
     * runtime group filtering work for HIDDEN partition specs
     * (`days(ts)`, `bucket(n,k)`), not just identity columns.
     * `None` = untranslatable shape (caller must keep everything).

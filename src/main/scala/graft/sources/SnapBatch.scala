@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * — replaces both the COW row-level scan's eager staging write and
   * the V1Scan RDD bridge for pending-MOR SQL reads).
   *
-  * Files group by TREATMENT, exactly like [[SnapStore.readManifest]]:
+  * Files group by TREATMENT, exactly like [[SnapStore.scanWithDeletes]]:
   *
   *  - **Clean files** (current schema, no applicable deletes) are
   *    served by a delegated [[ParquetTable]] scan — column pruning

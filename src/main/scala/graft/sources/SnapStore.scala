@@ -213,18 +213,6 @@ object SnapStore {
 
   private def render(v: Any): String = String.valueOf(v)
 
-  /** Does any of the change set's partition values fall inside the
-    * file's bounds? `None` ordering (or a spec mismatch handled by
-    * the caller) means "assume yes" — pruning may only ever skip
-    * work it can PROVE unaffected.
-    */
-  private def intersectsParts(ord: Option[Ordering[String]],
-      parts: Set[String], f: FileEntry): Boolean = ord match {
-    case None => true
-    case Some(o) =>
-      parts.exists(p => o.gteq(p, f.partMin) && o.lteq(p, f.partMax))
-  }
-
   // ----------------------------------------------------------------
   // Multi-field partition bounds (compound specs).
 
@@ -839,13 +827,40 @@ object SnapStore {
     withRefs.flatMap(_.refs).toSet ++ scanned
   }
 
+  /** [[read]]'s DataFrame scan of exactly `m`'s files: the fileless
+    * and delete-free fast paths, else [[scanWithDeletes]] projected to
+    * the table schema.
+    */
   private[graft] def readManifest(spark: SparkSession, table: Path,
       m: Manifest): DataFrame = {
     if (m.files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
     if (m.deleteFiles.isEmpty) return scanFiles(spark, table, m, m.files)
+    scanWithDeletes(spark, table, m, m.files, m.schema.fieldNames.toSeq)
+  }
 
+  /** The one delete-aware DataFrame scan: `fs` (files of `m`) with
+    * every pending delete applied, projected to `keep`. Equality
+    * deletes anti-join on the key, scoped by SEQUENCE — one applies
+    * only to files with a LOWER seq. Position deletes anti-join
+    * `(file, pos)` via the parquet metadata columns, only for the
+    * files they name.
+    *
+    * `keep` is the table schema ([[readManifest]]'s face) or that
+    * plus the physical file name `__fn` — the rewrite-side face
+    * [[compact]] and the delete rewrites attribute rows to files by —
+    * optionally with the row ordinal `__ri` and the [[LineageFields]]
+    * not in the schema, which then read physically where a file
+    * carries them. A group reads `_metadata` when a position delete
+    * names its files or `keep` asks for `__fn`; every other clean
+    * file stays on the plain path.
+    */
+  private[sources] def scanWithDeletes(spark: SparkSession, table: Path,
+      m: Manifest, fs: Seq[FileEntry], keep: Seq[String]): DataFrame = {
+    val keepsMeta = keep.contains("__fn")
+    val lineageFields = LineageFields.filter(f =>
+      keep.contains(f.name) && !m.schema.fieldNames.contains(f.name))
     val eqDeletes = m.deleteFiles.filter(_.kind == "eq")
     val posDeletes = m.deleteFiles.filter(_.kind == "pos")
     // Position-delete pairs stay a DATAFRAME end-to-end — never
@@ -866,71 +881,11 @@ object SnapStore {
     // position delete names them): one sub-plan per distinct
     // treatment, unioned. Group count is bounded by the number of
     // MOR commits since the last fold — small by construction.
-    val groups = m.files.groupBy(f =>
-      (eqDeletes.filter(_.seq > f.seq).map(_.path),
-        posAffected(fileName(f.path))))
-    groups.map { case ((eqs, posHit), fs) =>
-      var df = scanFiles(spark, table, m, fs, withMeta = posHit)
-      if (posHit) {
-        val pd =
-          if (posRows <= BroadcastDeleteRows) broadcast(posPairsDf)
-          else posPairsDf
-        df = df.join(pd,
-          col("__fn") === col("__dfile") && col("__ri") === col("__dpos"),
-          "left_anti")
-      }
-      if (eqs.nonEmpty) {
-        val applying = eqDeletes.filter(d => eqs.contains(d.path))
-        val kcs = eqKeyColsOf(eqDeletes.head)
-        val dk0 = spark.read
-          .parquet(eqs.map(p => table.resolve(p).toString): _*)
-          .select(kcs.zipWithIndex.map { case (c, i) =>
-            col(c).as(s"__delk$i") }: _*).distinct()
-        val dk =
-          if (applying.map(_.rows).sum <= BroadcastDeleteRows) broadcast(dk0)
-          else dk0
-        val cond = kcs.zipWithIndex
-          .map { case (c, i) => df(c) === col(s"__delk$i") }
-          .reduce(_ && _)
-        df = df.join(dk, cond, "left_anti")
-      }
-      df.select(m.schema.fieldNames.map(col): _*)
-    }.reduce(_ unionByName _)
-  }
-
-  /** Delete-aware scan of a SUBSET of a manifest's data files that
-    * RETAINS the physical file-name column `__fn` — the rewrite-side
-    * primitive delete-aware compaction needs ([[readManifest]]'s MOR
-    * grouping, kept separate because readManifest's final projection
-    * drops the metadata column and its clean-file fast path is
-    * spec-pinned). Sequence scoping is identical: an equality delete
-    * applies only to files with a LOWER seq, a position delete only
-    * to the files it names.
-    */
-  private[sources] def scanWithDeletes(spark: SparkSession, table: Path,
-      m: Manifest, fs: Seq[FileEntry],
-      lineageFields: Seq[StructField] = Seq.empty): DataFrame = {
-    // `lineageFields` keeps the row ordinal and reads the physical
-    // lineage columns of files that carry them — the compaction
-    // rewrite derives carried `_row_id`s from either.
-    val keepCols = (m.schema.fieldNames.toSeq :+ "__fn") ++
-      (if (lineageFields.nonEmpty) "__ri" +: lineageFields.map(_.name)
-       else Seq.empty)
-    if (m.deleteFiles.isEmpty)
-      return scanFiles(spark, table, m, fs, withMeta = true,
-        extraFields = lineageFields).select(keepCols.map(col): _*)
-    val eqDeletes = m.deleteFiles.filter(_.kind == "eq")
-    val posDeletes = m.deleteFiles.filter(_.kind == "pos")
-    lazy val posPairsDf: DataFrame =
-      DeleteVectors.pairsDf(spark, table, posDeletes)
-        .select(col("file").as("__dfile"), col("pos").as("__dpos"))
-    val posRows = posDeletes.map(_.rows).sum
-    val posAffected: Set[String] = posAffectedFiles(spark, table, posDeletes)
     val groups = fs.groupBy(f =>
       (eqDeletes.filter(_.seq > f.seq).map(_.path),
         posAffected(fileName(f.path))))
     groups.map { case ((eqs, posHit), gfs) =>
-      var df = scanFiles(spark, table, m, gfs, withMeta = true,
+      var df = scanFiles(spark, table, m, gfs, withMeta = posHit || keepsMeta,
         extraFields = lineageFields)
       if (posHit) {
         val pd =
@@ -955,7 +910,7 @@ object SnapStore {
           .reduce(_ && _)
         df = df.join(dk, cond, "left_anti")
       }
-      df.select(keepCols.map(col): _*)
+      df.select(keep.map(col): _*)
     }.reduce(_ unionByName _)
   }
 
@@ -1076,7 +1031,7 @@ object SnapStore {
       sourceValues: Seq[Any]): Seq[FileEntry] = {
     // Bare-value faces address the FIRST spec field (a compound
     // spec's leading transform); column-addressed pruning over every
-    // field goes through [[probeCandidates]]/[[filesForSourceValues]].
+    // field goes through [[probeCandidates]]/[[filesForSourceValuesField]].
     val spec = PartTransforms.parseMulti(m.partCol).headOption
       .getOrElse(return m.files)
     PartTransforms.sourceTypeOpt(spec, m.schema) match {
@@ -1748,20 +1703,6 @@ object SnapStore {
       ds.map(_.path))
   }
 
-  /** The deletion-vector encoding (Iceberg v3,
-    * `spark.graft.delete.vectors=true`): ONE `.dv` blob per affected
-    * data file — delta-varint sorted ordinals, self-naming — written
-    * DISTRIBUTED (hits repartition by file; each task streams its
-    * files' sorted positions straight into blobs, no driver
-    * materialization; only the per-blob summary rows collect). The
-    * v3 one-DV-per-file invariant holds by MERGE-AND-SUPERSEDE: a
-    * new DV for a data file folds every pending DV already
-    * referencing it and the commit drops the superseded entries
-    * (their blobs expire with the old snapshots). Parquet pos
-    * entries from pre-DV commits stay alongside — position
-    * suppression is idempotent, so the union application both read
-    * paths do is exact.
-    */
   /** Write one merged DV blob per affected data file from a
     * `(file, pos)` pair frame, folding (superseding) every pending
     * DV already referencing the file — the v3 one-DV-per-file
@@ -1811,6 +1752,20 @@ object SnapStore {
     (ds, superseded)
   }
 
+  /** The deletion-vector encoding (Iceberg v3,
+    * `spark.graft.delete.vectors=true`): ONE `.dv` blob per affected
+    * data file — delta-varint sorted ordinals, self-naming — written
+    * DISTRIBUTED (hits repartition by file; each task streams its
+    * files' sorted positions straight into blobs, no driver
+    * materialization; only the per-blob summary rows collect). The
+    * v3 one-DV-per-file invariant holds by MERGE-AND-SUPERSEDE: a
+    * new DV for a data file folds every pending DV already
+    * referencing it and the commit drops the superseded entries
+    * (their blobs expire with the old snapshots). Parquet pos
+    * entries from pre-DV commits stay alongside — position
+    * suppression is idempotent, so the union application both read
+    * paths do is exact.
+    */
   private def deletePositionsDv(spark: SparkSession, table: Path,
       cur: Manifest, v: Int, hits: DataFrame, dataDir: Path,
       tmp: Path): (Manifest, Seq[String]) = {
@@ -1956,50 +1911,61 @@ object SnapStore {
       cur.keyCol), newFiles.map(_.path))
   }
 
-  /** A delete-aware scan of `fs` that — when any source file carries
-    * lineage (assigned or materialized) and the column names are
-    * free — appends materialized `_row_id` /
-    * `_last_updated_sequence_number` columns so a full rewrite
-    * preserves row identity. Sources WITHOUT lineage (pre-upgrade
-    * files mixed with post-upgrade appends) serve NULL for both —
-    * the v3 contract: a rewrite never fabricates ids for rows that
-    * had stable ones, and never re-stamps rows that had none. Falls
-    * back to the plain delete-aware scan only when NO source carries
-    * lineage (a fully pre-lineage table, where commit-time assignment
-    * is the first id those rows ever get). Shared by [[applyDeletes]]
-    * and [[rewriteClustered]]; [[compact]] inlines the same recipe
-    * with its bin routing.
+  /** Iceberg v3 row-lineage columns a full rewrite materializes. */
+  private val LineageFields = Seq(
+    StructField("_row_id", LongType, nullable = true),
+    StructField("_last_updated_sequence_number", LongType, nullable = true))
+
+  /** Whether a rewrite of `fs` carries row lineage: some source file
+    * carries it (assigned or materialized) and the column names are
+    * free in the table schema.
+    */
+  private def carriesLineage(cur: Manifest, fs: Seq[FileEntry]): Boolean =
+    fs.exists(f => f.firstRowId >= 0L || f.lineage) &&
+      LineageFields.forall(lf => !cur.schema.fieldNames.contains(lf.name))
+
+  /** The delete-aware scan of `fs`, keeping `__fn`, with materialized
+    * `_row_id` / `_last_updated_sequence_number` columns so a full
+    * rewrite preserves row identity: a file's own materialized values
+    * when it is itself a rewrite output, else the derivation
+    * `first_row_id + _pos` and the file's sequence. Sources WITHOUT
+    * lineage (pre-upgrade files mixed with post-upgrade appends) serve
+    * NULL for both — the v3 contract: a rewrite never fabricates ids
+    * for rows that had stable ones, and never re-stamps rows that had
+    * none. Callers check [[carriesLineage]] first; [[compact]]'s bin
+    * scan and [[lineageScan]] share it.
+    */
+  private def scanWithLineage(spark: SparkSession, table: Path,
+      cur: Manifest, fs: Seq[FileEntry]): DataFrame = {
+    import spark.implicits._
+    val lin = fs
+      .map(f => (fileName(f.path), f.firstRowId,
+        if (f.firstRowId >= 0L) Some(f.seq.toLong) else None))
+      .toDF("__fname0", "__fr", "__fseq")
+    scanWithDeletes(spark, table, cur, fs,
+      (cur.schema.fieldNames.toSeq :+ "__fn" :+ "__ri") ++
+        LineageFields.map(_.name))
+      .join(broadcast(lin), col("__fn") === col("__fname0"))
+      .withColumn("_row_id", coalesce(col("_row_id"),
+        when(col("__fr") >= 0L, col("__fr") + col("__ri"))))
+      .withColumn("_last_updated_sequence_number",
+        coalesce(col("_last_updated_sequence_number"), col("__fseq")))
+      .drop("__fname0", "__fr", "__fseq", "__ri")
+  }
+
+  /** A full-table rewrite scan: [[scanWithLineage]] without `__fn`
+    * when the files carry lineage, else the plain delete-aware read
+    * (a fully pre-lineage table, where commit-time assignment is the
+    * first id those rows ever get). Shared by [[applyDeletes]] and
+    * [[rewriteClustered]].
     */
   private def lineageScan(spark: SparkSession, table: Path,
-      cur: Manifest, fs: Seq[FileEntry]): (DataFrame, Boolean) = {
-    import spark.implicits._
-    val linFields = Seq(
-      StructField("_row_id", LongType, nullable = true),
-      StructField("_last_updated_sequence_number", LongType,
-        nullable = true))
-    val lineageable =
-      fs.exists(f => f.firstRowId >= 0L || f.lineage) &&
-      linFields.forall(lf => !cur.schema.fieldNames.contains(lf.name))
-    if (!lineageable)
+      cur: Manifest, fs: Seq[FileEntry]): (DataFrame, Boolean) =
+    if (!carriesLineage(cur, fs))
       // Legacy (pre-lineage) tables keep the native delete-aware
       // read — per-task delete application, vectorized clean files.
       (read(spark, table), false)
-    else {
-      val lin = fs
-        .map(f => (fileName(f.path), f.firstRowId,
-          if (f.firstRowId >= 0L) Some(f.seq.toLong) else None))
-        .toDF("__fname0", "__fr", "__fseq")
-      val df = scanWithDeletes(spark, table, cur, fs,
-        lineageFields = linFields)
-        .join(broadcast(lin), col("__fn") === col("__fname0"))
-        .withColumn("_row_id", coalesce(col("_row_id"),
-          when(col("__fr") >= 0L, col("__fr") + col("__ri"))))
-        .withColumn("_last_updated_sequence_number",
-          coalesce(col("_last_updated_sequence_number"), col("__fseq")))
-        .drop("__fn", "__fname0", "__fr", "__fseq", "__ri")
-      (df, true)
-    }
-  }
+    else (scanWithLineage(spark, table, cur, fs).drop("__fn"), true)
 
   // ----------------------------------------------------------------
   // Incremental reads + history.
@@ -2190,8 +2156,8 @@ object SnapStore {
             else keysK
           if (candidates.isEmpty) None
           else {
-            val scanned = scanWithDeletes(spark, table, from, candidates)
-              .drop("__fn")
+            val scanned = scanWithDeletes(spark, table, from, candidates,
+              from.schema.fieldNames.toSeq :+ "__fn").drop("__fn")
             Some(scanned.join(keysB,
               kcs.zipWithIndex.map { case (c, i) =>
                 scanned(c) === col(s"__delk$i") }.reduce(_ && _),
@@ -2925,15 +2891,6 @@ object SnapStore {
     mode
   }
 
-  /** Whether ANY SQL write mode is merge-on-read — the load-time
-    * signal to route the table's read face native, so the delta
-    * operation's `_file`/`_pos` row ids resolve.
-    */
-  private[sources] def anyMergeOnRead(table: Path): Boolean =
-    Seq("delete", "update", "merge").exists(c =>
-      tableProperties(table).get(s"write.$c.mode")
-        .contains("merge-on-read"))
-
   /** One column's stored statistics (the `compute_table_stats`
     * output): NDV, null count, string lengths, and — for
     * order-comparable primitives — rendered min/max bounds.
@@ -3308,12 +3265,6 @@ object SnapStore {
     Some((kv("version").toInt, kv("rows").toLong, cols))
   }
 
-  /** Whether stored column stats exist — the load-time signal to
-    * route the read face native so the scan can surface them.
-    */
-  private[sources] def hasColStats(table: Path): Boolean =
-    Files.exists(colStatsPath(table))
-
   /** The partition-bound ordering for a column, if prunable. */
   private[graft] def partOrdering(schema: StructType,
       partCol: String): Option[Ordering[String]] = {
@@ -3328,18 +3279,11 @@ object SnapStore {
       .map(spec.resultType).flatMap(boundOrd)
   }
 
-  /** Files whose partition bounds may hold any of `values` (rendered
-    * partition values) — the file-granular group selection behind
-    * runtime group filtering. Conservative on spec mismatch or
-    * unprunable types. Under a compound spec `values` are FIELD-0
-    * renders; [[filesIntersectingField]] serves the other fields.
-    */
-  private[sources] def filesIntersecting(m: Manifest,
-      values: Set[String]): Seq[FileEntry] =
-    filesIntersectingField(m, 0, values)
-
   /** Files whose bounds for spec FIELD `idx` may hold any of
-    * `values` — the per-field prune a compound spec conjoins.
+    * `values` (rendered partition values) — the file-granular group
+    * selection behind runtime group filtering, and the per-field
+    * prune a compound spec conjoins. Conservative on spec mismatch or
+    * unprunable types.
     */
   private[sources] def filesIntersectingField(m: Manifest, idx: Int,
       values: Set[String]): Seq[FileEntry] = {
@@ -3360,14 +3304,9 @@ object SnapStore {
     * and keeps every file — conservative, never wrong; identity
     * specs over integral types are exempt (the rendered bound is
     * numeric either way).
-    */
-  private[sources] def filesForSourceValues(m: Manifest,
-      vals: Seq[(Any, DataType)]): Seq[FileEntry] =
-    filesForSourceValuesField(m, 0, vals)
-
-  /** [[filesForSourceValues]] addressed at spec FIELD `idx` — the
-    * per-field face compound-spec runtime filtering conjoins (each
-    * field's source column can receive its own dynamic filter).
+    * Addressed at spec FIELD `idx`: compound-spec runtime filtering
+    * conjoins one call per field (each field's source column can
+    * receive its own dynamic filter).
     */
   private[sources] def filesForSourceValuesField(m: Manifest, idx: Int,
       vals: Seq[(Any, DataType)]): Seq[FileEntry] = {
@@ -3485,18 +3424,8 @@ object SnapStore {
     // ROW-LINEAGE carry (Iceberg v3): bin-packing reorders rows, so
     // derived `first_row_id + _pos` ids would change — MATERIALIZE
     // each row's id and last-updated sequence into the rewritten
-    // files instead (from the source file's derivation, or its own
-    // materialized columns if it was itself a compaction output).
-    // When any source carries lineage and the names are free;
-    // no-lineage sources serve NULL for both columns (see
-    // [[lineageScan]] — never fabricate, never re-stamp).
-    val linFields = Seq(
-      StructField("_row_id", LongType, nullable = true),
-      StructField("_last_updated_sequence_number", LongType,
-        nullable = true))
-    val lineageable =
-      multis.flatten.exists(f => f.firstRowId >= 0L || f.lineage) &&
-      linFields.forall(lf => !cur.schema.fieldNames.contains(lf.name))
+    // files instead ([[scanWithLineage]]).
+    val lineageable = carriesLineage(cur, multis.flatten)
     val rewritten: Seq[FileEntry] =
       if (multis.isEmpty) Seq.empty
       else {
@@ -3516,25 +3445,11 @@ object SnapStore {
         // DELETE-AWARE: pending deletes applicable to a rewritten
         // file fold into its bin's output (a plain scan would
         // resurrect the suppressed rows).
-        val scanned0 = scanWithDeletes(spark, table, cur,
-          multis.flatten.toSeq,
-          lineageFields = if (lineageable) linFields else Seq.empty)
+        val binFiles = multis.flatten
         val scanned =
-          if (!lineageable) scanned0
-          else {
-            val lin = multis.flatten.toSeq
-              .map(f => (fileName(f.path), f.firstRowId,
-                if (f.firstRowId >= 0L) Some(f.seq.toLong) else None))
-              .toDF("__fname0", "__fr", "__fseq")
-            scanned0
-              .join(broadcast(lin), col("__fn") === col("__fname0"))
-              .withColumn("_row_id", coalesce(col("_row_id"),
-                when(col("__fr") >= 0L, col("__fr") + col("__ri"))))
-              .withColumn("_last_updated_sequence_number",
-                coalesce(col("_last_updated_sequence_number"),
-                  col("__fseq")))
-              .drop("__fname0", "__fr", "__fseq", "__ri")
-          }
+          if (lineageable) scanWithLineage(spark, table, cur, binFiles)
+          else scanWithDeletes(spark, table, cur, binFiles,
+            cur.schema.fieldNames.toSeq :+ "__fn")
         scanned
           .withColumnRenamed("__fn", "__fname")
           .join(broadcast(binMap), Seq("__fname"))
@@ -3713,14 +3628,6 @@ object SnapStore {
     rewriteClustered(spark, table, partCol,
       Seq(zorderExpr(zCols.map(col), bits)), numFiles)
 
-  /** Snapshot expiry: keep the newest `keepLast` snapshots, delete
-    * older manifests, then delete any data file referenced ONLY by
-    * the expired snapshots (orphan cleanup). Live reads — including
-    * every BRANCH head and tagged snapshot — are untouched: their
-    * files stay in the keep set. Expired `VERSION AS OF` reads fail
-    * with the missing-snapshot error from [[manifest]]. Returns
-    * (expired versions, deleted data files).
-    */
   /** Rebalance the manifest-list grouping — Iceberg's
     * `rewrite_manifests`: a METADATA-ONLY commit listing the same
     * files, delete set, and evolutions, but regrouped into even
@@ -3741,6 +3648,14 @@ object SnapStore {
     }
   }
 
+  /** Snapshot expiry: keep the newest `keepLast` snapshots, delete
+    * older manifests, then delete any data file referenced ONLY by
+    * the expired snapshots (orphan cleanup). Live reads — including
+    * every BRANCH head and tagged snapshot — are untouched: their
+    * files stay in the keep set. Expired `VERSION AS OF` reads fail
+    * with the missing-snapshot error from [[manifest]]. Returns
+    * (expired versions, deleted data files).
+    */
   def expire(table: Path, keepLast: Int): (Seq[Int], Seq[String]) = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val vs = liveVersions(table)
@@ -4147,6 +4062,13 @@ object SnapStore {
           "under a fresh id (duplicate WAP commit)")
     }
 
+  /** The operation tag a publish of wap id `id` stamps into its main
+    * commit — the DURABLE already-published record
+    * [[cherrypickSnapshot]]'s idempotence checks (Iceberg records the
+    * wap id in the snapshot summary for the same ancestry check).
+    */
+  private def cherrypickOp(id: String): String = s"cherrypick-$id"
+
   /** Publish an id-staged snapshot onto the CURRENT main head —
     * Iceberg's `cherrypick_snapshot` / `publish_changes`: the staged
     * chain's ADDED files append to main's head as one new commit
@@ -4159,13 +4081,6 @@ object SnapStore {
     * appends and dynamic overwrites, same fence). The staging branch
     * drops after a successful publish.
     */
-  /** The operation tag a publish of wap id `id` stamps into its main
-    * commit — the DURABLE already-published record
-    * [[cherrypickSnapshot]]'s idempotence checks (Iceberg records the
-    * wap id in the snapshot summary for the same ancestry check).
-    */
-  private def cherrypickOp(id: String): String = s"cherrypick-$id"
-
   def cherrypickSnapshot(spark: SparkSession, table: Path,
       id: String): Manifest = {
     val b = wapStageBranch(id)
@@ -4535,12 +4450,6 @@ object SnapStore {
     (dropped.toSeq, deadTags, trimmed.toMap)
   }
 
-  /** Schema evolution: `ADD COLUMN` is a pure metadata commit — the
-    * new manifest lists the SAME data files under the widened
-    * schema; historical files lack the column and read as nulls,
-    * new appends carry it. No data is rewritten, exactly Iceberg's
-    * evolution contract.
-    */
   /** Old (pre-rename) column names still APPLICABLE to at least one
     * live data file: [[readSchemaFor]] inverts those renames when
     * reading that file, so the old name is still claimed in some
@@ -4553,6 +4462,12 @@ object SnapStore {
       .filter(e => e.kind == "rename" && cur.files.exists(_.seq < e.seq))
       .map(_.col).toSet
 
+  /** Schema evolution: `ADD COLUMN` is a pure metadata commit — the
+    * new manifest lists the SAME data files under the widened
+    * schema; historical files lack the column and read as nulls,
+    * new appends carry it. No data is rewritten, exactly Iceberg's
+    * evolution contract.
+    */
   def addColumn(table: Path, field: StructField): Manifest =
     addColumnImpl(table, field, None)
 
@@ -4784,7 +4699,7 @@ object SnapStore {
       // decimals) DIFFERENTLY — after an int→long widen, re-bucketing
       // a predicate value under the new type lands in a different
       // bucket than the stored pre-widen bounds, and every prune
-      // (probeCandidates / filesForSourceValues) silently skips files
+      // (probeCandidates / filesForSourceValuesField) silently skips files
       // that hold matching rows: DELETE/UPDATE/MERGE would drop rows.
       // The spec string is unchanged by a widen so the spec-mismatch
       // guard never fires; refuse instead, unless the promotion is

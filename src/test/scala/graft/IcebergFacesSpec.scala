@@ -814,72 +814,61 @@ class IcebergFacesSpec extends SparkSpec {
     SnapStore.create(spark, t, docs, "part", keyCol = "doc_id")
     mountAs("metaspec", root)
 
-    // The native route is the DEFAULT (r14): even a clean NON-SPJ
-    // layout (files spanning partition values) serves the metadata
-    // columns out of the box. `spark.graft.read.native=false`
-    // restores the legacy plain-delegate route, which has none —
-    // pinned so the opt-out stays honest.
+    // The catalog's one read route serves the metadata columns for
+    // every snapshot with files, even a clean NON-SPJ layout (files
+    // spanning partition values).
     val t2 = root.resolve("t2")
     SnapStore.create(spark, t2, docs, "part",
       clusterExprs = Seq(pmod(col("doc_id"), lit(5L))))
     val m2 = SnapStore.currentManifest(t2)
     assert(m2.files.exists(f => f.partMin != f.partMax),
       "fixture must be non-SPJ (multi-valued files)")
-    spark.conf.set("spark.graft.read.native", "false")
-    try {
-      intercept[Exception] {
-        spark.sql("SELECT _file FROM graft.metaspec.t2 LIMIT 1").collect()
-      }
-    } finally spark.conf.unset("spark.graft.read.native")
-    spark.conf.set("spark.graft.read.native", "true")
-    try {
-      assert(spark.sql("SELECT COUNT(DISTINCT _file) AS n " +
-        "FROM graft.metaspec.t2").collect()(0).getLong(0)
-        == m2.files.size.toLong)
-      val m = SnapStore.currentManifest(t)
-      def pathOf(fp: String): String = t.resolve(fp).toString
-      val perFile: Map[String, (Long, Long, Long)] = spark.sql(
-        "SELECT _file, COUNT(*) AS n, MAX(_pos) AS mx, " +
-          "COUNT(DISTINCT _pos) AS d FROM graft.metaspec.t GROUP BY _file")
-        .collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
-          r.getLong(3))))
-        .toMap
-      assert(perFile.keySet == m.files.map(f => pathOf(f.path)).toSet,
-        "_file values must be exactly the resolved manifest file paths")
-      m.files.foreach { f =>
-        val (n, mx, d) = perFile(pathOf(f.path))
-        assert(n == f.rows && d == n && mx == n - 1,
-          s"${f.path}: ordinals must be dense 0..${f.rows - 1}")
-      }
+    assert(spark.sql("SELECT COUNT(DISTINCT _file) AS n " +
+      "FROM graft.metaspec.t2").collect()(0).getLong(0)
+      == m2.files.size.toLong)
+    val m = SnapStore.currentManifest(t)
+    def pathOf(fp: String): String = t.resolve(fp).toString
+    val perFile: Map[String, (Long, Long, Long)] = spark.sql(
+      "SELECT _file, COUNT(*) AS n, MAX(_pos) AS mx, " +
+        "COUNT(DISTINCT _pos) AS d FROM graft.metaspec.t GROUP BY _file")
+      .collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
+        r.getLong(3))))
+      .toMap
+    assert(perFile.keySet == m.files.map(f => pathOf(f.path)).toSet,
+      "_file values must be exactly the resolved manifest file paths")
+    m.files.foreach { f =>
+      val (n, mx, d) = perFile(pathOf(f.path))
+      assert(n == f.rows && d == n && mx == n - 1,
+        s"${f.path}: ordinals must be dense 0..${f.rows - 1}")
+    }
 
-      // _partition/_spec: per-file constants from the manifest — the
-      // SPJ-layout table's files are single-valued, so _partition is
-      // the rendered transformed value and _spec the write spec.
-      val pv = spark.sql("SELECT DISTINCT _partition, _spec " +
-        "FROM graft.metaspec.t").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(pv == m.files.map(f => (f.partMin, f.specCol)).toSet)
-      assert(pv.forall(_._2 == "part"))
-      // The loosely-clustered t2's files span partition values:
-      // _partition is NULL there (honest unknown), _spec still set.
-      assert(spark.sql("SELECT COUNT(*) AS n FROM graft.metaspec.t2 " +
-        "WHERE _partition IS NULL").collect()(0).getLong(0) > 0)
+    // _partition/_spec: per-file constants from the manifest — the
+    // SPJ-layout table's files are single-valued, so _partition is
+    // the rendered transformed value and _spec the write spec.
+    val pv = spark.sql("SELECT DISTINCT _partition, _spec " +
+      "FROM graft.metaspec.t").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(pv == m.files.map(f => (f.partMin, f.specCol)).toSet)
+    assert(pv.forall(_._2 == "part"))
+    // The loosely-clustered t2's files span partition values:
+    // _partition is NULL there (honest unknown), _spec still set.
+    assert(spark.sql("SELECT COUNT(*) AS n FROM graft.metaspec.t2 " +
+      "WHERE _partition IS NULL").collect()(0).getLong(0) > 0)
 
-      // A position delete suppresses exactly its named ordinals: the
-      // surviving (_file, _pos) pairs are the complement.
-      SnapStore.deletePositions(spark, t,
-        pmod(col("doc_id"), lit(7L)) === 0)
-      val survivors = spark.sql(
-        "SELECT _file, _pos FROM graft.metaspec.t").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-      val deletedPairs = spark
-        .table("graft.metaspec.t.position_deletes")
-        .select(col("file"), col("pos")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(survivors.intersect(deletedPairs).isEmpty)
-      assert(survivors.size + deletedPairs.size == docs.count())
-    } finally spark.conf.unset("spark.graft.read.native")
+    // A position delete suppresses exactly its named ordinals: the
+    // surviving (_file, _pos) pairs are the complement.
+    SnapStore.deletePositions(spark, t,
+      pmod(col("doc_id"), lit(7L)) === 0)
+    val survivors = spark.sql(
+      "SELECT _file, _pos FROM graft.metaspec.t").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val deletedPairs = spark
+      .table("graft.metaspec.t.position_deletes")
+      .select(col("file"), col("pos")).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(survivors.intersect(deletedPairs).isEmpty)
+    assert(survivors.size + deletedPairs.size == docs.count())
   }
 
   // ----------------------------------------------------------------

@@ -128,15 +128,12 @@ class RowLineageSpec extends SparkSpec {
     val t = root.resolve("t")
     SnapStore.create(spark, t, docs.filter(col("doc_id") < 40), "part")
     mountAs("lineage2", root)
-    spark.conf.set("spark.graft.read.native", "true")
-    try {
-      val rows = spark.sql(
-        """SELECT COUNT(DISTINCT _row_id) AS ids,
-          |  COUNT(*) AS n, MAX(_last_updated_sequence_number) AS mx
-          |FROM graft.lineage2.t""".stripMargin).collect()(0)
-      assert(rows.getLong(0) == 40L && rows.getLong(1) == 40L &&
-        rows.getLong(2) == 1L)
-    } finally spark.conf.unset("spark.graft.read.native")
+    val rows = spark.sql(
+      """SELECT COUNT(DISTINCT _row_id) AS ids,
+        |  COUNT(*) AS n, MAX(_last_updated_sequence_number) AS mx
+        |FROM graft.lineage2.t""".stripMargin).collect()(0)
+    assert(rows.getLong(0) == 40L && rows.getLong(1) == 40L &&
+      rows.getLong(2) == 1L)
   }
 
   // ----------------------------------------------------------------

@@ -26,6 +26,15 @@ class RunnerSpec extends SparkSpec {
     assert(names === Seq("q01_agg", "q02_count", "q03_bad"))
   }
 
+  test("a query or sweep directory that does not exist throws, naming it") {
+    val missing = Files.createTempDirectory("graft-nodir")
+      .resolve("no-such-dir").toString
+    val q = intercept[IllegalArgumentException](Runner.discoverQueries(missing))
+    assert(q.getMessage.contains(missing))
+    val sw = intercept[IllegalArgumentException](Runner.listSfDirs(missing))
+    assert(sw.getMessage.contains(missing))
+  }
+
   test("templating replaces placeholders verbatim") {
     assert(Runner.template("USE ${database}.${schema}; SELECT '${database}'", "cat", "db")
       === "USE cat.db; SELECT 'cat'")
