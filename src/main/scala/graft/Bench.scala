@@ -32,7 +32,6 @@ object Bench {
         .asScala.map(_.getCollectionTime.max(0L)).sum
     }
     val gcTimes = mutable.Map.empty[String, mutable.Buffer[Long]]
-    val buildTimes = mutable.Map.empty[String, mutable.Buffer[Double]]
     // Calibration probe (VERDICT r13 #8): a CONSTANT CPU-bound query
     // run first and last in every pass. Its wall time has no plan or
     // data dependence, so a contended box self-identifies numerically
@@ -59,18 +58,12 @@ object Bench {
         // Materialize through the noop sink — same execution semantics
         // as the reference harness (IcebergBenchmark.java:183): every
         // projected column is computed, nothing is pruned above a
-        // count(1), final sorts run. The construction/action split is
-        // recorded per rep (VERDICT r16 #9): maintenance entries run
-        // their table LIFECYCLE (DML commits, manifest IO) inside fn(),
-        // so build_sec ≈ commit/IO cost and the remainder is the final
-        // read's plan time. runEntry clears cached frames after each
-        // entry, so storage memory and the ContextCleaner backlog don't
-        // accumulate across the suite and distort later measurements.
+        // count(1), final sorts run. runEntry clears cached frames
+        // after each entry, so storage memory and the ContextCleaner
+        // backlog don't accumulate across the suite and distort later
+        // measurements.
         val dt = try {
-          val (build, total) =
-            GraftSession.runEntry(spark, fn, sfDir)(GraftSession.noop)
-          buildTimes.getOrElseUpdate(name, mutable.Buffer.empty) += build
-          total
+          GraftSession.runEntry(spark, fn, sfDir)(GraftSession.noop)._2
         } catch { case e: Throwable =>
           failed += name
           System.err.println(s"[bench] $name FAILED (rep $rep): ${e.getMessage}")
@@ -119,16 +112,13 @@ object Bench {
       .mkString("{", ",", "}")
     val qsMin = perQueryMin.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // Median construction seconds for the maintenance lifecycles
-    // (VERDICT r16 #9): the entry's bench seconds minus this is the
-    // final read's plan time; the build side is the commit/manifest
-    // IO a storage-layer round would target.
-    val maintAttr = named.map(_._1)
-      .filter(n => n.startsWith("maint_") || n.startsWith("stream_"))
-      .map { name =>
-        val b = buildTimes.getOrElse(name, mutable.Buffer(0.0)).toSeq
-        s"\"" + name + "\":" + f"${median(b)}%.3f"
-      }.mkString("{", ",", "}")
+    // Per maintenance lifecycle, the seconds its steps (commits and
+    // their checks) ran in this JVM: the table-building share of the
+    // entries' first pass, 0 when a warm `graft-snap` root already
+    // held the lifecycle.
+    val maintAttr = graft.ops.Maintenance.buildSeconds.toSeq.sorted
+      .map { case (name, sec) => s"\"" + name + "\":" + f"$sec%.3f" }
+      .mkString("{", ",", "}")
     val total = perQuery.map(_._2).sum
     val passTotals = passes.map(_.map(_._2).sum)
       .map(t => f"$t%.1f").mkString("[", ",", "]")

@@ -100,6 +100,23 @@ object GraftSession {
     } finally spark.catalog.clearCache()
   }
 
+  /** Runs `body` with the given session confs set, then puts each key
+    * back as it was: its prior value, or unset when it was not set
+    * before. The prior values come from `getAll`, which lists only the
+    * keys that are set (`RuntimeConfig.contains` is `private[sql]`);
+    * `getOption` would return an unset key's default and leave it set
+    * afterwards.
+    */
+  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val set = spark.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Materialize every row and column without keeping any — the
     * reference harness's `noop` sink (IcebergBenchmark.java:183). */
   def noop(df: DataFrame): Unit =

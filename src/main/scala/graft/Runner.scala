@@ -214,30 +214,24 @@ object Runner {
       catalog: String,
       runId: String,
       listener: Option[MetricListener] = None): Seq[Row] = {
-    // Restore the pre-grid variant confs afterwards (ADVICE r4): the
-    // grid must not leave the session pinned on its LAST variant
-    // (GRPC + catalog-routed), silently changing the IO path of any
-    // suite run that follows in the same session.
-    val variantKeys = Seq(
-      s"spark.sql.catalog.$catalog.gcs.analytics-core.enabled",
-      s"spark.sql.catalog.$catalog.gcs.client.type")
-    val saved = variantKeys.map(k => k -> spark.conf.getOption(k))
+    // Each variant's confs are set only for its own sweep (ADVICE
+    // r4): the grid must not leave the session pinned on its LAST
+    // variant (GRPC + catalog-routed), silently changing the IO path
+    // of any suite run that follows in the same session.
     val savedNs = spark.sql("SELECT current_catalog(), current_schema()")
       .head()
     try clientVariants.flatMap { case (_, enabled, client) =>
-      spark.conf.set(
-        s"spark.sql.catalog.$catalog.gcs.analytics-core.enabled", enabled.toString)
-      spark.conf.set(s"spark.sql.catalog.$catalog.gcs.client.type", client)
-      if (enabled && spark.conf.getOption(s"spark.sql.catalog.$catalog").isEmpty)
-        spark.conf.set(s"spark.sql.catalog.$catalog", "graft.sources.GraftCatalog")
-      val database = if (enabled) catalog else "spark_catalog"
-      runSweep(spark, sfRoot, suites, database, runId, listener,
-        confFlags(spark, catalog))
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+      GraftSession.withConf(spark,
+        s"spark.sql.catalog.$catalog.gcs.analytics-core.enabled" ->
+          enabled.toString,
+        s"spark.sql.catalog.$catalog.gcs.client.type" -> client) {
+        if (enabled && spark.conf.getOption(s"spark.sql.catalog.$catalog").isEmpty)
+          spark.conf.set(s"spark.sql.catalog.$catalog", "graft.sources.GraftCatalog")
+        val database = if (enabled) catalog else "spark_catalog"
+        runSweep(spark, sfRoot, suites, database, runId, listener,
+          confFlags(spark, catalog))
       }
+    } finally {
       // The grid's suites issue `USE <catalog>.<db>` per pass;
       // restoring the confs without the CURRENT CATALOG/NAMESPACE
       // would leave the session pinned on the last variant's (DSv2)

@@ -2,7 +2,10 @@ package graft.ops
 
 import java.nio.file.{Files, Path, Paths}
 
-import graft.{Q, Tables}
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+
+import graft.{GraftSession, Q, Tables}
 import graft.sources.SnapStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,6 +22,11 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * table back and aggregates it for the DuckDB oracle, which computes
   * the same final contents LOGICALLY from the raw fixture — proving
   * the physical file surgery preserved exactly the right rows.
+  *
+  * A lifecycle is data ([[Lifecycle]]): its steps in order, each
+  * keyed on the table state it moves from. One driver ([[drive]])
+  * runs all of them under one lock, after one `maint` mount, and
+  * times the steps that run ([[buildSeconds]]).
   *
   * The per-part checksum is an order-independent `SUM(fold_hash
   * (text))`: file boundaries, bin-packing, and rewrite order cannot
@@ -89,62 +97,131 @@ object Maintenance {
   }
 
   // ----------------------------------------------------------------
-  // Deterministic lifecycles (idempotent: each step keys off the
-  // table's current version, so any entry order / re-run converges
-  // on the same final state).
+  // Deterministic lifecycles. Every step keys off the state it moves
+  // its table from, so any entry order, re-run, or resume after a
+  // build cut between two steps converges on the same final state.
+
+  /** One step of a lifecycle, run by [[drive]] while it is due. A
+    * [[Next]] step moves `table`'s main on: it is due while main is
+    * at version k − 1, k being its rank among the lifecycle's steps
+    * on `table` (k = 1: the table does not exist yet). A [[DueIf]]
+    * step is keyed on other state — a branch head, the live
+    * versions, the partition stats, a tag, a marker or alias file —
+    * and is due while `due` holds.
+    */
+  private[graft] sealed trait Step { def run: () => Unit }
+  private[graft] final case class Next(table: Path, run: () => Unit)
+    extends Step
+  private[graft] final case class DueIf(due: () => Boolean, run: () => Unit)
+    extends Step
+
+  private def next(t: Path)(body: => Unit): Step = Next(t, () => body)
+  private def dueIf(due: => Boolean)(body: => Unit): Step =
+    DueIf(() => due, () => body)
+
+  /** A lifecycle: the name its build seconds are reported under, its
+    * steps in order, and what its `ensure*` returns.
+    */
+  private[graft] final case class Lifecycle[A](name: String,
+      steps: Seq[Step], result: A)
+
+  /** The lifecycle of the one table `maint.<name>`. */
+  private def lifecycle(dir: String, name: String)(
+      steps: Path => Seq[Step]): Lifecycle[Path] = {
+    val t = root(dir).resolve(name)
+    Lifecycle(name, steps(t), t)
+  }
+
+  /** One [[Next]] step per key: the first creates `t` from
+    * `slice(key)`, every other appends its slice — one commit per
+    * slice, so each file holds one slice and a cut build resumes at
+    * the next one.
+    */
+  private def slices[K](s: SparkSession, t: Path, spec: String,
+      numFiles: Int = 8)(keys: Seq[K])(slice: K => DataFrame): Seq[Step] =
+    keys.zipWithIndex.map { case (k, i) => next(t)(
+      if (i == 0) SnapStore.create(s, t, slice(k), spec, numFiles)
+      else SnapStore.append(s, t, slice(k), spec, numFiles))
+    }
+
+  private val built = TrieMap.empty[String, Double]
+
+  /** Per lifecycle driven in this JVM, the seconds spent in its steps
+    * that ran — 0 for a lifecycle that was already built.
+    */
+  def buildSeconds: Map[String, Double] = built.readOnlySnapshot().toMap
+
+  /** The one lifecycle driver: under the object's lock, mounts
+    * `maint`, runs every due step of `lc` in order, timing each one
+    * that runs, and returns `lc.result`.
+    */
+  private[graft] def drive[A](s: SparkSession, dir: String,
+      lc: Lifecycle[A]): A = synchronized {
+    mount(s, dir)
+    val rank = mutable.Map.empty[Path, Int].withDefaultValue(0)
+    val secs = lc.steps.map { step =>
+      val due = step match {
+        case Next(t, _) =>
+          rank(t) += 1
+          SnapStore.currentVersion(t).getOrElse(0) == rank(t) - 1
+        case DueIf(p, _) => p()
+      }
+      if (!due) 0.0 else {
+        val t0 = System.nanoTime()
+        step.run()
+        (System.nanoTime() - t0) / 1e9
+      }
+    }
+    built(lc.name) = built.getOrElse(lc.name, 0.0) + secs.sum
+    lc.result
+  }
 
   /** `docs`: v1 create → v2 MERGE (parts {1,5} copy-on-write) →
     * expire all but the merged snapshot. Expiry deletes exactly the
     * v1 files the merge rewrote away (untouched-part files stay —
     * they are referenced by the live v2 manifest).
     */
-  def ensureDocs(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.merge(s, t, changes(s, dir), "doc_id", partCol)
-    if (SnapStore.liveVersions(t) != Seq(2))
-      SnapStore.expire(t, keepLast = 1)
-    mount(s, dir)
-    t
-  }
+  private[graft] def docs(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t)(SnapStore.merge(s, t, changes(s, dir), "doc_id", partCol)),
+      dueIf(SnapStore.liveVersions(t) != Seq(2))(
+        SnapStore.expire(t, keepLast = 1)))
+    }
+  def ensureDocs(s: SparkSession, dir: String): Path = drive(s, dir, docs(s, dir))
 
   /** `docs_frag`: v1 deliberately fragmented create (clustered by
     * `(part, doc_id % 4)` → ~4 small files per partition) → v2
     * bin-pack compaction to ≈¼ of the total table size per file.
     */
-  def ensureDocsFrag(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_frag")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, numFiles = 32,
-        clusterExprs = Seq(col(partCol), pmod(col("doc_id"), lit(4L))))
-    if (SnapStore.currentVersion(t).contains(1)) {
-      val total = SnapStore.currentManifest(t).files.map(_.bytes).sum
-      SnapStore.compact(s, t, partCol, targetBytes = total / 4 + 1)
+  private[graft] def docsFrag(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_frag") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, numFiles = 32,
+        clusterExprs = Seq(col(partCol), pmod(col("doc_id"), lit(4L))))),
+      next(t) {
+        val total = SnapStore.currentManifest(t).files.map(_.bytes).sum
+        SnapStore.compact(s, t, partCol, targetBytes = total / 4 + 1)
+      })
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsFrag(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsFrag(s, dir))
 
   /** `docs_del`: v1 create → v2 copy-on-write DELETE of every
     * seventh doc of partition 3 — the delete set is confined to one
     * partition, so seven of eight partitions' files are provably
     * untouched by the rewrite.
     */
-  def ensureDocsDel(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_del")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.delete(s, t,
+  private[graft] def docsDel(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_del") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t)(SnapStore.delete(s, t,
         base(s, dir).filter(col(partCol) === 3 &&
           pmod(col("doc_id"), lit(7L)) === 0)
           .select(col("doc_id"), col(partCol)),
-        "doc_id", partCol)
-    mount(s, dir)
-    t
-  }
+        "doc_id", partCol)))
+    }
+  def ensureDocsDel(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsDel(s, dir))
 
   /** `docs_sort`: v1 create clustered by partition only (sources
     * scattered across every file) → v2 sort-order rewrite clustered
@@ -153,16 +230,14 @@ object Maintenance {
     * boundaries split inside partitions and the per-file source
     * spans provably tighten (MaintenanceSpec).
     */
-  def ensureDocsSort(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_sort")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, numFiles = 16)
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.rewriteClustered(s, t, partCol, Seq(col("source")),
-        numFiles = 16)
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsSort(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_sort") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, numFiles = 16)),
+      next(t)(SnapStore.rewriteClustered(s, t, partCol, Seq(col("source")),
+        numFiles = 16)))
+    }
+  def ensureDocsSort(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsSort(s, dir))
 
   /** `docs_pevo`: partition-spec evolution lifecycle. v1 create
     * partitioned by `part` → v2 `evolveSpec("tok")` (pure metadata —
@@ -173,25 +248,22 @@ object Maintenance {
     * band (re-sourced `srcE2`): bound-based pruning bites again —
     * files whose tok range lies below the band carry untouched.
     */
-  def ensureDocsPevo(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_pevo")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol)
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.evolveSpec(t, "tok")
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.merge(s, t,
-        b.filter(pmod(col("doc_id"), lit(13L)) === 0)
-          .withColumn("source", lit("srcE1")),
-        "doc_id", "tok")
-    if (SnapStore.currentVersion(t).contains(3))
-      SnapStore.merge(s, t,
-        b.filter(col("tok") >= 80L).withColumn("source", lit("srcE2")),
-        "doc_id", "tok")
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsPevo(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_pevo") { t =>
+      lazy val b = base(s, dir)
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol)),
+        next(t)(SnapStore.evolveSpec(t, "tok")),
+        next(t)(SnapStore.merge(s, t,
+          b.filter(pmod(col("doc_id"), lit(13L)) === 0)
+            .withColumn("source", lit("srcE1")),
+          "doc_id", "tok")),
+        next(t)(SnapStore.merge(s, t,
+          b.filter(col("tok") >= 80L).withColumn("source", lit("srcE2")),
+          "doc_id", "tok")))
+    }
+  def ensureDocsPevo(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsPevo(s, dir))
 
   /** `docs_mor`: merge-on-read lifecycle. v1 create → v2 equality
     * DELETE of every seventeenth doc as a delete FILE (zero data
@@ -200,20 +272,17 @@ object Maintenance {
     * `applyDeletes` folds the deletes into rewritten data files and
     * clears the pending set, restoring plain-scan reads.
     */
-  def ensureDocsMor(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_mor")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol)
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.deleteEquality(s, t,
+  private[graft] def docsMor(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_mor") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol)),
+      next(t)(SnapStore.deleteEquality(s, t,
         base(s, dir).filter(pmod(col("doc_id"), lit(17L)) === 0)
           .select("doc_id"),
-        "doc_id")
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.applyDeletes(s, t, partCol)
-    mount(s, dir)
-    t
-  }
+        "doc_id")),
+      next(t)(SnapStore.applyDeletes(s, t, partCol)))
+    }
+  def ensureDocsMor(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsMor(s, dir))
 
   /** `docs_rb`: tag + rollback lifecycle. v1 create, tagged
     * `baseline` → v2 copy-on-write DELETE (the "bad commit") → v3
@@ -221,43 +290,38 @@ object Maintenance {
     * listing v1's files — current reads see the pre-delete contents
     * again while the bad commit stays in history for inspection.
     */
-  def ensureDocsRb(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_rb")
-    if (SnapStore.currentVersion(t).isEmpty) {
-      SnapStore.create(s, t, base(s, dir), partCol)
-      SnapStore.tag(t, "baseline", 1)
-    }
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.delete(s, t,
+  private[graft] def docsRb(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_rb") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol)),
+      dueIf(SnapStore.currentVersion(t).contains(1) &&
+        !SnapStore.tags(t).contains("baseline"))(
+        SnapStore.tag(t, "baseline", 1)),
+      next(t)(SnapStore.delete(s, t,
         base(s, dir).filter(col(partCol) === 2 &&
           pmod(col("doc_id"), lit(9L)) === 0)
           .select(col("doc_id"), col(partCol)),
-        "doc_id", partCol)
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.rollback(t, SnapStore.resolveVersion(t, "baseline"))
-    mount(s, dir)
-    t
-  }
+        "doc_id", partCol)),
+      next(t)(SnapStore.rollback(t, SnapStore.resolveVersion(t, "baseline"))))
+    }
+  def ensureDocsRb(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsRb(s, dir))
 
   /** `docs_evo`: v1 create WITHOUT the `tok` column over 80% of docs
     * → v2 `ADD COLUMN tok` (pure metadata — old files read it as
     * null) → v3 append the remaining 20% WITH `tok` populated.
     */
-  def ensureDocsEvo(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_evo")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t,
+  private[graft] def docsEvo(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_evo") { t => Seq(
+      next(t)(SnapStore.create(s, t,
         base(s, dir).filter(pmod(col("doc_id"), lit(5L)) =!= 0)
           .drop("tok"),
-        partCol)
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.addColumn(t, StructField("tok", LongType))
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.append(s, t,
-        base(s, dir).filter(pmod(col("doc_id"), lit(5L)) === 0), partCol)
-    mount(s, dir)
-    t
-  }
+        partCol)),
+      next(t)(SnapStore.addColumn(t, StructField("tok", LongType))),
+      next(t)(SnapStore.append(s, t,
+        base(s, dir).filter(pmod(col("doc_id"), lit(5L)) === 0), partCol)))
+    }
+  def ensureDocsEvo(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsEvo(s, dir))
 
   /** `docs_morm`: merge-on-read MERGE lifecycle (Iceberg v2
     * `write.merge.mode = merge-on-read`). v1 create (key bounds
@@ -268,25 +332,24 @@ object Maintenance {
     * deliberately STAYS in its pending-delete state so the oracled
     * read exercises the sequence-scoped MOR read path itself.
     */
-  def ensureDocsMorm(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_morm")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1)) {
-      val b = base(s, dir)
-      val upd = b.filter(col(partCol) === 2 && pmod(col("doc_id"), lit(3L)) === 0)
-        .withColumn("text", concat(col("text"), lit(" m2")))
-      val ins = b.filter(col(partCol) === 6 && pmod(col("doc_id"), lit(13L)) === 6)
-        .withColumn("doc_id", col("doc_id") + 200000L)
-        .withColumn("source", lit("srcR"))
-      SnapStore.mergeEquality(s, t,
-        upd.unionByName(ins)
-          .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)")),
-        "doc_id")
+  private[graft] def docsMorm(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_morm") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t) {
+        val b = base(s, dir)
+        val upd = b.filter(col(partCol) === 2 && pmod(col("doc_id"), lit(3L)) === 0)
+          .withColumn("text", concat(col("text"), lit(" m2")))
+        val ins = b.filter(col(partCol) === 6 && pmod(col("doc_id"), lit(13L)) === 6)
+          .withColumn("doc_id", col("doc_id") + 200000L)
+          .withColumn("source", lit("srcR"))
+        SnapStore.mergeEquality(s, t,
+          upd.unionByName(ins)
+            .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)")),
+          "doc_id")
+      })
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsMorm(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsMorm(s, dir))
 
   /** `docs_pos`: position-delete lifecycle (Iceberg v2's second
     * delete flavor). v1 create → v2 `deletePositions` of every third
@@ -296,16 +359,14 @@ object Maintenance {
     * (spec-pinned). Stays pending so the oracled read exercises the
     * position-scoped read path.
     */
-  def ensureDocsPos(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_pos")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.deletePositions(s, t,
-        col(partCol) === 4 && pmod(col("doc_id"), lit(3L)) === 0)
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsPos(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_pos") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t)(SnapStore.deletePositions(s, t,
+        col(partCol) === 4 && pmod(col("doc_id"), lit(3L)) === 0)))
+    }
+  def ensureDocsPos(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsPos(s, dir))
 
   /** `docs_br`: branch + fast-forward lifecycle (Iceberg branch
     * refs). v1 create → branch `ingest` forks → the branch takes an
@@ -314,25 +375,24 @@ object Maintenance {
     * main's v2 — the audit-then-publish pattern the pipeline
     * entries' eval/train snapshot workflows model.
     */
-  def ensureDocsBr(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_br")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.branchHead(t, "ingest").isEmpty &&
-      SnapStore.currentVersion(t).contains(1))
-      SnapStore.createBranch(t, "ingest")
-    if (SnapStore.branchHead(t, "ingest").contains(1))
-      SnapStore.appendToBranch(s, t, "ingest",
-        base(s, dir).filter(pmod(col("doc_id"), lit(19L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 300000L)
-          .withColumn("source", lit("srcB")),
-        partCol)
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, "ingest").contains(2))
-      SnapStore.fastForward(t, "ingest")
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsBr(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_br") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      dueIf(SnapStore.branchHead(t, "ingest").isEmpty &&
+        SnapStore.currentVersion(t).contains(1))(
+        SnapStore.createBranch(t, "ingest")),
+      dueIf(SnapStore.branchHead(t, "ingest").contains(1))(
+        SnapStore.appendToBranch(s, t, "ingest",
+          base(s, dir).filter(pmod(col("doc_id"), lit(19L)) === 0)
+            .withColumn("doc_id", col("doc_id") + 300000L)
+            .withColumn("source", lit("srcB")),
+          partCol)),
+      dueIf(SnapStore.currentVersion(t).contains(1) &&
+        SnapStore.branchHead(t, "ingest").contains(2))(
+        SnapStore.fastForward(t, "ingest")))
+    }
+  def ensureDocsBr(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsBr(s, dir))
 
   /** `docs_date`: DATE-partitioned lifecycle — the reference's
     * partitioned warehouse is exactly a date-partitioned layout
@@ -342,21 +402,20 @@ object Maintenance {
     * files whose ISO-string date bounds exclude it carry untouched
     * (spec-pinned), the day's rows re-source `srcD`.
     */
-  def ensureDocsDate(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_date")
-    def withDay(df: DataFrame): DataFrame = df.withColumn("day",
-      expr("date_add(DATE'2024-01-01', CAST((doc_id % 12) * 7 AS INT))"))
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, withDay(base(s, dir)), "day", numFiles = 6,
-        keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.merge(s, t,
-        withDay(base(s, dir)).filter(col("day") === to_date(lit("2024-01-22")))
-          .withColumn("source", lit("srcD")),
-        "doc_id", "day")
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsDate(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_date") { t =>
+      def withDay(df: DataFrame): DataFrame = df.withColumn("day",
+        expr("date_add(DATE'2024-01-01', CAST((doc_id % 12) * 7 AS INT))"))
+      Seq(
+        next(t)(SnapStore.create(s, t, withDay(base(s, dir)), "day",
+          numFiles = 6, keyCol = "doc_id")),
+        next(t)(SnapStore.merge(s, t,
+          withDay(base(s, dir)).filter(col("day") === to_date(lit("2024-01-22")))
+            .withColumn("source", lit("srcD")),
+          "doc_id", "day")))
+    }
+  def ensureDocsDate(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsDate(s, dir))
 
   /** `docs_cdc`: changelog lifecycle. v1 create → v2 append (every
     * twenty-third doc re-keyed `+400000`, source `srcC`) → v3 COW
@@ -366,31 +425,28 @@ object Maintenance {
     * pairs, and the delete's DELETEs — with every carried-over row in
     * the rewritten files cancelling out of the file diff.
     */
-  def ensureDocsCdc(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_cdc")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.append(s, t,
-        b.filter(pmod(col("doc_id"), lit(23L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 400000L)
-          .withColumn("source", lit("srcC")),
-        partCol)
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.merge(s, t,
-        b.filter(col(partCol) === 1 && pmod(col("doc_id"), lit(5L)) === 1)
-          .withColumn("text", concat(col("text"), lit(" u2")))
-          .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)")),
-        "doc_id", partCol)
-    if (SnapStore.currentVersion(t).contains(3))
-      SnapStore.delete(s, t,
-        b.filter(col(partCol) === 6 && pmod(col("doc_id"), lit(9L)) === 6)
-          .select(col("doc_id"), col(partCol)),
-        "doc_id", partCol)
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsCdc(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_cdc") { t =>
+      lazy val b = base(s, dir)
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol, keyCol = "doc_id")),
+        next(t)(SnapStore.append(s, t,
+          b.filter(pmod(col("doc_id"), lit(23L)) === 0)
+            .withColumn("doc_id", col("doc_id") + 400000L)
+            .withColumn("source", lit("srcC")),
+          partCol)),
+        next(t)(SnapStore.merge(s, t,
+          b.filter(col(partCol) === 1 && pmod(col("doc_id"), lit(5L)) === 1)
+            .withColumn("text", concat(col("text"), lit(" u2")))
+            .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)")),
+          "doc_id", partCol)),
+        next(t)(SnapStore.delete(s, t,
+          b.filter(col(partCol) === 6 && pmod(col("doc_id"), lit(9L)) === 6)
+            .select(col("doc_id"), col(partCol)),
+          "doc_id", partCol)))
+    }
+  def ensureDocsCdc(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsCdc(s, dir))
 
   /** `docs_dml`: SQL-DML lifecycle. v1 create → v2 `DELETE FROM
     * graft.maint.docs_dml WHERE part = 5 AND tok >= 60` issued as
@@ -399,37 +455,30 @@ object Maintenance {
     * which commits a copy-on-write delete rewriting only the files
     * that held matches.
     */
-  def ensureDocsDml(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_dml")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1)) {
-      mount(s, dir)
-      s.sql("DELETE FROM graft.maint.docs_dml WHERE part = 5 AND tok >= 60")
+  private[graft] def docsDml(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_dml") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t)(
+        s.sql("DELETE FROM graft.maint.docs_dml WHERE part = 5 AND tok >= 60")))
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsDml(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsDml(s, dir))
 
   /** `docs_ins`: SQL-INSERT lifecycle. v1 create → v2 `INSERT INTO
     * graft.maint.docs_ins SELECT …` re-keying every twenty-ninth doc
     * (`+500000`, source `srcI`) from the table itself — the append
     * commits through the catalog's DSv2 V1Write bridge.
     */
-  def ensureDocsIns(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_ins")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1)) {
-      mount(s, dir)
-      s.sql(
+  private[graft] def docsIns(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_ins") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t)(s.sql(
         """INSERT INTO graft.maint.docs_ins
           |SELECT doc_id + 500000, part, 'srcI', text, tok
-          |FROM graft.maint.docs_ins WHERE doc_id % 29 = 0""".stripMargin)
+          |FROM graft.maint.docs_ins WHERE doc_id % 29 = 0""".stripMargin)))
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsIns(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsIns(s, dir))
 
   /** `docs_proc`: stored-procedure lifecycle. v1 create → v2 append
     * (every thirty-first doc re-keyed `+600000`, source `srcP`) →
@@ -437,23 +486,19 @@ object Maintenance {
     * the maintenance action driven entirely through the SQL CALL
     * surface.
     */
-  def ensureDocsProc(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_proc")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.append(s, t,
+  private[graft] def docsProc(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_proc") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t)(SnapStore.append(s, t,
         base(s, dir).filter(pmod(col("doc_id"), lit(31L)) === 0)
           .withColumn("doc_id", col("doc_id") + 600000L)
           .withColumn("source", lit("srcP")),
-        partCol)
-    if (SnapStore.currentVersion(t).contains(2)) {
-      mount(s, dir)
-      s.sql("CALL graft.system.rollback_to_snapshot('maint.docs_proc', 1)")
+        partCol)),
+      next(t)(
+        s.sql("CALL graft.system.rollback_to_snapshot('maint.docs_proc', 1)")))
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsProc(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsProc(s, dir))
 
   /** `docs_mrg`: SQL MERGE INTO lifecycle. v1 create → v2 `MERGE
     * INTO graft.maint.docs_mrg` from a derived source view — every
@@ -462,29 +507,27 @@ object Maintenance {
     * (unmatched insert) — Spark's group-based row-level-operation
     * path committing one atomic replace snapshot.
     */
-  def ensureDocsMrg(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_mrg")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1)) {
-      mount(s, dir)
-      val b = base(s, dir)
-      b.filter(pmod(col("doc_id"), lit(37L)) === 2)
-        .withColumn("source", lit("srcQ"))
-        .unionByName(b.filter(pmod(col("doc_id"), lit(41L)) === 3)
-          .withColumn("doc_id", col("doc_id") + 700000L)
-          .withColumn("source", lit("srcN")))
-        .createOrReplaceTempView("graft_merge_src")
-      s.sql(
-        """MERGE INTO graft.maint.docs_mrg t
-          |USING graft_merge_src s
-          |ON t.doc_id = s.doc_id
-          |WHEN MATCHED THEN UPDATE SET t.source = s.source
-          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+  private[graft] def docsMrg(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_mrg") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t) {
+        val b = base(s, dir)
+        b.filter(pmod(col("doc_id"), lit(37L)) === 2)
+          .withColumn("source", lit("srcQ"))
+          .unionByName(b.filter(pmod(col("doc_id"), lit(41L)) === 3)
+            .withColumn("doc_id", col("doc_id") + 700000L)
+            .withColumn("source", lit("srcN")))
+          .createOrReplaceTempView("graft_merge_src")
+        s.sql(
+          """MERGE INTO graft.maint.docs_mrg t
+            |USING graft_merge_src s
+            |ON t.doc_id = s.doc_id
+            |WHEN MATCHED THEN UPDATE SET t.source = s.source
+            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      })
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsMrg(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsMrg(s, dir))
 
   // ----------------------------------------------------------------
   // Registered entries + oracles.
@@ -872,23 +915,17 @@ object Maintenance {
     * exercises the merged routing/refs). Physical claims (file count,
     * identical data files, refs union) are spec-pinned.
     */
-  def ensureDocsRdel(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_rdel")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.deletePositions(s, t,
-        col(partCol) === 3 && pmod(col("doc_id"), lit(5L)) === 0)
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.deletePositions(s, t,
-        col(partCol) === 5 && pmod(col("doc_id"), lit(7L)) === 0)
-    if (SnapStore.currentVersion(t).contains(3)) {
-      mount(s, dir)
-      s.sql("CALL graft.system.rewrite_delete_files('maint.docs_rdel')")
+  private[graft] def docsRdel(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_rdel") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t)(SnapStore.deletePositions(s, t,
+        col(partCol) === 3 && pmod(col("doc_id"), lit(5L)) === 0)),
+      next(t)(SnapStore.deletePositions(s, t,
+        col(partCol) === 5 && pmod(col("doc_id"), lit(7L)) === 0)),
+      next(t)(s.sql("CALL graft.system.rewrite_delete_files('maint.docs_rdel')")))
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsRdel(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsRdel(s, dir))
 
   /** Post-compaction pending-MOR contents per partition: the merged
     * delete parquet must suppress exactly the union of the two
@@ -929,42 +966,39 @@ object Maintenance {
     * and keeps suppressing at read time. Physical claims are
     * spec-pinned; the oracle proves the surviving row set.
     */
-  def ensureDocsCmor(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_cmor")
-    val b = base(s, dir)
-    val app = b
-      .withColumn("doc_id", col("doc_id") + 400000L)
-      .withColumn("source", lit("srcA"))
-      .withColumn("text", concat(col("text"), lit(" a")))
-      .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)"))
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol, numFiles = 2, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.deleteEquality(s, t,
-        b.filter(pmod(col("doc_id"), lit(3L)) === 0).select("doc_id"),
-        "doc_id")
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.append(s, t, app, partCol, numFiles = 1)
-    if (SnapStore.currentVersion(t).contains(3))
-      SnapStore.deletePositions(s, t,
-        col("source") === "srcA" && pmod(col("doc_id"), lit(7L)) === 1)
-    if (SnapStore.currentVersion(t).contains(4))
-      SnapStore.deletePositions(s, t,
-        col("source") =!= "srcA" && col(partCol) === 2 &&
-          pmod(col("doc_id"), lit(5L)) === 0)
-    if (SnapStore.currentVersion(t).contains(5)) {
-      // Target = the combined v1 footprint: the appended big file
-      // (strictly larger than either v1 half, and FIRST in partition
-      // order) lands alone in its bin, while the v1 files pack
-      // together and rewrite.
-      val cur = SnapStore.currentManifest(t)
-      val v1Bytes = cur.files.filter(_.path.contains("base-v1"))
-        .map(_.bytes).sum
-      SnapStore.compact(s, t, partCol, targetBytes = v1Bytes)
+  private[graft] def docsCmor(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_cmor") { t =>
+      lazy val b = base(s, dir)
+      lazy val app = b
+        .withColumn("doc_id", col("doc_id") + 400000L)
+        .withColumn("source", lit("srcA"))
+        .withColumn("text", concat(col("text"), lit(" a")))
+        .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)"))
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol, numFiles = 2,
+          keyCol = "doc_id")),
+        next(t)(SnapStore.deleteEquality(s, t,
+          b.filter(pmod(col("doc_id"), lit(3L)) === 0).select("doc_id"),
+          "doc_id")),
+        next(t)(SnapStore.append(s, t, app, partCol, numFiles = 1)),
+        next(t)(SnapStore.deletePositions(s, t,
+          col("source") === "srcA" && pmod(col("doc_id"), lit(7L)) === 1)),
+        next(t)(SnapStore.deletePositions(s, t,
+          col("source") =!= "srcA" && col(partCol) === 2 &&
+            pmod(col("doc_id"), lit(5L)) === 0)),
+        next(t) {
+          // Target = the combined v1 footprint: the appended big file
+          // (strictly larger than either v1 half, and FIRST in partition
+          // order) lands alone in its bin, while the v1 files pack
+          // together and rewrite.
+          val cur = SnapStore.currentManifest(t)
+          val v1Bytes = cur.files.filter(_.path.contains("base-v1"))
+            .map(_.bytes).sum
+          SnapStore.compact(s, t, partCol, targetBytes = v1Bytes)
+        })
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsCmor(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsCmor(s, dir))
 
   /** `docs_zord`: Z-order rewrite lifecycle (Iceberg
     * `rewrite_data_files` with a `zorder(x, y)` sort order). Two
@@ -976,19 +1010,18 @@ object Maintenance {
     * spec-pinned; the oracle proves the layout-only rewrite kept
     * exactly the same rows).
     */
-  def ensureDocsZord(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_zord")
-    val b = base(s, dir)
-      .withColumn("x", pmod(col("doc_id") * 2654435761L + 11L, lit(256L)))
-      .withColumn("y", pmod(col("doc_id"), lit(256L)))
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol, numFiles = 8)
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.rewriteZOrdered(s, t, partCol, Seq("x", "y"),
-        numFiles = 32, bits = 8)
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsZord(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_zord") { t =>
+      lazy val b = base(s, dir)
+        .withColumn("x", pmod(col("doc_id") * 2654435761L + 11L, lit(256L)))
+        .withColumn("y", pmod(col("doc_id"), lit(256L)))
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol, numFiles = 8)),
+        next(t)(SnapStore.rewriteZOrdered(s, t, partCol, Seq("x", "y"),
+          numFiles = 32, bits = 8)))
+    }
+  def ensureDocsZord(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsZord(s, dir))
 
   /** Post-Z-order-rewrite contents per partition: a sort-order
     * rewrite is layout-only, so every row (including the derived
@@ -1028,44 +1061,40 @@ object Maintenance {
     * branch still serves base + all three appended batches; drop /
     * trim / orphan physicals are spec-pinned.
     */
-  def ensureDocsBret(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_bret")
-    val b = base(s, dir)
-    def batch(k: Long, offset: Long, src: String): DataFrame = b
-      .filter(pmod(col("doc_id"), lit(29L)) === k)
-      .withColumn("doc_id", col("doc_id") + offset)
-      .withColumn("source", lit(src))
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol)
-    if (SnapStore.branchHead(t, "keep").isEmpty &&
-      SnapStore.branchHead(t, "stale").isEmpty) {
-      SnapStore.createBranch(t, "stale")
-      SnapStore.appendToBranch(s, t, "stale",
-        batch(3L, 500000L, "srcS"), partCol, numFiles = 1)
+  private[graft] def docsBret(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_bret") { t =>
+      lazy val b = base(s, dir)
+      def batch(k: Long, offset: Long, src: String): DataFrame = b
+        .filter(pmod(col("doc_id"), lit(29L)) === k)
+        .withColumn("doc_id", col("doc_id") + offset)
+        .withColumn("source", lit(src))
+      def keep = SnapStore.branchHead(t, "keep")
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol)),
+        dueIf(keep.isEmpty && SnapStore.branchHead(t, "stale").isEmpty)(
+          SnapStore.createBranch(t, "stale")),
+        dueIf(keep.isEmpty && SnapStore.branchHead(t, "stale").contains(1))(
+          SnapStore.appendToBranch(s, t, "stale",
+            batch(3L, 500000L, "srcS"), partCol, numFiles = 1)),
+        dueIf(keep.isEmpty)(SnapStore.createBranch(t, "keep")),
+        dueIf(keep.contains(1))(SnapStore.appendToBranch(s, t, "keep",
+          batch(0L, 600000L, "srcK1"), partCol, numFiles = 1)),
+        dueIf(keep.contains(2))(SnapStore.appendToBranch(s, t, "keep",
+          batch(1L, 610000L, "srcK2"), partCol, numFiles = 1)),
+        dueIf(keep.contains(3))(SnapStore.appendToBranch(s, t, "keep",
+          batch(2L, 620000L, "srcK3"), partCol, numFiles = 1)),
+        dueIf(SnapStore.listBranches(t).contains("stale")) {
+          SnapStore.expireRefs(t,
+            nowMs = System.currentTimeMillis() + 60000L,
+            defaultMaxRefAgeMs = Long.MaxValue / 2,
+            maxSnapshotAgeMs = 0L,
+            minSnapshotsToKeep = 2,
+            maxRefAgeOverrides = Map("stale" -> 0L))
+          SnapStore.removeOrphans(t, minAgeMs = 0L)
+        })
     }
-    if (SnapStore.branchHead(t, "keep").isEmpty)
-      SnapStore.createBranch(t, "keep")
-    if (SnapStore.branchHead(t, "keep").contains(1))
-      SnapStore.appendToBranch(s, t, "keep",
-        batch(0L, 600000L, "srcK1"), partCol, numFiles = 1)
-    if (SnapStore.branchHead(t, "keep").contains(2))
-      SnapStore.appendToBranch(s, t, "keep",
-        batch(1L, 610000L, "srcK2"), partCol, numFiles = 1)
-    if (SnapStore.branchHead(t, "keep").contains(3))
-      SnapStore.appendToBranch(s, t, "keep",
-        batch(2L, 620000L, "srcK3"), partCol, numFiles = 1)
-    if (SnapStore.listBranches(t).contains("stale")) {
-      SnapStore.expireRefs(t,
-        nowMs = System.currentTimeMillis() + 60000L,
-        defaultMaxRefAgeMs = Long.MaxValue / 2,
-        maxSnapshotAgeMs = 0L,
-        minSnapshotsToKeep = 2,
-        maxRefAgeOverrides = Map("stale" -> 0L))
-      SnapStore.removeOrphans(t, minAgeMs = 0L)
-    }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsBret(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsBret(s, dir))
 
   /** The surviving branch's head contents per source after ref
     * retention + orphan cleanup: base plus ALL THREE appended batches
@@ -1232,21 +1261,18 @@ object Maintenance {
     * scan (sequence-scoped anti-joins) through the V1 bridge —
     * Iceberg `SparkTable`'s transparent MOR-read contract.
     */
-  def ensureDocsMorSql(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_morsql")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.deleteEquality(s, t,
+  private[graft] def docsMorSql(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_morsql") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t)(SnapStore.deleteEquality(s, t,
         base(s, dir).filter(pmod(col("doc_id"), lit(13L)) === 0)
           .select("doc_id"),
-        "doc_id")
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.deletePositions(s, t,
-        col(partCol) === 2 && pmod(col("doc_id"), lit(5L)) === 0)
-    mount(s, dir)
-    t
-  }
+        "doc_id")),
+      next(t)(SnapStore.deletePositions(s, t,
+        col(partCol) === 2 && pmod(col("doc_id"), lit(5L)) === 0)))
+    }
+  def ensureDocsMorSql(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsMorSql(s, dir))
 
   /** Per-partition contents of the PENDING merge-on-read snapshot
     * read via plain SQL through the catalog: the oracle recomputes
@@ -1289,30 +1315,22 @@ object Maintenance {
     * 43rd doc (`+700000`, source `srcR`), whose files carry the new
     * name and type natively.
     */
-  def ensureDocsRen(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_ren")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t,
+  private[graft] def docsRen(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_ren") { t => Seq(
+      next(t)(SnapStore.create(s, t,
         base(s, dir).withColumn("tok", col("tok").cast("int")),
-        partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1)) {
-      mount(s, dir)
-      s.sql("ALTER TABLE graft.maint.docs_ren RENAME COLUMN tok TO n_tok")
-    }
-    if (SnapStore.currentVersion(t).contains(2)) {
-      mount(s, dir)
-      s.sql("ALTER TABLE graft.maint.docs_ren ALTER COLUMN n_tok TYPE BIGINT")
-    }
-    if (SnapStore.currentVersion(t).contains(3)) {
-      mount(s, dir)
-      s.sql(
+        partCol, keyCol = "doc_id")),
+      next(t)(
+        s.sql("ALTER TABLE graft.maint.docs_ren RENAME COLUMN tok TO n_tok")),
+      next(t)(
+        s.sql("ALTER TABLE graft.maint.docs_ren ALTER COLUMN n_tok TYPE BIGINT")),
+      next(t)(s.sql(
         """INSERT INTO graft.maint.docs_ren
           |SELECT doc_id + 700000, part, 'srcR', text, n_tok
-          |FROM graft.maint.docs_ren WHERE doc_id % 43 = 1""".stripMargin)
+          |FROM graft.maint.docs_ren WHERE doc_id % 43 = 1""".stripMargin)))
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsRen(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsRen(s, dir))
 
   /** Per-source contents after the rename/widen/append chain, read
     * through the catalog under the NEW column name: the oracle
@@ -1498,20 +1516,14 @@ object Maintenance {
     * `.partitions` metadata rollup is exactly one row per part value
     * and the oracle recomputes it logically from the raw fixture.
     */
-  def ensureDocsParts(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_parts")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b.filter(col(partCol) === 0), partCol,
-        numFiles = 1)
-    (1 until nParts).foreach { p =>
-      if (SnapStore.currentVersion(t).contains(p))
-        SnapStore.append(s, t, b.filter(col(partCol) === p), partCol,
-          numFiles = 1)
+  private[graft] def docsParts(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_parts") { t =>
+      lazy val b = base(s, dir)
+      slices(s, t, partCol, numFiles = 1)(0 until nParts)(p =>
+        b.filter(col(partCol) === p))
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsParts(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsParts(s, dir))
 
   /** The `.partitions` metadata table (Iceberg's `table.partitions`):
     * per-partition file/row rollup computed purely from manifest
@@ -1535,27 +1547,19 @@ object Maintenance {
     * so `.partitions` shows per-partition delete debt while
     * record_count stays the documented PRE-delete manifest count.
     */
-  def ensureDocsPdel(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_pdel")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b.filter(col(partCol) === 0), partCol,
-        numFiles = 1)
-    (1 until nParts).foreach { p =>
-      if (SnapStore.currentVersion(t).contains(p))
-        SnapStore.append(s, t, b.filter(col(partCol) === p), partCol,
-          numFiles = 1)
+  private[graft] def docsPdel(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_pdel") { t =>
+      lazy val b = base(s, dir)
+      slices(s, t, partCol, numFiles = 1)(0 until nParts)(p =>
+        b.filter(col(partCol) === p)) ++ Seq(
+        next(t)(SnapStore.deletePositions(s, t,
+          col(partCol) === 3 && pmod(col("doc_id"), lit(5L)) === 0)),
+        next(t)(SnapStore.deleteEquality(s, t,
+          b.filter(pmod(col("doc_id"), lit(11L)) === 0).select("doc_id"),
+          "doc_id")))
     }
-    if (SnapStore.currentVersion(t).contains(nParts))
-      SnapStore.deletePositions(s, t,
-        col(partCol) === 3 && pmod(col("doc_id"), lit(5L)) === 0)
-    if (SnapStore.currentVersion(t).contains(nParts + 1))
-      SnapStore.deleteEquality(s, t,
-        b.filter(pmod(col("doc_id"), lit(11L)) === 0).select("doc_id"),
-        "doc_id")
-    mount(s, dir)
-    t
-  }
+  def ensureDocsPdel(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsPdel(s, dir))
 
   /** Per-partition pending-delete debt from the `.partitions`
     * metadata table (ADVICE r8: Iceberg's partitions table exposes
@@ -1652,57 +1656,58 @@ object Maintenance {
     * its files collect as orphans. Main therefore holds exactly
     * base + the audited-good batch.
     */
-  def ensureDocsWap(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_wap")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol, keyCol = "doc_id")
-    if (SnapStore.branchHead(t, "wap").isEmpty &&
-      SnapStore.currentVersion(t).contains(1))
-      SnapStore.createBranch(t, "wap")
-    if (SnapStore.branchHead(t, "wap").contains(1))
-      SnapStore.appendToBranch(s, t, "wap",
-        // +400000 preserves doc_id % 8, so the staged rows keep their
-        // partition routing.
-        b.filter(pmod(col("doc_id"), lit(17L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 400000L)
-          .withColumn("source", lit("srcW"))
-          .withColumn("text", concat(col("text"), lit(" audited")))
-          .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)")),
-        partCol)
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, "wap").contains(2)) {
-      val bad = SnapStore.readBranch(s, t, "wap")
-        .filter(col("tok") <= 0 || col("text").isNull ||
-          length(col("text")) === 0).count()
-      require(bad == 0, s"WAP audit failed on staged batch: $bad bad rows")
-      SnapStore.fastForward(t, "wap")
+  private[graft] def docsWap(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_wap") { t =>
+      lazy val b = base(s, dir)
+      // The REJECTED cycle runs once (marker-gated: dropBranch leaves
+      // no version evidence to key idempotency off).
+      val rejected = t.resolve("_wap_rejected_done")
+      def rejecting =
+        SnapStore.currentVersion(t).contains(2) && !Files.exists(rejected)
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol, keyCol = "doc_id")),
+        dueIf(SnapStore.branchHead(t, "wap").isEmpty &&
+          SnapStore.currentVersion(t).contains(1))(
+          SnapStore.createBranch(t, "wap")),
+        dueIf(SnapStore.branchHead(t, "wap").contains(1))(
+          SnapStore.appendToBranch(s, t, "wap",
+            // +400000 preserves doc_id % 8, so the staged rows keep their
+            // partition routing.
+            b.filter(pmod(col("doc_id"), lit(17L)) === 0)
+              .withColumn("doc_id", col("doc_id") + 400000L)
+              .withColumn("source", lit("srcW"))
+              .withColumn("text", concat(col("text"), lit(" audited")))
+              .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)")),
+            partCol)),
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, "wap").contains(2)) {
+          val bad = SnapStore.readBranch(s, t, "wap")
+            .filter(col("tok") <= 0 || col("text").isNull ||
+              length(col("text")) === 0).count()
+          require(bad == 0, s"WAP audit failed on staged batch: $bad bad rows")
+          SnapStore.fastForward(t, "wap")
+        },
+        dueIf(rejecting && SnapStore.branchHead(t, "rej").isEmpty)(
+          SnapStore.createBranch(t, "rej")),
+        // Branch versions are BRANCH-LOCAL: a fresh fork is head 1
+        // whatever main's version.
+        dueIf(rejecting && SnapStore.branchHead(t, "rej").contains(1))(
+          SnapStore.appendToBranch(s, t, "rej",
+            b.filter(pmod(col("doc_id"), lit(23L)) === 0)
+              .withColumn("doc_id", col("doc_id") + 500000L)
+              .withColumn("text", lit(""))
+              .withColumn("tok", lit(0L)),
+            partCol)),
+        dueIf(rejecting) {
+          val bad = SnapStore.readBranch(s, t, "rej")
+            .filter(col("tok") <= 0 || length(col("text")) === 0).count()
+          require(bad > 0, "the rejected batch must actually fail its audit")
+          SnapStore.dropBranch(t, "rej")
+          Files.createFile(rejected)
+        })
     }
-    // The REJECTED cycle runs once (marker-gated: dropBranch leaves
-    // no version evidence to key idempotency off).
-    val rejected = t.resolve("_wap_rejected_done")
-    if (SnapStore.currentVersion(t).contains(2) &&
-      !Files.exists(rejected)) {
-      if (SnapStore.branchHead(t, "rej").isEmpty)
-        SnapStore.createBranch(t, "rej")
-      // Branch versions are BRANCH-LOCAL: a fresh fork is head 1
-      // whatever main's version.
-      if (SnapStore.branchHead(t, "rej").contains(1))
-        SnapStore.appendToBranch(s, t, "rej",
-          b.filter(pmod(col("doc_id"), lit(23L)) === 0)
-            .withColumn("doc_id", col("doc_id") + 500000L)
-            .withColumn("text", lit(""))
-            .withColumn("tok", lit(0L)),
-          partCol)
-      val bad = SnapStore.readBranch(s, t, "rej")
-        .filter(col("tok") <= 0 || length(col("text")) === 0).count()
-      require(bad > 0, "the rejected batch must actually fail its audit")
-      SnapStore.dropBranch(t, "rej")
-      Files.createFile(rejected)
-    }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsWap(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsWap(s, dir))
 
   /** Write-audit-publish: main's contents after one audited publish
     * and one audited REJECTION. The oracle recomputes base + the
@@ -1743,69 +1748,72 @@ object Maintenance {
     * fast-forward. Contrast [[ensureDocsWap]], which composes the
     * same lifecycle from explicit branch verbs.
     */
-  def ensureDocsWapConf(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_wapc")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol, keyCol = "doc_id")
-    mount(s, dir)
-    val confKey = "spark.graft.wap.branch"
-    if (SnapStore.branchHead(t, "audit").isEmpty &&
-      SnapStore.currentVersion(t).contains(1)) {
-      val old = s.conf.getOption(confKey)
-      s.conf.set(confKey, "audit")
-      try {
-        // +600000 preserves doc_id % 8, so staged rows keep their
-        // partition routing.
-        b.filter(pmod(col("doc_id"), lit(19L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 600000L)
-          .withColumn("source", lit("srcC"))
-          .withColumn("text", concat(col("text"), lit(" staged")))
-          .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)"))
-          .createOrReplaceTempView("wapc_batch")
-        s.sql("INSERT INTO graft.maint.docs_wapc SELECT * FROM wapc_batch")
-        // The staged write must NOT move main, and the conf-routed
-        // read must see the staged batch.
-        require(SnapStore.currentVersion(t).contains(1),
-          "WAP-conf INSERT moved main — staging is broken")
-        val staged = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapc " +
-          "WHERE doc_id >= 600000").collect()(0).getLong(0)
-        require(staged > 0, "conf-routed read must serve the staged branch")
+  private[graft] def docsWapConf(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_wapc") { t =>
+      lazy val b = base(s, dir)
+      def staging(body: => Unit): Unit =
+        GraftSession.withConf(s, "spark.graft.wap.branch" -> "audit")(body)
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol, keyCol = "doc_id")),
+        // Each staged write is its own step, keyed on the branch head
+        // it moves on from, so a build cut between two of them resumes.
+        dueIf(SnapStore.branchHead(t, "audit").isEmpty &&
+          SnapStore.currentVersion(t).contains(1))(staging {
+          // +600000 preserves doc_id % 8, so staged rows keep their
+          // partition routing.
+          b.filter(pmod(col("doc_id"), lit(19L)) === 0)
+            .withColumn("doc_id", col("doc_id") + 600000L)
+            .withColumn("source", lit("srcC"))
+            .withColumn("text", concat(col("text"), lit(" staged")))
+            .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)"))
+            .createOrReplaceTempView("wapc_batch")
+          s.sql("INSERT INTO graft.maint.docs_wapc SELECT * FROM wapc_batch")
+          // The staged write must NOT move main, and the conf-routed
+          // read must see the staged batch.
+          require(SnapStore.currentVersion(t).contains(1),
+            "WAP-conf INSERT moved main — staging is broken")
+          val staged = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapc " +
+            "WHERE doc_id >= 600000").collect()(0).getLong(0)
+          require(staged > 0, "conf-routed read must serve the staged branch")
+        }),
         // Unmodified DML stages too: an UPDATE and a DELETE scoped to
         // the staged rows land on the branch chain — main never moves
         // (the oracle recomputes both effects).
-        s.sql("UPDATE graft.maint.docs_wapc SET text = concat(text, ' v2') " +
-          "WHERE doc_id >= 600000 AND doc_id % 2 = 0")
-        s.sql("DELETE FROM graft.maint.docs_wapc " +
-          "WHERE doc_id >= 600000 AND doc_id % 3 = 0")
-        require(SnapStore.currentVersion(t).contains(1),
-          "WAP-conf DML moved main — staging is broken")
-        require(SnapStore.branchHead(t, "audit").contains(4),
-          "each staged DML must commit on the branch chain")
-      } finally old match {
-        case Some(v) => s.conf.set(confKey, v)
-        case None => s.conf.unset(confKey)
-      }
-      // With the conf unset: plain reads serve main (no staged rows),
-      // explicit branch time travel serves the staged state.
-      val plain = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapc " +
-        "WHERE doc_id >= 600000").collect()(0).getLong(0)
-      require(plain == 0L,
-        s"staged rows leaked into a plain read ($plain rows)")
-      val tt = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapc " +
-        "VERSION AS OF 'audit' WHERE doc_id >= 600000").collect()(0).getLong(0)
-      require(tt > 0, "VERSION AS OF '<branch>' must see the staged write")
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, "audit").contains(2))(staging(
+          s.sql("UPDATE graft.maint.docs_wapc SET text = concat(text, ' v2') " +
+            "WHERE doc_id >= 600000 AND doc_id % 2 = 0"))),
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, "audit").contains(3)) {
+          staging {
+            s.sql("DELETE FROM graft.maint.docs_wapc " +
+              "WHERE doc_id >= 600000 AND doc_id % 3 = 0")
+            require(SnapStore.currentVersion(t).contains(1),
+              "WAP-conf DML moved main — staging is broken")
+            require(SnapStore.branchHead(t, "audit").contains(4),
+              "each staged DML must commit on the branch chain")
+          }
+          // With the conf unset: plain reads serve main (no staged rows),
+          // explicit branch time travel serves the staged state.
+          val plain = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapc " +
+            "WHERE doc_id >= 600000").collect()(0).getLong(0)
+          require(plain == 0L,
+            s"staged rows leaked into a plain read ($plain rows)")
+          val tt = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapc " +
+            "VERSION AS OF 'audit' WHERE doc_id >= 600000").collect()(0).getLong(0)
+          require(tt > 0, "VERSION AS OF '<branch>' must see the staged write")
+        },
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, "audit").contains(4)) {
+          val bad = SnapStore.readBranch(s, t, "audit")
+            .filter(col("tok") <= 0 || col("text").isNull ||
+              length(col("text")) === 0).count()
+          require(bad == 0, s"WAP audit failed on staged batch: $bad bad rows")
+          SnapStore.fastForward(t, "audit")
+        })
     }
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, "audit").contains(4)) {
-      val bad = SnapStore.readBranch(s, t, "audit")
-        .filter(col("tok") <= 0 || col("text").isNull ||
-          length(col("text")) === 0).count()
-      require(bad == 0, s"WAP audit failed on staged batch: $bad bad rows")
-      SnapStore.fastForward(t, "audit")
-    }
-    t
-  }
+  def ensureDocsWapConf(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsWapConf(s, dir))
 
   /** Conf-driven write-audit-publish: main's contents after one
     * staged-by-conf `INSERT INTO` published. The oracle recomputes
@@ -1853,92 +1861,87 @@ object Maintenance {
     * with their relative sequence order preserved (the Iceberg
     * WAP + MOR combination real 100 TB tables run).
     */
-  def ensureDocsWapMor(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_wapmor")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty) {
-      SnapStore.create(s, t, b, partCol, keyCol = "doc_id")
-      SnapStore.setProperties(t, Map(
-        "write.delete.mode" -> "merge-on-read",
-        "write.update.mode" -> "merge-on-read",
-        "write.merge.mode" -> "merge-on-read"))
+  private[graft] def docsWapMor(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_wapmor") { t =>
+      lazy val b = base(s, dir)
+      Seq(
+        next(t) {
+          SnapStore.create(s, t, b, partCol, keyCol = "doc_id")
+          SnapStore.setProperties(t, Map(
+            "write.delete.mode" -> "merge-on-read",
+            "write.update.mode" -> "merge-on-read",
+            "write.merge.mode" -> "merge-on-read"))
+        },
+        // Self-heal a PARTIALLY staged lifecycle (a crash between the
+        // staged DELETE and the staged MERGE would otherwise wedge this
+        // face forever: staging skipped because the branch exists,
+        // publish skipped because the head is short): drop the partial
+        // branch and restage whole — staging is then restart-idempotent
+        // like every other step.
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, "morstage").exists(_ != 3))(
+          SnapStore.dropBranch(t, "morstage")),
+        dueIf(SnapStore.branchHead(t, "morstage").isEmpty &&
+          SnapStore.currentVersion(t).contains(1)) {
+          val mainBytes = SnapStore.currentManifest(t).files
+            .map(f => f.path -> Files.getLastModifiedTime(t.resolve(f.path)))
+            .toMap
+          GraftSession.withConf(s, "spark.graft.wap.branch" -> "morstage") {
+            s.sql("DELETE FROM graft.maint.docs_wapmor WHERE doc_id % 13 = 5")
+            require(SnapStore.currentVersion(t).contains(1),
+              "staged MOR DELETE moved main — staging is broken")
+            val bh = SnapStore.branchHeadManifest(t, "morstage")
+            require(bh.operation == "delete-mor" && bh.deleteFiles.nonEmpty,
+              "the staged DELETE must land delete files on the branch chain")
+            // A staged MERGE stacks on the staged delete: its scan reads
+            // the branch head delete-aware, its delta commits as a second
+            // branch snapshot.
+            b.filter(pmod(col("doc_id"), lit(19L)) === 2 &&
+                pmod(col("doc_id"), lit(13L)) =!= 5)
+              .withColumn("source", lit("wmU"))
+              .unionByName(b.filter(pmod(col("doc_id"), lit(31L)) === 3)
+                .withColumn("doc_id", col("doc_id") + 800000L)
+                .withColumn("source", lit("wmI")))
+              .createOrReplaceTempView("graft_wapmor_src")
+            s.sql(
+              """MERGE INTO graft.maint.docs_wapmor t
+                |USING graft_wapmor_src s
+                |ON t.doc_id = s.doc_id
+                |WHEN MATCHED THEN UPDATE SET t.source = s.source
+                |WHEN NOT MATCHED THEN INSERT
+                |  (doc_id, part, source, text, tok)
+                |  VALUES (s.doc_id, s.part, s.source, s.text, s.tok)""".stripMargin)
+            require(SnapStore.currentVersion(t).contains(1),
+              "staged MOR MERGE moved main — staging is broken")
+            require(SnapStore.branchHeadManifest(t, "morstage")
+              .operation == "merge-mor",
+              "the MERGE must route merge-on-read onto the branch")
+            // The audit reads the staged state: the staged delete files
+            // fold into the conf-routed read.
+            val leaked = s.sql(
+              "SELECT COUNT(*) AS n FROM graft.maint.docs_wapmor " +
+                "WHERE doc_id % 13 = 5 AND doc_id < 800000")
+              .collect()(0).getLong(0)
+            require(leaked == 0,
+              s"the staged read must fold the staged delete files ($leaked rows)")
+          }
+          // Main BYTE-frozen through both staged deltas — the whole point
+          // of WAP + MOR: zero base rewrite, zero main movement.
+          mainBytes.foreach { case (p, ts) =>
+            require(Files.getLastModifiedTime(t.resolve(p)) == ts,
+              s"main data file $p changed during staging")
+          }
+          val plain = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapmor " +
+            "WHERE doc_id >= 800000").collect()(0).getLong(0)
+          require(plain == 0L,
+            s"staged rows leaked into a plain (conf-unset) read ($plain rows)")
+        },
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, "morstage").contains(3))(
+          SnapStore.fastForward(t, "morstage")))
     }
-    mount(s, dir)
-    val confKey = "spark.graft.wap.branch"
-    // Self-heal a PARTIALLY staged lifecycle (a crash between the
-    // staged DELETE and the staged MERGE would otherwise wedge this
-    // face forever: staging skipped because the branch exists,
-    // publish skipped because the head is short): drop the partial
-    // branch and restage whole — staging is then restart-idempotent
-    // like every sibling ensure* lifecycle.
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, "morstage").exists(_ != 3))
-      SnapStore.dropBranch(t, "morstage")
-    if (SnapStore.branchHead(t, "morstage").isEmpty &&
-      SnapStore.currentVersion(t).contains(1)) {
-      val mainBytes = SnapStore.currentManifest(t).files
-        .map(f => f.path -> Files.getLastModifiedTime(t.resolve(f.path)))
-        .toMap
-      val old = s.conf.getOption(confKey)
-      s.conf.set(confKey, "morstage")
-      try {
-        s.sql("DELETE FROM graft.maint.docs_wapmor WHERE doc_id % 13 = 5")
-        require(SnapStore.currentVersion(t).contains(1),
-          "staged MOR DELETE moved main — staging is broken")
-        val bh = SnapStore.branchHeadManifest(t, "morstage")
-        require(bh.operation == "delete-mor" && bh.deleteFiles.nonEmpty,
-          "the staged DELETE must land delete files on the branch chain")
-        // A staged MERGE stacks on the staged delete: its scan reads
-        // the branch head delete-aware, its delta commits as a second
-        // branch snapshot.
-        b.filter(pmod(col("doc_id"), lit(19L)) === 2 &&
-            pmod(col("doc_id"), lit(13L)) =!= 5)
-          .withColumn("source", lit("wmU"))
-          .unionByName(b.filter(pmod(col("doc_id"), lit(31L)) === 3)
-            .withColumn("doc_id", col("doc_id") + 800000L)
-            .withColumn("source", lit("wmI")))
-          .createOrReplaceTempView("graft_wapmor_src")
-        s.sql(
-          """MERGE INTO graft.maint.docs_wapmor t
-            |USING graft_wapmor_src s
-            |ON t.doc_id = s.doc_id
-            |WHEN MATCHED THEN UPDATE SET t.source = s.source
-            |WHEN NOT MATCHED THEN INSERT
-            |  (doc_id, part, source, text, tok)
-            |  VALUES (s.doc_id, s.part, s.source, s.text, s.tok)""".stripMargin)
-        require(SnapStore.currentVersion(t).contains(1),
-          "staged MOR MERGE moved main — staging is broken")
-        require(SnapStore.branchHeadManifest(t, "morstage")
-          .operation == "merge-mor",
-          "the MERGE must route merge-on-read onto the branch")
-        // The audit reads the staged state: the staged delete files
-        // fold into the conf-routed read.
-        val leaked = s.sql(
-          "SELECT COUNT(*) AS n FROM graft.maint.docs_wapmor " +
-            "WHERE doc_id % 13 = 5 AND doc_id < 800000")
-          .collect()(0).getLong(0)
-        require(leaked == 0,
-          s"the staged read must fold the staged delete files ($leaked rows)")
-      } finally old match {
-        case Some(v) => s.conf.set(confKey, v)
-        case None => s.conf.unset(confKey)
-      }
-      // Main BYTE-frozen through both staged deltas — the whole point
-      // of WAP + MOR: zero base rewrite, zero main movement.
-      mainBytes.foreach { case (p, ts) =>
-        require(Files.getLastModifiedTime(t.resolve(p)) == ts,
-          s"main data file $p changed during staging")
-      }
-      val plain = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapmor " +
-        "WHERE doc_id >= 800000").collect()(0).getLong(0)
-      require(plain == 0L,
-        s"staged rows leaked into a plain (conf-unset) read ($plain rows)")
-    }
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, "morstage").contains(3))
-      SnapStore.fastForward(t, "morstage")
-    t
-  }
+  def ensureDocsWapMor(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsWapMor(s, dir))
 
   /** WAP × MOR publish face: per-source contents of main AFTER the
     * staged delete+merge published — the adopted delete files apply
@@ -1977,21 +1980,20 @@ object Maintenance {
     * delete composed correctly. The prune/SPJ physical claims are
     * HoursTransformSpec's.
     */
-  def ensureDocsHours(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_hours")
-    if (SnapStore.currentVersion(t).isEmpty) {
-      val df = base(s, dir).withColumn("ts", expr(
-        "timestamp_micros((473000 + doc_id % 6) * 3600000000 + " +
-          "(doc_id % 60) * 60000000)"))
-      SnapStore.create(s, t, df, "hours(ts)")
-    }
-    mount(s, dir)
-    if (SnapStore.currentVersion(t).contains(1))
-      s.sql("DELETE FROM graft.maint.docs_hours WHERE " +
+  private[graft] def docsHours(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_hours") { t => Seq(
+      next(t) {
+        val df = base(s, dir).withColumn("ts", expr(
+          "timestamp_micros((473000 + doc_id % 6) * 3600000000 + " +
+            "(doc_id % 60) * 60000000)"))
+        SnapStore.create(s, t, df, "hours(ts)")
+      },
+      next(t)(s.sql("DELETE FROM graft.maint.docs_hours WHERE " +
         "ts >= timestamp_micros(473002 * 3600000000) AND " +
-        "ts < timestamp_micros(473003 * 3600000000) AND tok % 2 = 0")
-    t
-  }
+        "ts < timestamp_micros(473003 * 3600000000) AND tok % 2 = 0")))
+    }
+  def ensureDocsHours(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsHours(s, dir))
 
   def hoursPartition(s: SparkSession, dir: String): DataFrame = {
     val t = ensureDocsHours(s, dir)
@@ -2026,64 +2028,59 @@ object Maintenance {
     * match proves the DDL-driven lifecycle landed exactly the
     * audited rows; each statement's error cases are SqlDdlSpec's.
     */
-  def ensureDocsBrDdl(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_brddl")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol, keyCol = "doc_id")
-    mount(s, dir)
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, "audit2").isEmpty) {
-      s.sql("ALTER TABLE graft.maint.docs_brddl CREATE BRANCH audit2 " +
-        "RETAIN 30 DAYS")
-      s.sql("ALTER TABLE graft.maint.docs_brddl CREATE TAG prepub " +
-        "AS OF VERSION 1")
-      require(SnapStore.tableProperties(t)
-        .get("ref.audit2.max-ref-age-ms")
-        .contains((30L * 86400000L).toString),
-        "RETAIN must persist the per-ref age property")
+  private[graft] def docsBrDdl(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_brddl") { t =>
+      lazy val b = base(s, dir)
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol, keyCol = "doc_id")),
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, "audit2").isEmpty) {
+          s.sql("ALTER TABLE graft.maint.docs_brddl CREATE BRANCH audit2 " +
+            "RETAIN 30 DAYS")
+          require(SnapStore.tableProperties(t)
+            .get("ref.audit2.max-ref-age-ms")
+            .contains((30L * 86400000L).toString),
+            "RETAIN must persist the per-ref age property")
+        },
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          !SnapStore.tags(t).contains("prepub"))(
+          s.sql("ALTER TABLE graft.maint.docs_brddl CREATE TAG prepub " +
+            "AS OF VERSION 1")),
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, "audit2").contains(1))(
+          GraftSession.withConf(s, "spark.graft.wap.branch" -> "audit2") {
+            // +700000 preserves doc_id % 8, so staged rows keep their
+            // partition routing.
+            b.filter(pmod(col("doc_id"), lit(23L)) === 0)
+              .withColumn("doc_id", col("doc_id") + 700000L)
+              .withColumn("source", lit("srcQ"))
+              .withColumn("text", concat(col("text"), lit(" ddl")))
+              .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)"))
+              .createOrReplaceTempView("brddl_batch")
+            s.sql("INSERT INTO graft.maint.docs_brddl " +
+              "SELECT * FROM brddl_batch")
+            require(SnapStore.currentVersion(t).contains(1),
+              "the staged INSERT must not move main")
+          }),
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, "audit2").contains(2)) {
+          // The audit reads the staged state by branch time travel.
+          val staged = s.sql("SELECT COUNT(*) AS n FROM " +
+            "graft.maint.docs_brddl VERSION AS OF 'audit2' " +
+            "WHERE doc_id >= 700000").collect()(0).getLong(0)
+          require(staged > 0, "the audit must see the staged batch")
+          s.sql("CALL graft.system.fast_forward('maint.docs_brddl', 'audit2')")
+          // Publish done: the DDL-pinned tag still reads the pre-publish
+          // state, and the staging branch retires by DDL.
+          val pre = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_brddl " +
+            "VERSION AS OF 'prepub' WHERE doc_id >= 700000")
+            .collect()(0).getLong(0)
+          require(pre == 0L, "the AS OF VERSION tag must pin pre-publish")
+          s.sql("ALTER TABLE graft.maint.docs_brddl DROP BRANCH audit2")
+        })
     }
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, "audit2").contains(1)) {
-      val confKey = "spark.graft.wap.branch"
-      val old = s.conf.getOption(confKey)
-      s.conf.set(confKey, "audit2")
-      try {
-        // +700000 preserves doc_id % 8, so staged rows keep their
-        // partition routing.
-        b.filter(pmod(col("doc_id"), lit(23L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 700000L)
-          .withColumn("source", lit("srcQ"))
-          .withColumn("text", concat(col("text"), lit(" ddl")))
-          .withColumn("tok", expr("CAST(size(split(text, ' ')) AS BIGINT)"))
-          .createOrReplaceTempView("brddl_batch")
-        s.sql("INSERT INTO graft.maint.docs_brddl " +
-          "SELECT * FROM brddl_batch")
-        require(SnapStore.currentVersion(t).contains(1),
-          "the staged INSERT must not move main")
-      } finally old match {
-        case Some(v) => s.conf.set(confKey, v)
-        case None => s.conf.unset(confKey)
-      }
-    }
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, "audit2").contains(2)) {
-      // The audit reads the staged state by branch time travel.
-      val staged = s.sql("SELECT COUNT(*) AS n FROM " +
-        "graft.maint.docs_brddl VERSION AS OF 'audit2' " +
-        "WHERE doc_id >= 700000").collect()(0).getLong(0)
-      require(staged > 0, "the audit must see the staged batch")
-      s.sql("CALL graft.system.fast_forward('maint.docs_brddl', 'audit2')")
-      // Publish done: the DDL-pinned tag still reads the pre-publish
-      // state, and the staging branch retires by DDL.
-      val pre = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_brddl " +
-        "VERSION AS OF 'prepub' WHERE doc_id >= 700000")
-        .collect()(0).getLong(0)
-      require(pre == 0L, "the AS OF VERSION tag must pin pre-publish")
-      s.sql("ALTER TABLE graft.maint.docs_brddl DROP BRANCH audit2")
-    }
-    t
-  }
+  def ensureDocsBrDdl(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsBrDdl(s, dir))
 
   /** DDL-driven branch lifecycle: main's contents per source after
     * the publish. See [[ensureDocsBrDdl]].
@@ -2124,26 +2121,26 @@ object Maintenance {
     * through write, MOR read, and extraction. Compaction-preserves-
     * values is Round15FixesSpec's.
     */
-  def ensureDocsVariant(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_variant")
-    mount(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty) {
-      s.sql("""CREATE TABLE graft.maint.docs_variant
+  private[graft] def docsVariant(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_variant") { t => Seq(
+      next(t)(s.sql("""CREATE TABLE graft.maint.docs_variant
         (doc_id BIGINT, part BIGINT, payload VARIANT)
         PARTITIONED BY (part)
-        TBLPROPERTIES ('write.delete.mode' = 'merge-on-read')""")
-      base(s, dir).selectExpr("doc_id", "part",
-        "parse_json(concat('{\"flag\":', CAST(doc_id % 2 AS STRING), " +
-          "',\"len\":', CAST(tok AS STRING), " +
-          "',\"src\":\"', source, '\"}')) AS payload")
-        .createOrReplaceTempView("variant_seed")
-      s.sql("INSERT INTO graft.maint.docs_variant " +
-        "SELECT * FROM variant_seed")
+        TBLPROPERTIES ('write.delete.mode' = 'merge-on-read')""")),
+      next(t) {
+        base(s, dir).selectExpr("doc_id", "part",
+          "parse_json(concat('{\"flag\":', CAST(doc_id % 2 AS STRING), " +
+            "',\"len\":', CAST(tok AS STRING), " +
+            "',\"src\":\"', source, '\"}')) AS payload")
+          .createOrReplaceTempView("variant_seed")
+        s.sql("INSERT INTO graft.maint.docs_variant " +
+          "SELECT * FROM variant_seed")
+      },
+      next(t)(
+        s.sql("DELETE FROM graft.maint.docs_variant WHERE doc_id % 13 = 5")))
     }
-    if (SnapStore.currentVersion(t).contains(2))
-      s.sql("DELETE FROM graft.maint.docs_variant WHERE doc_id % 13 = 5")
-    t
-  }
+  def ensureDocsVariant(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsVariant(s, dir))
 
   def variantTable(s: SparkSession, dir: String): DataFrame = {
     ensureDocsVariant(s, dir)
@@ -2180,16 +2177,15 @@ object Maintenance {
     * proves the grouped stats job and the metadata surface end to
     * end. Spec-evolution staleness is Round15FixesSpec's.
     */
-  def ensureDocsPstats(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_pstats")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    mount(s, dir)
-    if (SnapStore.tablePartitionStats(t).isEmpty)
-      s.sql("CALL graft.system.compute_partition_stats(" +
-        "'maint.docs_pstats', 'source,tok')")
-    t
-  }
+  private[graft] def docsPstats(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_pstats") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      dueIf(SnapStore.tablePartitionStats(t).isEmpty)(
+        s.sql("CALL graft.system.compute_partition_stats(" +
+          "'maint.docs_pstats', 'source,tok')")))
+    }
+  def ensureDocsPstats(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsPstats(s, dir))
 
   def partitionStats(s: SparkSession, dir: String): DataFrame = {
     ensureDocsPstats(s, dir)
@@ -2211,20 +2207,16 @@ object Maintenance {
     * refresh); the oracle recomputes every partition's stats over
     * base ∪ appended logically.
     */
-  def ensureDocsPstatsInc(s: SparkSession, dir: String): Path =
-    synchronized {
-      val t = root(dir).resolve("docs_pstats2")
-      if (SnapStore.currentVersion(t).isEmpty)
-        SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-      mount(s, dir)
-      if (SnapStore.tablePartitionStats(t).isEmpty)
+  private[graft] def docsPstatsInc(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_pstats2") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      dueIf(SnapStore.tablePartitionStats(t).isEmpty)(
         s.sql("CALL graft.system.compute_partition_stats(" +
-          "'maint.docs_pstats2', 'source,tok')")
-      if (SnapStore.currentVersion(t).contains(1))
-        SnapStore.append(s, t, base(s, dir)
-          .filter(col(partCol) === 2L && pmod(col("doc_id"), lit(5L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 800000L), partCol)
-      if (SnapStore.tablePartitionStats(t).exists(_._1 == 1) &&
+          "'maint.docs_pstats2', 'source,tok')")),
+      next(t)(SnapStore.append(s, t, base(s, dir)
+        .filter(col(partCol) === 2L && pmod(col("doc_id"), lit(5L)) === 0)
+        .withColumn("doc_id", col("doc_id") + 800000L), partCol)),
+      dueIf(SnapStore.tablePartitionStats(t).exists(_._1 == 1) &&
         SnapStore.currentVersion(t).contains(2)) {
         // `stale` shows on the surface before the refresh.
         val staleFlags = s.sql("SELECT DISTINCT stale FROM " +
@@ -2243,9 +2235,10 @@ object Maintenance {
         require(inc == fullRecompute,
           "incremental merge-by-replacement must equal the full " +
             "recompute exactly")
-      }
-      t
+      })
     }
+  def ensureDocsPstatsInc(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsPstatsInc(s, dir))
 
   def partitionStatsInc(s: SparkSession, dir: String): DataFrame = {
     ensureDocsPstatsInc(s, dir)
@@ -2315,14 +2308,12 @@ object Maintenance {
     * facts; on a 100 TB table this is the only runnable form of
     * compaction (rewrite the hot partitions, never touch the cold).
     */
-  def ensureDocsCompactFiltered(s: SparkSession, dir: String): Path =
-    synchronized {
-      val t = root(dir).resolve("docs_cfil")
-      if (SnapStore.currentVersion(t).isEmpty)
-        SnapStore.create(s, t, base(s, dir), partCol, numFiles = 32,
-          clusterExprs = Seq(col(partCol), pmod(col("doc_id"), lit(4L))))
-      mount(s, dir)
-      if (SnapStore.currentVersion(t).contains(1)) {
+  private[graft] def docsCompactFiltered(s: SparkSession,
+      dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_cfil") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, numFiles = 32,
+        clusterExprs = Seq(col(partCol), pmod(col("doc_id"), lit(4L))))),
+      next(t) {
         val before = SnapStore.currentManifest(t)
         val total = before.files.map(_.bytes).sum
         s.sql("CALL graft.system.rewrite_data_files_where(" +
@@ -2337,9 +2328,10 @@ object Maintenance {
         val inAfter = after.files.count(_.partMin.toLong <= 2)
         require(inAfter < inBefore,
           s"in-scope files must bin-pack ($inBefore -> $inAfter)")
-      }
-      t
+      })
     }
+  def ensureDocsCompactFiltered(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsCompactFiltered(s, dir))
 
   /** Filtered compaction: full-table contents after a predicate-
     * scoped rewrite — the hash match proves the partial bin-pack
@@ -2370,24 +2362,21 @@ object Maintenance {
     * layout [[graft.sources.SnapSpj]] requires before reporting
     * KeyGroupedPartitioning.
     */
-  def ensureDocsSpj(s: SparkSession, dir: String): (Path, Path) =
-    synchronized {
-      def build(name: String, mod3: Long): Path = {
-        val t = root(dir).resolve(name)
-        if (SnapStore.currentVersion(t).isEmpty) {
-          val rows = base(s, dir)
-            .filter(pmod(col("doc_id"), lit(3L)) === mod3)
-          SnapStore.create(s, t, rows.filter(col(partCol) === 0L), partCol)
-          (1L until nParts.toLong).foreach(p =>
-            SnapStore.append(s, t, rows.filter(col(partCol) === p), partCol))
-        }
-        t
-      }
-      val ta = build("docs_spj_a", 0L)
-      val tb = build("docs_spj_b", 1L)
-      mount(s, dir)
-      (ta, tb)
+  private[graft] def docsSpj(s: SparkSession,
+      dir: String): Lifecycle[(Path, Path)] = {
+    def build(name: String, mod3: Long): (Path, Seq[Step]) = {
+      val t = root(dir).resolve(name)
+      lazy val rows = base(s, dir)
+        .filter(pmod(col("doc_id"), lit(3L)) === mod3)
+      (t, slices(s, t, partCol)(0L until nParts.toLong)(p =>
+        rows.filter(col(partCol) === p)))
     }
+    val (ta, sa) = build("docs_spj_a", 0L)
+    val (tb, sb) = build("docs_spj_b", 1L)
+    Lifecycle("docs_spj", sa ++ sb, (ta, tb))
+  }
+  def ensureDocsSpj(s: SparkSession, dir: String): (Path, Path) =
+    drive(s, dir, docsSpj(s, dir))
 
   /** Storage-partitioned join (SPARK-37377; Iceberg's SPJ): two snap
     * tables co-partitioned on `part` join on it with the session's
@@ -2400,12 +2389,9 @@ object Maintenance {
     */
   def spjJoin(s: SparkSession, dir: String): DataFrame = {
     val (_, _) = ensureDocsSpj(s, dir)
-    val olds = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k =>
-      k -> s.conf.getOption(k))
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(s,
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = s.sql(
         """SELECT a.part, COUNT(*) AS n_pairs,
           |  SUM(a.tok + b.tok) AS sum_tok
@@ -2418,9 +2404,6 @@ object Maintenance {
         s"storage-partitioned join must not shuffle the fact sides " +
           s"(found $exch exchanges):\n${j.queryExecution.executedPlan}")
       s.createDataFrame(java.util.Arrays.asList(rows: _*), j.schema)
-    } finally olds.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -2430,19 +2413,17 @@ object Maintenance {
     * from the manifest-listed keys, reading only key-bounds-matching
     * files — no table rewrite, no applyDeletes fold first.
     */
-  def ensureDocsChangelogMor(s: SparkSession, dir: String): Path =
-    synchronized {
-      val t = root(dir).resolve("docs_clm")
-      if (SnapStore.currentVersion(t).isEmpty)
-        SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-      if (SnapStore.currentVersion(t).contains(1))
-        SnapStore.deleteEquality(s, t,
-          base(s, dir).filter(col(partCol) === 6 &&
-            pmod(col("doc_id"), lit(7L)) === 0).select(col("doc_id")),
-          "doc_id")
-      mount(s, dir)
-      t
+  private[graft] def docsChangelogMor(s: SparkSession,
+      dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_clm") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t)(SnapStore.deleteEquality(s, t,
+        base(s, dir).filter(col(partCol) === 6 &&
+          pmod(col("doc_id"), lit(7L)) === 0).select(col("doc_id")),
+        "doc_id")))
     }
+  def ensureDocsChangelogMor(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsChangelogMor(s, dir))
 
   /** Changelog netting of a MOR delete commit: the v1→v2 changelog of
     * a delete-file-only commit — every row surfaces as a DELETE with
@@ -2473,26 +2454,25 @@ object Maintenance {
     * current snapshot's `.files` — the set expiry and orphan sweeps
     * must never delete.
     */
-  def ensureDocsAllFiles(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_af")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol)
-    if (SnapStore.currentVersion(t).contains(1))
-      // +800000 preserves doc_id % 8.
-      SnapStore.append(s, t,
-        b.filter(pmod(col("doc_id"), lit(13L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 800000L), partCol)
-    if (SnapStore.branchHead(t, "side").isEmpty &&
-      SnapStore.currentVersion(t).contains(2))
-      SnapStore.createBranch(t, "side")
-    if (SnapStore.branchHead(t, "side").contains(1))
-      SnapStore.appendToBranch(s, t, "side",
-        b.filter(pmod(col("doc_id"), lit(23L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 900000L), partCol)
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsAllFiles(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_af") { t =>
+      lazy val b = base(s, dir)
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol)),
+        // +800000 preserves doc_id % 8.
+        next(t)(SnapStore.append(s, t,
+          b.filter(pmod(col("doc_id"), lit(13L)) === 0)
+            .withColumn("doc_id", col("doc_id") + 800000L), partCol)),
+        dueIf(SnapStore.branchHead(t, "side").isEmpty &&
+          SnapStore.currentVersion(t).contains(2))(
+          SnapStore.createBranch(t, "side")),
+        dueIf(SnapStore.branchHead(t, "side").contains(1))(
+          SnapStore.appendToBranch(s, t, "side",
+            b.filter(pmod(col("doc_id"), lit(23L)) === 0)
+              .withColumn("doc_id", col("doc_id") + 900000L), partCol)))
+    }
+  def ensureDocsAllFiles(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsAllFiles(s, dir))
 
   /** `.all_files` metadata table: row totals of the FULL retention
     * set vs the current snapshot — the branch's exclusive rows are
@@ -2527,25 +2507,22 @@ object Maintenance {
     * the layout a skewed or lagging fact-fact join actually has.
     * Per-value commits keep every file provably single-valued.
     */
-  def ensureDocsSpjPartial(s: SparkSession, dir: String): (Path, Path) =
-    synchronized {
-      def build(name: String, mod3: Long, lo: Long, hi: Long): Path = {
-        val t = root(dir).resolve(name)
-        if (SnapStore.currentVersion(t).isEmpty) {
-          val rows = base(s, dir)
-            .filter(pmod(col("doc_id"), lit(3L)) === mod3 &&
-              col(partCol) >= lo && col(partCol) <= hi)
-          SnapStore.create(s, t, rows.filter(col(partCol) === lo), partCol)
-          ((lo + 1) to hi).foreach(p =>
-            SnapStore.append(s, t, rows.filter(col(partCol) === p), partCol))
-        }
-        t
-      }
-      val ta = build("docs_spjp_a", 0L, 0L, 5L)
-      val tb = build("docs_spjp_b", 1L, 2L, 7L)
-      mount(s, dir)
-      (ta, tb)
+  private[graft] def docsSpjPartial(s: SparkSession,
+      dir: String): Lifecycle[(Path, Path)] = {
+    def build(name: String, mod3: Long, lo: Long,
+        hi: Long): (Path, Seq[Step]) = {
+      val t = root(dir).resolve(name)
+      lazy val rows = base(s, dir)
+        .filter(pmod(col("doc_id"), lit(3L)) === mod3 &&
+          col(partCol) >= lo && col(partCol) <= hi)
+      (t, slices(s, t, partCol)(lo to hi)(p => rows.filter(col(partCol) === p)))
     }
+    val (ta, sa) = build("docs_spjp_a", 0L, 0L, 5L)
+    val (tb, sb) = build("docs_spjp_b", 1L, 2L, 7L)
+    Lifecycle("docs_spjp", sa ++ sb, (ta, tb))
+  }
+  def ensureDocsSpjPartial(s: SparkSession, dir: String): (Path, Path) =
+    drive(s, dir, docsSpjPartial(s, dir))
 
   /** Partially-clustered storage-partitioned join (SPARK-37377 +
     * pushed partition values): the two sides' partition-value sets
@@ -2558,15 +2535,10 @@ object Maintenance {
     */
   def spjPartialJoin(s: SparkSession, dir: String): DataFrame = {
     ensureDocsSpjPartial(s, dir)
-    val olds = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k =>
-      k -> s.conf.getOption(k))
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(s,
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = s.sql(
         """SELECT COALESCE(a.part, b.part) AS part,
           |  COUNT(a.doc_id) AS n_a, COUNT(b.doc_id) AS n_b,
@@ -2582,9 +2554,6 @@ object Maintenance {
         s"partially-clustered SPJ must not shuffle below the join " +
           s"(found $below):\n${j.queryExecution.executedPlan}")
       s.createDataFrame(java.util.Arrays.asList(rows: _*), j.schema)
-    } finally olds.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -2661,12 +2630,9 @@ object Maintenance {
     */
   def spjBucketJoin(s: SparkSession, dir: String): DataFrame = {
     ensureDocsSpjBucket(s, dir)
-    val olds = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k =>
-      k -> s.conf.getOption(k))
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(s,
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = s.sql(
         """SELECT COUNT(*) AS n_pairs, SUM(a.tok + b.tok) AS sum_tok,
           |  MIN(a.doc_id) AS min_id, MAX(a.doc_id) AS max_id
@@ -2678,9 +2644,6 @@ object Maintenance {
         s"bucketed SPJ must not shuffle the fact sides " +
           s"(found $exch exchanges):\n${j.queryExecution.executedPlan}")
       s.createDataFrame(java.util.Arrays.asList(rows: _*), j.schema)
-    } finally olds.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -2688,27 +2651,22 @@ object Maintenance {
     * column-shapes over overlapping doc_id sets, written one BUCKET
     * per commit so every file is single-valued on the bucket number.
     */
-  def ensureDocsSpjBucket(s: SparkSession, dir: String): (Path, Path) =
-    synchronized {
-      val bexpr = pmod(hash(col("doc_id")), lit(4))
-      def build(name: String, rows: DataFrame): Path = {
-        val t = root(dir).resolve(name)
-        if (SnapStore.currentVersion(t).isEmpty) {
-          SnapStore.create(s, t, rows.filter(bexpr === 0),
-            "bucket(4,doc_id)")
-          (1 to 3).foreach(k =>
-            SnapStore.append(s, t, rows.filter(bexpr === k),
-              "bucket(4,doc_id)"))
-        }
-        t
-      }
-      val b = base(s, dir).select(col("doc_id"), col("tok"))
-      val ta = build("docs_spjb_a", b)
-      val tb = build("docs_spjb_b",
-        b.filter(pmod(col("doc_id"), lit(2L)) === 0))
-      mount(s, dir)
-      (ta, tb)
+  private[graft] def docsSpjBucket(s: SparkSession,
+      dir: String): Lifecycle[(Path, Path)] = {
+    val bexpr = pmod(hash(col("doc_id")), lit(4))
+    def build(name: String, rows: => DataFrame): (Path, Seq[Step]) = {
+      val t = root(dir).resolve(name)
+      (t, slices(s, t, "bucket(4,doc_id)")(0 to 3)(k =>
+        rows.filter(bexpr === k)))
     }
+    lazy val b = base(s, dir).select(col("doc_id"), col("tok"))
+    val (ta, sa) = build("docs_spjb_a", b)
+    val (tb, sb) = build("docs_spjb_b",
+      b.filter(pmod(col("doc_id"), lit(2L)) === 0))
+    Lifecycle("docs_spjb", sa ++ sb, (ta, tb))
+  }
+  def ensureDocsSpjBucket(s: SparkSession, dir: String): (Path, Path) =
+    drive(s, dir, docsSpjBucket(s, dir))
 
   val spjBucketJoinOracle: String =
     s"""WITH a AS (
@@ -2734,42 +2692,31 @@ object Maintenance {
     * `(part2, doc_id)` — then the join result, delete-adjusted,
     * hash-compared against the oracle's logical recompute.
     */
-  def ensureDocsMulti(s: SparkSession, dir: String): (Path, Path) =
-    synchronized {
-      val bexpr = pmod(hash(col("doc_id")), lit(4))
-      val multiSpecStr = "part2,bucket(4,doc_id)"
-      def build(name: String, rows: DataFrame): Path = {
-        val t = root(dir).resolve(name)
-        if (SnapStore.currentVersion(t).isEmpty) {
-          var first = true
-          (0L to 1L).foreach { p =>
-            (0 until 4).foreach { k =>
-              val slice = rows.filter(col("part2") === p && bexpr === k)
-              if (first) {
-                SnapStore.create(s, t, slice, multiSpecStr, numFiles = 1)
-                first = false
-              } else SnapStore.append(s, t, slice, multiSpecStr,
-                numFiles = 1)
-            }
-          }
-        }
-        t
-      }
-      val b = base(s, dir).select(col("doc_id"),
-        pmod(col("doc_id"), lit(2L)).as("part2"), col("text"), col("tok"))
-      val ta = build("docs_multi_a", b)
-      val tb = build("docs_multi_b",
-        b.filter(pmod(col("doc_id"), lit(5L)) === 0)
-          .select(col("doc_id"), col("part2"), col("tok")))
-      // Merge-on-read position DELETE over the compound layout: the
-      // probe prunes by the part2 bounds (field 0) and the rewrite
-      // lands position-delete files the read folds.
-      if (SnapStore.currentVersion(ta).contains(8))
-        SnapStore.deletePositions(s, ta,
-          col("part2") === 1L && pmod(col("doc_id"), lit(3L)) === 0)
-      mount(s, dir)
-      (ta, tb)
+  private[graft] def docsMulti(s: SparkSession,
+      dir: String): Lifecycle[(Path, Path)] = {
+    val bexpr = pmod(hash(col("doc_id")), lit(4))
+    val cells = for (p <- 0L to 1L; k <- 0 until 4) yield (p, k)
+    def build(name: String, rows: => DataFrame): (Path, Seq[Step]) = {
+      val t = root(dir).resolve(name)
+      (t, slices(s, t, "part2,bucket(4,doc_id)", numFiles = 1)(cells) {
+        case (p, k) => rows.filter(col("part2") === p && bexpr === k)
+      })
     }
+    lazy val b = base(s, dir).select(col("doc_id"),
+      pmod(col("doc_id"), lit(2L)).as("part2"), col("text"), col("tok"))
+    val (ta, sa) = build("docs_multi_a", b)
+    val (tb, sb) = build("docs_multi_b",
+      b.filter(pmod(col("doc_id"), lit(5L)) === 0)
+        .select(col("doc_id"), col("part2"), col("tok")))
+    // Merge-on-read position DELETE over the compound layout: the
+    // probe prunes by the part2 bounds (field 0) and the rewrite
+    // lands position-delete files the read folds.
+    val del = next(ta)(SnapStore.deletePositions(s, ta,
+      col("part2") === 1L && pmod(col("doc_id"), lit(3L)) === 0))
+    Lifecycle("docs_multi", sa ++ sb :+ del, (ta, tb))
+  }
+  def ensureDocsMulti(s: SparkSession, dir: String): (Path, Path) =
+    drive(s, dir, docsMulti(s, dir))
 
   def multiSpec(s: SparkSession, dir: String): DataFrame = {
     val (ta, _) = ensureDocsMulti(s, dir)
@@ -2794,12 +2741,9 @@ object Maintenance {
       s"the conjunction must prune to one (part, bucket) cell " +
         s"(kept $conj; part=$byPart bucket=$byBucket)")
     // (c) The two-transform SPJ join runs with no scan-side shuffle.
-    val olds = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k =>
-      k -> s.conf.getOption(k))
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(s,
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = s.sql(
         s"""SELECT a.part2, COUNT(*) AS n_pairs,
            |  SUM(a.tok + b.tok) AS sum_tok,
@@ -2819,9 +2763,6 @@ object Maintenance {
         s"the compound-spec SPJ must not shuffle the fact sides " +
           s"(found $below below the join):\n${j.queryExecution.executedPlan}")
       s.createDataFrame(java.util.Arrays.asList(rows: _*), j.schema)
-    } finally olds.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -2985,22 +2926,21 @@ object Maintenance {
     * to v2) — instants are stamped, so no blind sleep is needed, only
     * a clock tick.
     */
-  def ensureDocsTs(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_ts")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol)
-    if (SnapStore.currentVersion(t).contains(1)) {
-      val i1 = SnapStore.commitInstantMs(t, 1)
-      while (System.currentTimeMillis() <= i1) Thread.sleep(1L)
-      SnapStore.append(s, t,
-        base(s, dir).filter(pmod(col("doc_id"), lit(19L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 500000L)
-          .withColumn("source", lit("srcT")),
-        partCol)
+  private[graft] def docsTs(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_ts") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol)),
+      next(t) {
+        val i1 = SnapStore.commitInstantMs(t, 1)
+        while (System.currentTimeMillis() <= i1) Thread.sleep(1L)
+        SnapStore.append(s, t,
+          base(s, dir).filter(pmod(col("doc_id"), lit(19L)) === 0)
+            .withColumn("doc_id", col("doc_id") + 500000L)
+            .withColumn("source", lit("srcT")),
+          partCol)
+      })
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsTs(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsTs(s, dir))
 
   /** `TIMESTAMP AS OF` time travel (VERDICT r11 #1): the same SQL
     * aggregate read at v1's stamped instant and at the head's — the
@@ -3050,36 +2990,34 @@ object Maintenance {
     * every `%41==3` doc inserts re-keyed `+700000` as `srcN2`;
     * target-only rows with `doc_id % 43 == 7` re-source to `srcB`.
     */
-  def ensureDocsMrgd(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_mrgd")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    if (SnapStore.currentVersion(t).contains(1)) {
-      mount(s, dir)
-      val b = base(s, dir)
-      b.filter(pmod(col("doc_id"), lit(37L)) === 2)
-        .withColumn("source", lit("srcQ2")).withColumn("kind", lit("upd"))
-        .unionByName(b.filter(pmod(col("doc_id"), lit(37L)) === 5)
-          .withColumn("kind", lit("del")))
-        .unionByName(b.filter(pmod(col("doc_id"), lit(41L)) === 3)
-          .withColumn("doc_id", col("doc_id") + 700000L)
-          .withColumn("source", lit("srcN2")).withColumn("kind", lit("ins")))
-        .createOrReplaceTempView("graft_mrgd_src")
-      s.sql(
-        """MERGE INTO graft.maint.docs_mrgd t
-          |USING graft_mrgd_src s
-          |ON t.doc_id = s.doc_id
-          |WHEN MATCHED AND s.kind = 'del' THEN DELETE
-          |WHEN MATCHED THEN UPDATE SET t.source = s.source
-          |WHEN NOT MATCHED THEN INSERT
-          |  (doc_id, part, source, text, tok)
-          |  VALUES (s.doc_id, s.part, s.source, s.text, s.tok)
-          |WHEN NOT MATCHED BY SOURCE AND t.doc_id % 43 = 7
-          |  THEN UPDATE SET t.source = 'srcB'""".stripMargin)
+  private[graft] def docsMrgd(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_mrgd") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+      next(t) {
+        val b = base(s, dir)
+        b.filter(pmod(col("doc_id"), lit(37L)) === 2)
+          .withColumn("source", lit("srcQ2")).withColumn("kind", lit("upd"))
+          .unionByName(b.filter(pmod(col("doc_id"), lit(37L)) === 5)
+            .withColumn("kind", lit("del")))
+          .unionByName(b.filter(pmod(col("doc_id"), lit(41L)) === 3)
+            .withColumn("doc_id", col("doc_id") + 700000L)
+            .withColumn("source", lit("srcN2")).withColumn("kind", lit("ins")))
+          .createOrReplaceTempView("graft_mrgd_src")
+        s.sql(
+          """MERGE INTO graft.maint.docs_mrgd t
+            |USING graft_mrgd_src s
+            |ON t.doc_id = s.doc_id
+            |WHEN MATCHED AND s.kind = 'del' THEN DELETE
+            |WHEN MATCHED THEN UPDATE SET t.source = s.source
+            |WHEN NOT MATCHED THEN INSERT
+            |  (doc_id, part, source, text, tok)
+            |  VALUES (s.doc_id, s.part, s.source, s.text, s.tok)
+            |WHEN NOT MATCHED BY SOURCE AND t.doc_id % 43 = 7
+            |  THEN UPDATE SET t.source = 'srcB'""".stripMargin)
+      })
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsMrgd(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsMrgd(s, dir))
 
   /** Full-clause MERGE contents per source: the oracle recomputes
     * delete/update/insert/not-matched-by-source logically, so a hash
@@ -3124,43 +3062,43 @@ object Maintenance {
     * `morI`. The base data files never rewrite; reads net pairs by
     * `(file, ordinal)`.
     */
-  def ensureDocsMordml(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_mordml")
-    if (SnapStore.currentVersion(t).isEmpty) {
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-      SnapStore.setProperties(t, Map(
-        "write.delete.mode" -> "merge-on-read",
-        "write.update.mode" -> "merge-on-read",
-        "write.merge.mode" -> "merge-on-read"))
+  private[graft] def docsMordml(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_mordml") { t => Seq(
+      next(t) {
+        SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
+        SnapStore.setProperties(t, Map(
+          "write.delete.mode" -> "merge-on-read",
+          "write.update.mode" -> "merge-on-read",
+          "write.merge.mode" -> "merge-on-read"))
+      },
+      next(t) {
+        s.sql("DELETE FROM graft.maint.docs_mordml WHERE doc_id % 17 = 4")
+        require(SnapStore.currentManifest(t).operation == "delete-mor",
+          "the DELETE must route merge-on-read")
+      },
+      next(t) {
+        val b = base(s, dir)
+        b.filter(pmod(col("doc_id"), lit(23L)) === 1 &&
+            pmod(col("doc_id"), lit(17L)) =!= 4)
+          .withColumn("source", lit("morU"))
+          .unionByName(b.filter(pmod(col("doc_id"), lit(29L)) === 2)
+            .withColumn("doc_id", col("doc_id") + 900000L)
+            .withColumn("source", lit("morI")))
+          .createOrReplaceTempView("graft_mordml_src")
+        s.sql(
+          """MERGE INTO graft.maint.docs_mordml t
+            |USING graft_mordml_src s
+            |ON t.doc_id = s.doc_id
+            |WHEN MATCHED THEN UPDATE SET t.source = s.source
+            |WHEN NOT MATCHED THEN INSERT
+            |  (doc_id, part, source, text, tok)
+            |  VALUES (s.doc_id, s.part, s.source, s.text, s.tok)""".stripMargin)
+        require(SnapStore.currentManifest(t).operation == "merge-mor",
+          "the MERGE must route merge-on-read")
+      })
     }
-    mount(s, dir)
-    if (SnapStore.currentVersion(t).contains(1)) {
-      s.sql("DELETE FROM graft.maint.docs_mordml WHERE doc_id % 17 = 4")
-      require(SnapStore.currentManifest(t).operation == "delete-mor",
-        "the DELETE must route merge-on-read")
-    }
-    if (SnapStore.currentVersion(t).contains(2)) {
-      val b = base(s, dir)
-      b.filter(pmod(col("doc_id"), lit(23L)) === 1 &&
-          pmod(col("doc_id"), lit(17L)) =!= 4)
-        .withColumn("source", lit("morU"))
-        .unionByName(b.filter(pmod(col("doc_id"), lit(29L)) === 2)
-          .withColumn("doc_id", col("doc_id") + 900000L)
-          .withColumn("source", lit("morI")))
-        .createOrReplaceTempView("graft_mordml_src")
-      s.sql(
-        """MERGE INTO graft.maint.docs_mordml t
-          |USING graft_mordml_src s
-          |ON t.doc_id = s.doc_id
-          |WHEN MATCHED THEN UPDATE SET t.source = s.source
-          |WHEN NOT MATCHED THEN INSERT
-          |  (doc_id, part, source, text, tok)
-          |  VALUES (s.doc_id, s.part, s.source, s.text, s.tok)""".stripMargin)
-      require(SnapStore.currentManifest(t).operation == "merge-mor",
-        "the MERGE must route merge-on-read")
-    }
-    t
-  }
+  def ensureDocsMordml(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsMordml(s, dir))
 
   /** MOR SQL DELETE face: per-partition counts + checksum over the
     * post-DML table — the oracle recomputes the delete + merge
@@ -3255,13 +3193,12 @@ object Maintenance {
     * columns, where the HLL sketch is exact and DuckDB recomputes
     * the same counts.
     */
-  def ensureDocsStats(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_stats")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsStats(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_stats") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")))
+    }
+  def ensureDocsStats(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsStats(s, dir))
 
   def tableStats(s: SparkSession, dir: String): DataFrame = {
     ensureDocsStats(s, dir)
@@ -3308,41 +3245,41 @@ object Maintenance {
     * bumped on exactly the updated rows (RowLineageSpec pins the
     * per-doc stability).
     */
-  def ensureDocsLineage(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_lineage")
-    if (SnapStore.currentVersion(t).isEmpty) {
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-      SnapStore.setProperties(t,
-        Map("write.update.mode" -> "merge-on-read"))
+  private[graft] def docsLineage(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_lineage") { t => Seq(
+      next(t) {
+        SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
+        SnapStore.setProperties(t,
+          Map("write.update.mode" -> "merge-on-read"))
+      },
+      next(t) {
+        s.sql("UPDATE graft.maint.docs_lineage SET source = 'linU' " +
+          "WHERE doc_id % 23 = 1")
+        require(SnapStore.currentManifest(t).operation == "update-mor")
+      },
+      next(t) {
+        SnapStore.compact(s, t, partCol, Long.MaxValue)
+        require(SnapStore.currentManifest(t).files.forall(_.lineage),
+          "the compact must materialize row lineage")
+      },
+      // COW UPDATE carry (VERDICT r13 #1): flip the update mode to
+      // copy-on-write and run a group-based UPDATE — the rewrite
+      // requests `_row_id`/`_last_updated_sequence_number` as required
+      // metadata attributes and materializes them into the replacement
+      // files: carried rows keep BOTH, updated rows keep their id with
+      // the sequence nullified (re-stamped to the new commit by the
+      // read's v3 null rule).
+      next(t) {
+        SnapStore.setProperties(t,
+          Map("write.update.mode" -> "copy-on-write"))
+        s.sql("UPDATE graft.maint.docs_lineage SET source = 'linC' " +
+          "WHERE doc_id % 31 = 2")
+        require(SnapStore.currentManifest(t).operation == "update",
+          "the COW update must route the group-based path")
+      })
     }
-    mount(s, dir)
-    if (SnapStore.currentVersion(t).contains(1)) {
-      s.sql("UPDATE graft.maint.docs_lineage SET source = 'linU' " +
-        "WHERE doc_id % 23 = 1")
-      require(SnapStore.currentManifest(t).operation == "update-mor")
-    }
-    if (SnapStore.currentVersion(t).contains(2)) {
-      SnapStore.compact(s, t, partCol, Long.MaxValue)
-      require(SnapStore.currentManifest(t).files.forall(_.lineage),
-        "the compact must materialize row lineage")
-    }
-    // COW UPDATE carry (VERDICT r13 #1): flip the update mode to
-    // copy-on-write and run a group-based UPDATE — the rewrite
-    // requests `_row_id`/`_last_updated_sequence_number` as required
-    // metadata attributes and materializes them into the replacement
-    // files: carried rows keep BOTH, updated rows keep their id with
-    // the sequence nullified (re-stamped to the new commit by the
-    // read's v3 null rule).
-    if (SnapStore.currentVersion(t).contains(3)) {
-      SnapStore.setProperties(t,
-        Map("write.update.mode" -> "copy-on-write"))
-      s.sql("UPDATE graft.maint.docs_lineage SET source = 'linC' " +
-        "WHERE doc_id % 31 = 2")
-      require(SnapStore.currentManifest(t).operation == "update",
-        "the COW update must route the group-based path")
-    }
-    t
-  }
+  def ensureDocsLineage(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsLineage(s, dir))
 
   def rowLineage(s: SparkSession, dir: String): DataFrame = {
     val t = ensureDocsLineage(s, dir)
@@ -3400,27 +3337,26 @@ object Maintenance {
     * registered name then commits onto the SOURCE root, proving the
     * adoption carried the full write surface, not just reads.
     */
-  def ensureDocsReg(s: SparkSession, dir: String): Path = synchronized {
+  private[graft] def docsReg(s: SparkSession, dir: String): Lifecycle[Path] = {
     val src = root(dir).resolve(".ext_reg").resolve("src")
-    if (SnapStore.currentVersion(src).isEmpty)
-      SnapStore.create(s, src,
-        base(s, dir).filter(pmod(col("doc_id"), lit(29L)) =!= 7), partCol)
-    mount(s, dir)
     val alias = root(dir).resolve("docs_reg")
-    if (!java.nio.file.Files.exists(alias,
-      java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      s.sql(s"CALL graft.system.register_table('maint.docs_reg', '$src')")
-    if (SnapStore.currentVersion(src).contains(1)) {
-      base(s, dir).filter(pmod(col("doc_id"), lit(29L)) === 7)
-        .withColumn("source", lit("regI"))
-        .createOrReplaceTempView("graft_reg_batch")
-      s.sql("INSERT INTO graft.maint.docs_reg " +
-        "SELECT doc_id, part, source, text, tok FROM graft_reg_batch")
-      require(SnapStore.currentVersion(src).contains(2),
-        "the INSERT must commit on the registered source root")
-    }
-    alias
+    Lifecycle("docs_reg", Seq(
+      next(src)(SnapStore.create(s, src,
+        base(s, dir).filter(pmod(col("doc_id"), lit(29L)) =!= 7), partCol)),
+      dueIf(!Files.exists(alias, java.nio.file.LinkOption.NOFOLLOW_LINKS))(
+        s.sql(s"CALL graft.system.register_table('maint.docs_reg', '$src')")),
+      next(src) {
+        base(s, dir).filter(pmod(col("doc_id"), lit(29L)) === 7)
+          .withColumn("source", lit("regI"))
+          .createOrReplaceTempView("graft_reg_batch")
+        s.sql("INSERT INTO graft.maint.docs_reg " +
+          "SELECT doc_id, part, source, text, tok FROM graft_reg_batch")
+        require(SnapStore.currentVersion(src).contains(2),
+          "the INSERT must commit on the registered source root")
+      }), alias)
   }
+  def ensureDocsReg(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsReg(s, dir))
 
   def registerTable(s: SparkSession, dir: String): DataFrame = {
     ensureDocsReg(s, dir)
@@ -3448,14 +3384,16 @@ object Maintenance {
     * stored SQL and the filter reaches the base scan
     * (ViewCatalogSpec pins the pushdown and the view-on-view nest).
     */
-  def ensureDocsView(s: SparkSession, dir: String): Unit = synchronized {
-    ensureDocsStats(s, dir)
+  private[graft] def docsView(s: SparkSession, dir: String): Lifecycle[Unit] = {
     val vf = root(dir).resolve("_views").resolve("docs_view.view")
-    if (!java.nio.file.Files.isRegularFile(vf))
+    val create = dueIf(!Files.isRegularFile(vf))(
       s.sql("""CALL graft.system.create_view('maint.docs_view',
         'SELECT doc_id, part, source, text FROM graft.maint.docs_stats
-         WHERE doc_id % 3 != 2')""")
+         WHERE doc_id % 3 != 2')"""))
+    Lifecycle("docs_view", docsStats(s, dir).steps :+ create, ())
   }
+  def ensureDocsView(s: SparkSession, dir: String): Unit =
+    drive(s, dir, docsView(s, dir))
 
   def viewRead(s: SparkSession, dir: String): DataFrame = {
     ensureDocsView(s, dir)
@@ -3482,25 +3420,23 @@ object Maintenance {
     * files alike (the adopted entries' sequence precedes the
     * delete's).
     */
-  def ensureDocsAdd(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_add")
-    val ext = root(dir).resolve("import_src")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b.filter(col(partCol) < 4), partCol,
-        keyCol = "doc_id")
-    if (!Files.exists(ext.resolve("_SUCCESS")))
-      b.filter(col(partCol) >= 4)
-        .write.mode("overwrite").parquet(ext.toString)
-    mount(s, dir)
-    if (SnapStore.currentVersion(t).contains(1))
-      s.sql(s"CALL graft.system.add_files('maint.docs_add', '$ext')")
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.deleteEquality(s, t,
-        b.filter(pmod(col("doc_id"), lit(13L)) === 0).select("doc_id"),
-        "doc_id")
-    t
-  }
+  private[graft] def docsAdd(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_add") { t =>
+      val ext = root(dir).resolve("import_src")
+      lazy val b = base(s, dir)
+      Seq(
+        next(t)(SnapStore.create(s, t, b.filter(col(partCol) < 4), partCol,
+          keyCol = "doc_id")),
+        dueIf(!Files.exists(ext.resolve("_SUCCESS")))(
+          b.filter(col(partCol) >= 4)
+            .write.mode("overwrite").parquet(ext.toString)),
+        next(t)(s.sql(s"CALL graft.system.add_files('maint.docs_add', '$ext')")),
+        next(t)(SnapStore.deleteEquality(s, t,
+          b.filter(pmod(col("doc_id"), lit(13L)) === 0).select("doc_id"),
+          "doc_id")))
+    }
+  def ensureDocsAdd(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsAdd(s, dir))
 
   /** Post-adoption contents per partition: the oracle recomputes the
     * full fixture minus the MOR-deleted keys, so a hash match proves
@@ -3533,61 +3469,55 @@ object Maintenance {
     * .publish_changes` cherry-picks exactly the staged rows onto
     * main. The staging chain drops on publish.
     */
-  def ensureDocsWapId(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_wapid")
-    val b = base(s, dir)
-    val bname = SnapStore.wapStageBranch("batch7")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol, keyCol = "doc_id")
-    mount(s, dir)
-    // Crash-reentrant staging (code review r12): the INSERT runs only
-    // while the staging chain is ABSENT, so a run that died between
-    // stage and publish resumes at the publish instead of staging a
-    // second copy and wedging on the branch-version require.
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, bname).isEmpty) {
-      val confKey = "spark.graft.wap.id"
-      val old = s.conf.getOption(confKey)
-      s.conf.set(confKey, "batch7")
-      try {
-        b.filter(pmod(col("doc_id"), lit(23L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 800000L)
-          .withColumn("source", lit("srcW"))
-          .createOrReplaceTempView("wapid_batch")
-        s.sql("INSERT INTO graft.maint.docs_wapid SELECT * FROM wapid_batch")
-        require(SnapStore.currentVersion(t).contains(1),
-          "id-staged INSERT moved main — staging is broken")
-        require(SnapStore.branchHead(t, bname).contains(2),
-          "the staged snapshot must land on the id's hidden chain")
-      } finally old match {
-        case Some(v) => s.conf.set(confKey, v)
-        case None => s.conf.unset(confKey)
-      }
-      // Unlike the branch conf, wap.id does NOT route reads: the
-      // staged snapshot stays invisible until published (Iceberg's
-      // id-keyed contract).
-      val plain = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapid " +
-        "WHERE doc_id >= 800000").collect()(0).getLong(0)
-      require(plain == 0L,
-        s"id-staged rows leaked into a plain read ($plain rows)")
+  private[graft] def docsWapId(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_wapid") { t =>
+      lazy val b = base(s, dir)
+      val bname = SnapStore.wapStageBranch("batch7")
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol, keyCol = "doc_id")),
+        // Crash-reentrant staging (code review r12): the INSERT runs only
+        // while the staging chain is ABSENT, so a run that died between
+        // stage and publish resumes at the publish instead of staging a
+        // second copy and wedging on the branch-version require.
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, bname).isEmpty) {
+          GraftSession.withConf(s, "spark.graft.wap.id" -> "batch7") {
+            b.filter(pmod(col("doc_id"), lit(23L)) === 0)
+              .withColumn("doc_id", col("doc_id") + 800000L)
+              .withColumn("source", lit("srcW"))
+              .createOrReplaceTempView("wapid_batch")
+            s.sql("INSERT INTO graft.maint.docs_wapid SELECT * FROM wapid_batch")
+            require(SnapStore.currentVersion(t).contains(1),
+              "id-staged INSERT moved main — staging is broken")
+            require(SnapStore.branchHead(t, bname).contains(2),
+              "the staged snapshot must land on the id's hidden chain")
+          }
+          // Unlike the branch conf, wap.id does NOT route reads: the
+          // staged snapshot stays invisible until published (Iceberg's
+          // id-keyed contract).
+          val plain = s.sql("SELECT COUNT(*) AS n FROM graft.maint.docs_wapid " +
+            "WHERE doc_id >= 800000").collect()(0).getLong(0)
+          require(plain == 0L,
+            s"id-staged rows leaked into a plain read ($plain rows)")
+        },
+        dueIf(SnapStore.currentVersion(t).contains(1) &&
+          SnapStore.branchHead(t, bname).contains(2)) {
+          s.sql(
+            "CALL graft.system.publish_changes('maint.docs_wapid', 'batch7')")
+          require(SnapStore.currentVersion(t).contains(2),
+            "publish_changes must commit the staged rows onto main")
+          require(SnapStore.branchHead(t, bname).isEmpty,
+            "the staging chain must drop on publish")
+        },
+        // A crash between the publish commit and the branch drop leaves a
+        // stale chain behind main v2: the idempotent republish clears it.
+        dueIf(SnapStore.currentVersion(t).contains(2) &&
+          SnapStore.branchHead(t, bname).nonEmpty)(
+          s.sql(
+            "CALL graft.system.publish_changes('maint.docs_wapid', 'batch7')")))
     }
-    if (SnapStore.currentVersion(t).contains(1) &&
-      SnapStore.branchHead(t, bname).contains(2)) {
-      s.sql(
-        "CALL graft.system.publish_changes('maint.docs_wapid', 'batch7')")
-      require(SnapStore.currentVersion(t).contains(2),
-        "publish_changes must commit the staged rows onto main")
-      require(SnapStore.branchHead(t, bname).isEmpty,
-        "the staging chain must drop on publish")
-    }
-    // A crash between the publish commit and the branch drop leaves a
-    // stale chain behind main v2: the idempotent republish clears it.
-    if (SnapStore.currentVersion(t).contains(2) &&
-      SnapStore.branchHead(t, bname).nonEmpty)
-      s.sql(
-        "CALL graft.system.publish_changes('maint.docs_wapid', 'batch7')")
-    t
-  }
+  def ensureDocsWapId(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsWapId(s, dir))
 
   /** Id-keyed WAP contents per partition after publish: the oracle
     * recomputes base + the staged batch; the hash match plus the
@@ -3623,37 +3553,36 @@ object Maintenance {
     * drops the `part = 1 AND tok >= 60` band (v4). Every face runs
     * through plain SQL against the created table.
     */
-  def ensureDocsCtas(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_ctas")
-    mount(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty) {
-      base(s, dir).createOrReplaceTempView("graft_ctas_base")
-      s.sql("""CREATE TABLE graft.maint.docs_ctas PARTITIONED BY (part)
+  private[graft] def docsCtas(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_ctas") { t => Seq(
+      next(t) {
+        base(s, dir).createOrReplaceTempView("graft_ctas_base")
+        s.sql("""CREATE TABLE graft.maint.docs_ctas PARTITIONED BY (part)
         TBLPROPERTIES ('key.column' = 'doc_id') AS
         SELECT doc_id, part, source, text, tok FROM graft_ctas_base
         WHERE part < 6""")
-    }
-    // Crash repair (code review r12): CTAS is two commits (create v1,
-    // SELECT lands as v2) — a run that died between them leaves an
-    // empty v1 no other branch advances. Land the SELECT as a plain
-    // INSERT; contents are identical to the CTAS's write.
-    if (SnapStore.currentVersion(t).contains(1)) {
-      base(s, dir).createOrReplaceTempView("graft_ctas_base")
-      s.sql("""INSERT INTO graft.maint.docs_ctas
+      },
+      // Crash repair (code review r12): CTAS is two commits (create v1,
+      // SELECT lands as v2) — a run that died between them leaves an
+      // empty v1 that the next step would build on. Land the SELECT as
+      // a plain INSERT; contents are identical to the CTAS's write.
+      next(t) {
+        base(s, dir).createOrReplaceTempView("graft_ctas_base")
+        s.sql("""INSERT INTO graft.maint.docs_ctas
         SELECT doc_id, part, source, text, tok FROM graft_ctas_base
         WHERE part < 6""")
-    }
-    if (SnapStore.currentVersion(t).contains(2)) {
-      base(s, dir).createOrReplaceTempView("graft_ctas_base")
-      s.sql("""INSERT INTO graft.maint.docs_ctas
+      },
+      next(t) {
+        base(s, dir).createOrReplaceTempView("graft_ctas_base")
+        s.sql("""INSERT INTO graft.maint.docs_ctas
         SELECT doc_id, part, 'srcG' AS source, text, tok
         FROM graft_ctas_base WHERE part >= 6""")
+      },
+      next(t)(s.sql("DELETE FROM graft.maint.docs_ctas " +
+        "WHERE part = 1 AND tok >= 60")))
     }
-    if (SnapStore.currentVersion(t).contains(3))
-      s.sql("DELETE FROM graft.maint.docs_ctas " +
-        "WHERE part = 1 AND tok >= 60")
-    t
-  }
+  def ensureDocsCtas(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsCtas(s, dir))
 
   /** CTAS-created table contents per source: the oracle recomputes
     * create-as-select + insert + delete logically, proving a table
@@ -3723,34 +3652,33 @@ object Maintenance {
     * twenty-ninth doc) — the source stays frozen at v2 (required
     * here; file-level physical claims live in IcebergFacesSpec).
     */
-  def ensureDocsClone(s: SparkSession, dir: String): (Path, Path) =
-    synchronized {
-      val src = root(dir).resolve("docs_snapsrc")
-      val clone = root(dir).resolve("docs_snapclone")
-      val b = base(s, dir)
-      if (SnapStore.currentVersion(src).isEmpty)
-        SnapStore.create(s, src, b, partCol, keyCol = "doc_id")
-      if (SnapStore.currentVersion(src).contains(1))
-        SnapStore.deleteEquality(s, src,
-          b.filter(pmod(col("doc_id"), lit(17L)) === 0).select("doc_id"),
-          "doc_id")
-      mount(s, dir)
-      if (SnapStore.currentVersion(clone).isEmpty)
-        s.sql("CALL graft.system.snapshot('maint.docs_snapsrc', " +
-          "'maint.docs_snapclone')")
+  private[graft] def docsClone(s: SparkSession,
+      dir: String): Lifecycle[(Path, Path)] = {
+    val src = root(dir).resolve("docs_snapsrc")
+    val clone = root(dir).resolve("docs_snapclone")
+    lazy val b = base(s, dir)
+    Lifecycle("docs_snapclone", Seq(
+      next(src)(SnapStore.create(s, src, b, partCol, keyCol = "doc_id")),
+      next(src)(SnapStore.deleteEquality(s, src,
+        b.filter(pmod(col("doc_id"), lit(17L)) === 0).select("doc_id"),
+        "doc_id")),
+      next(clone)(s.sql("CALL graft.system.snapshot('maint.docs_snapsrc', " +
+        "'maint.docs_snapclone')")),
       // The clone's first manifest KEEPS the source's version (2) so
       // carried sequence numbers stay coherent; the clone-side append
       // commits v3 (seq 3 — outranks the carried eq delete at seq 2).
-      if (SnapStore.currentVersion(clone).contains(2))
+      dueIf(SnapStore.currentVersion(clone).contains(2)) {
         SnapStore.append(s, clone,
           b.filter(pmod(col("doc_id"), lit(29L)) === 0)
             .withColumn("doc_id", col("doc_id") + 900000L)
             .withColumn("source", lit("srcS")),
           partCol)
-      require(SnapStore.currentVersion(src).contains(2),
-        "clone-side writes must never move the source table")
-      (src, clone)
-    }
+        require(SnapStore.currentVersion(src).contains(2),
+          "clone-side writes must never move the source table")
+      }), (src, clone))
+  }
+  def ensureDocsClone(s: SparkSession, dir: String): (Path, Path) =
+    drive(s, dir, docsClone(s, dir))
 
   /** Clone contents per partition after the clone-only append: the
     * oracle recomputes source-minus-deletes plus the appended batch.
@@ -3788,23 +3716,19 @@ object Maintenance {
     * equality delete (every nineteenth doc) then proves the migrated
     * table serves full DML like a born-snapshot one.
     */
-  def ensureDocsMigrate(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_migrate")
-    if (!SnapStore.isSnapTable(t)) {
-      if (!Files.exists(t.resolve("_SUCCESS")))
-        base(s, dir).write.mode("overwrite").parquet(t.toString)
-      mount(s, dir)
-      s.sql("CALL graft.system.migrate('maint.docs_migrate', " +
-        s"'$partCol', 'doc_id')")
-    }
-    mount(s, dir)
-    if (SnapStore.currentVersion(t).contains(1))
-      SnapStore.deleteEquality(s, t,
+  private[graft] def docsMigrate(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_migrate") { t => Seq(
+      dueIf(!SnapStore.isSnapTable(t) && !Files.exists(t.resolve("_SUCCESS")))(
+        base(s, dir).write.mode("overwrite").parquet(t.toString)),
+      next(t)(s.sql("CALL graft.system.migrate('maint.docs_migrate', " +
+        s"'$partCol', 'doc_id')")),
+      next(t)(SnapStore.deleteEquality(s, t,
         base(s, dir).filter(pmod(col("doc_id"), lit(19L)) === 0)
           .select("doc_id"),
-        "doc_id")
-    t
-  }
+        "doc_id")))
+    }
+  def ensureDocsMigrate(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsMigrate(s, dir))
 
   /** Migrated-table contents per partition: the oracle recomputes
     * the fixture minus the MOR-deleted keys — a hash match proves
@@ -3836,24 +3760,22 @@ object Maintenance {
     * bonus values (`tok`). Reads substitute the default for
     * pre-evolution files and serve written values for new ones.
     */
-  def ensureDocsDefault(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_default")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol, keyCol = "doc_id")
-    mount(s, dir)
-    if (SnapStore.currentVersion(t).contains(1))
-      s.sql("ALTER TABLE graft.maint.docs_default " +
-        "ADD COLUMN bonus BIGINT DEFAULT 5")
-    if (SnapStore.currentVersion(t).contains(2))
-      SnapStore.append(s, t,
-        b.filter(pmod(col("doc_id"), lit(27L)) === 0)
-          .withColumn("doc_id", col("doc_id") + 600000L)
-          .withColumn("source", lit("srcV"))
-          .withColumn("bonus", col("tok")),
-        partCol)
-    t
-  }
+  private[graft] def docsDefault(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_default") { t =>
+      lazy val b = base(s, dir)
+      Seq(
+        next(t)(SnapStore.create(s, t, b, partCol, keyCol = "doc_id")),
+        next(t)(s.sql("ALTER TABLE graft.maint.docs_default " +
+          "ADD COLUMN bonus BIGINT DEFAULT 5")),
+        next(t)(SnapStore.append(s, t,
+          b.filter(pmod(col("doc_id"), lit(27L)) === 0)
+            .withColumn("doc_id", col("doc_id") + 600000L)
+            .withColumn("source", lit("srcV"))
+            .withColumn("bonus", col("tok")),
+          partCol)))
+    }
+  def ensureDocsDefault(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsDefault(s, dir))
 
   /** Post-default contents per partition with the defaulted column
     * aggregated: the oracle recomputes old rows at the constant and
@@ -3891,33 +3813,25 @@ object Maintenance {
     * and supersede v2's per file (the v3 one-DV-per-file invariant).
     * Reads route by `refs` and apply the ordinals from the blobs.
     */
-  def ensureDocsDv(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_dv")
-    val b = base(s, dir)
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, b, partCol, keyCol = "doc_id")
-    val confKey = "spark.graft.delete.vectors"
-    val old = s.conf.getOption(confKey)
-    s.conf.set(confKey, "true")
-    try {
-      if (SnapStore.currentVersion(t).contains(1))
-        SnapStore.deletePositions(s, t,
-          pmod(col("doc_id"), lit(21L)) === 0)
-      if (SnapStore.currentVersion(t).contains(2)) {
-        SnapStore.deletePositions(s, t,
-          pmod(col("doc_id"), lit(33L)) === 0)
-        val dvs = SnapStore.currentManifest(t).deleteFiles
-          .filter(d => d.path.endsWith(".dv"))
-        require(dvs.nonEmpty && dvs.map(_.refs.head).distinct.size
-          == dvs.size, "one DV per data file (v3 supersede) required")
-      }
-    } finally old match {
-      case Some(v) => s.conf.set(confKey, v)
-      case None => s.conf.unset(confKey)
+  private[graft] def docsDv(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_dv") { t =>
+      def withDvs(body: => Unit): Unit =
+        GraftSession.withConf(s, "spark.graft.delete.vectors" -> "true")(body)
+      Seq(
+        next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")),
+        next(t)(withDvs(SnapStore.deletePositions(s, t,
+          pmod(col("doc_id"), lit(21L)) === 0))),
+        next(t)(withDvs {
+          SnapStore.deletePositions(s, t,
+            pmod(col("doc_id"), lit(33L)) === 0)
+          val dvs = SnapStore.currentManifest(t).deleteFiles
+            .filter(d => d.path.endsWith(".dv"))
+          require(dvs.nonEmpty && dvs.map(_.refs.head).distinct.size
+            == dvs.size, "one DV per data file (v3 supersede) required")
+        }))
     }
-    mount(s, dir)
-    t
-  }
+  def ensureDocsDv(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsDv(s, dir))
 
   /** Post-DV contents per partition: the oracle recomputes the
     * fixture minus both deleted key sets — a hash match proves the
@@ -3946,13 +3860,12 @@ object Maintenance {
     * layout routes the catalog read through the native batch, whose
     * per-file readers serve Iceberg's `_file`/`_pos`.
     */
-  def ensureDocsMeta(s: SparkSession, dir: String): Path = synchronized {
-    val t = root(dir).resolve("docs_meta")
-    if (SnapStore.currentVersion(t).isEmpty)
-      SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")
-    mount(s, dir)
-    t
-  }
+  private[graft] def docsMeta(s: SparkSession, dir: String): Lifecycle[Path] =
+    lifecycle(dir, "docs_meta") { t => Seq(
+      next(t)(SnapStore.create(s, t, base(s, dir), partCol, keyCol = "doc_id")))
+    }
+  def ensureDocsMeta(s: SparkSession, dir: String): Path =
+    drive(s, dir, docsMeta(s, dir))
 
   /** Per-partition row counts beside DISTINCT `(_file, _pos)` pair
     * counts: the pair is unique per physical row by construction, so

@@ -2157,7 +2157,7 @@ object SnapStore {
           if (candidates.isEmpty) None
           else {
             val scanned = scanWithDeletes(spark, table, from, candidates,
-              from.schema.fieldNames.toSeq :+ "__fn").drop("__fn")
+              from.schema.fieldNames.toSeq)
             Some(scanned.join(keysB,
               kcs.zipWithIndex.map { case (c, i) =>
                 scanned(c) === col(s"__delk$i") }.reduce(_ && _),

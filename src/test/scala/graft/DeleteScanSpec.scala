@@ -87,6 +87,23 @@ class DeleteScanSpec extends SparkSpec {
       m.schema.fieldNames.toSeq :+ "__fn")))
   }
 
+  test("the changelog nets an equality delete without reading _metadata " +
+    "from files no position delete names") {
+    val root = Files.createTempDirectory("graft-clnet")
+    root.toFile.deleteOnExit()
+    val t = root.resolve("t")
+    SnapStore.create(spark, t, docs, "part", keyCol = "doc_id")
+    val eq = pmod(col("doc_id"), lit(7L)) === 3L
+    SnapStore.deleteEquality(spark, t, docs.filter(eq).select("doc_id"),
+      "doc_id")
+    val cl = SnapStore.changelogRead(spark, t, 1, 2)
+    assert(!cl.queryExecution.analyzed.toString.contains("_metadata"))
+    assert(cl.filter(col("_change_type") =!= "DELETE").isEmpty)
+    val netted = cl.select(docs.columns.map(col).toSeq: _*)
+    assert(netted.count() === docs.filter(eq).count())
+    assert(netted.exceptAll(docs.filter(eq)).isEmpty)
+  }
+
   test("no engine source keeps the legacy read route or the dead " +
     "pruning faces") {
     val offenders = engineSourcesMatching(
